@@ -33,8 +33,7 @@ object Sessions {
       // lets DisableUnnecessaryBucketedScan un-bucket any scan whose
       // partitioning no operator consumes — which also forfeits bucket
       // PRUNING, turning an O(one bucket) point lookup back into a
-      // full-table scan. Pinned off (the compaction paths already pin
-      // it off locally for the same reason).
+      // full-table scan. Pinned off.
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       .config("spark.ui.enabled", "false")
 

@@ -570,14 +570,6 @@ object CdcRollup {
         s"cdcRollup batch $batchId: NULL in a pk column — a NULL key " +
           "can never be matched for update/delete; repair the feed")
       val touchedBase = probeRow.getSeq[Int](2).toSet
-      // SMALL-FOLD FAST PATH (r19, measured): the rest of this fold
-      // runs with AQE off when the working set is provably small —
-      // one job per action instead of one per exchange. Policy,
-      // thresholds and rationale: [[FoldTuning]] (job counts on the
-      // 3-fold gate queries dropped 32-39%).
-      val smallFold =
-        FoldTuning.smallFold(spark, probeRow.getLong(0), fs, rootPath)
-      FoldTuning.withAqeOffIf(spark, smallFold) {
       val upserts = net.filter(!col("__cdc_delete")).drop("__cdc_delete")
       val keys = net.select(pkCols.map(col): _*).distinct()
       // old images live ONLY in the delta's touched base buckets
@@ -603,29 +595,29 @@ object CdcRollup {
           .groupBy(groupCols.map(col): _*)
           .agg(sums.head, sums.tail: _*)
           .persist()
+        // build every aux view's signed contribution UP FRONT so ONE
+        // probe job (below) serves the main view's touched-agg set
+        // AND every aux view's — the r18 net-probe collapse extended
+        // to the per-view bucket probes (guide §1.2: each probe was
+        // a full driver round-trip; N views now pay one).
+        val auxPre = auxViews.map { case (name, cols) =>
+          val bucketOf = pmod(xxhash64(cols.map(col): _*),
+            lit(nAggBuckets)).cast("int")
+          val aMinus = old.select((cols.map(col) :+
+            lit(-1L).as("__dn")) ++
+            valueCols.zip(dts).map { case (v, d) =>
+              (-col(v).cast(dec)).as(d) }: _*)
+          val aPlus = upserts.select((cols.map(col) :+
+            lit(1L).as("__dn")) ++
+            valueCols.zip(dts).map { case (v, d) =>
+              col(v).cast(dec).as(d) }: _*)
+          val aContrib = aMinus.unionByName(aPlus)
+            .groupBy(cols.map(col): _*)
+            .agg(sums.head, sums.tail: _*)
+            .persist()
+          (name, cols, aContrib, bucketOf)
+        }
         try {
-          // build every aux view's signed contribution UP FRONT so ONE
-          // probe job (below) serves the main view's touched-agg set
-          // AND every aux view's — the r18 net-probe collapse extended
-          // to the per-view bucket probes (guide §1.2: each probe was
-          // a full driver round-trip; N views now pay one).
-          val auxPre = auxViews.map { case (name, cols) =>
-            val bucketOf = pmod(xxhash64(cols.map(col): _*),
-              lit(nAggBuckets)).cast("int")
-            val aMinus = old.select((cols.map(col) :+
-              lit(-1L).as("__dn")) ++
-              valueCols.zip(dts).map { case (v, d) =>
-                (-col(v).cast(dec)).as(d) }: _*)
-            val aPlus = upserts.select((cols.map(col) :+
-              lit(1L).as("__dn")) ++
-              valueCols.zip(dts).map { case (v, d) =>
-                col(v).cast(dec).as(d) }: _*)
-            val aContrib = aMinus.unionByName(aPlus)
-              .groupBy(cols.map(col): _*)
-              .agg(sums.head, sums.tail: _*)
-              .persist()
-            (name, cols, aContrib, bucketOf)
-          }
           // the main view rides tag NULL (an aux name is never NULL);
           // the one collect also materializes every persisted contrib
           val touchedRows = labeled(spark,
@@ -825,8 +817,7 @@ object CdcRollup {
               else Seq(s"log_aux_$name" -> groupChangeLog(oldA,
                 finalA.filter(col("n") > 0), aContrib, cols,
                 Seq("n") ++ agg ++ aMins ++ aMaxs, batchId))
-            (aContrib,
-              Seq((s"aux_$name", finalA.filter(col("n") > 0), bucketOf,
+            (Seq((s"aux_$name", finalA.filter(col("n") > 0), bucketOf,
                 touchedA)) ++ grpA,
               auxLog)
           }
@@ -877,23 +868,22 @@ object CdcRollup {
                 withMinMax.filter(col("n") > 0), contrib, groupCols,
                 Seq("n") ++ agg ++ mins ++ maxs, batchId)
               Seq("log" -> baseLog, "log_view" -> viewLog) ++
-                auxLayers.flatMap(_._3)
+                auxLayers.flatMap(_._2)
             }
-          try {
-            stageAndCommit(fs, rootPath, batchId,
-              Seq(("base", newBase, baseBucket, touchedBase),
-                // a fully-retracted group drops out of the view
-                ("agg", withMinMax.filter(col("n") > 0), aggBucket,
-                  touchedAgg)) ++ grpLayer ++ auxLayers.flatMap(_._2),
-              // retention mode: superseded versions ARE the snapshot
-              // history — the fold keeps them; reapRetainedVersions
-              // owns their (floor-advancing) deletion
-              retain = readAsofFloor(fs, rootPath).isDefined,
-              changeLogs = changeLogs)
-          } finally { auxLayers.foreach(_._1.unpersist()); () }
-        } finally { contrib.unpersist(); () }
+          stageAndCommit(fs, rootPath, batchId,
+            Seq(("base", newBase, baseBucket, touchedBase),
+              // a fully-retracted group drops out of the view
+              ("agg", withMinMax.filter(col("n") > 0), aggBucket,
+                touchedAgg)) ++ grpLayer ++ auxLayers.flatMap(_._1),
+            // retention mode: superseded versions ARE the snapshot
+            // history — the fold keeps them; reapRetainedVersions
+            // owns their (floor-advancing) deletion
+            retain = readAsofFloor(fs, rootPath).isDefined,
+            changeLogs = changeLogs)
+        } finally {
+          (contrib +: auxPre.map(_._3)).foreach(_.unpersist()); ()
+        }
       } finally { old.unpersist(); () }
-      } // withAqeOffIf
     } finally { net.unpersist(); () }
     true
   }

@@ -20,14 +20,13 @@ import org.apache.spark.sql.functions._
   * each other.
   *
   * Scale shape: the retained snapshots are the big thing. The
-  * persisted path stores both snapshots BUCKETED on the join key
-  * ([[graft.sources.BucketedStore]]), so each delta fold shuffles ONLY
-  * the delta into the bucket layout — the snapshot side of every
-  * delta join is a zero-exchange bucketed scan, and appended deltas
-  * land in the same layout (one slim write per fold). The in-memory
-  * form below carries the same algebra for composition inside one
-  * plan (and for the driver gate, which needs a deterministic fresh
-  * fold).
+  * persisted path ([[foldBatchDirs]]) stores both snapshots in
+  * per-bucket directories hashed on the join key, so each delta fold
+  * reads only the snapshot leaves of the delta's own buckets, and
+  * appended deltas land in the same layout (one slim write per fold).
+  * The in-memory form below carries the same algebra for composition
+  * inside one plan (and for the declared queries `graft.Verify` checks,
+  * which need a deterministic fresh fold).
   *
   * Contract mirrors IncrementalAgg: batches are EXACTLY-ONCE (replay
   * duplicates view rows — pair with an idempotent landing zone or the
@@ -70,55 +69,13 @@ object JoinView {
       st.view.unionByName(dv))
   }
 
-  // ---- persisted, bucketed form -------------------------------------
-
-  /** Table names for one persisted view. Bucketing lives in the
-    * metastore, so these are TABLE identifiers, not paths. */
-  final case class Tables(a: String, b: String, view: String)
-
-  /** Create the three bucketed tables from initial snapshots. All
-    * three share the key's bucket layout: every later delta fold
-    * scans the snapshots with ZERO exchange on their side. */
-  def initBucketed(a: DataFrame, b: DataFrame, key: String,
-                   tables: Tables, nBuckets: Int): Unit = {
-    checkKeys(a, b, key)
-    graft.sources.BucketedStore.writeBucketed(a, tables.a, Seq(key), nBuckets)
-    graft.sources.BucketedStore.writeBucketed(b, tables.b, Seq(key), nBuckets)
-    val spark = a.sparkSession
-    graft.sources.BucketedStore.writeBucketed(
-      graft.sources.BucketedStore.read(spark, tables.a)
-        .join(graft.sources.BucketedStore.read(spark, tables.b), key),
-      tables.view, Seq(key), nBuckets)
-  }
-
-  /** Fold one insert batch into the persisted view: two delta-sized
-    * joins against bucketed snapshots (snapshot side exchange-free),
-    * then three slim APPENDS in the same bucket layout. History is
-    * scanned once per fold and never re-joined against itself. */
-  def applyDeltaBucketed(spark: SparkSession, deltaA: DataFrame,
-                         deltaB: DataFrame, key: String, tables: Tables,
-                         nBuckets: Int): Unit = {
-    checkKeys(deltaA, deltaB, key)
-    val bs = graft.sources.BucketedStore
-    // the deltas feed two joins and an append each — cache the (small)
-    // delta, not the history
-    val da = deltaA.persist(); val db = deltaB.persist()
-    try {
-      val dv = da.join(bs.read(spark, tables.b).unionByName(db), key)
-        .unionByName(bs.read(spark, tables.a).join(db, key))
-      bs.appendBucketed(dv, tables.view, Seq(key), nBuckets)
-      bs.appendBucketed(da, tables.a, Seq(key), nBuckets)
-      bs.appendBucketed(db, tables.b, Seq(key), nBuckets)
-    } finally { da.unpersist(); db.unpersist() }
-  }
-
   // ---- persisted, directory form (batch-marker exactly-once) --------
 
   /** Fold one delta batch into DIRECTORY-persisted state under `root`
-    * with exactly-once-per-`batchId` semantics — the metastore-free
-    * sibling of [[applyDeltaBucketed]], shared by the `maintainView`
-    * CLI action and the streaming sink. Returns false (and does
-    * nothing) when `batchId` is already committed.
+    * with exactly-once-per-`batchId` semantics — the persisted form of
+    * [[applyDelta]], shared by the `maintainView` CLI action and the
+    * streaming sink. Returns false (and does nothing) when `batchId` is
+    * already committed.
     *
     * State layout: `_CONFIG` (kind|key|colsA|colsB|nBuckets
     * layout+schema pin), `_APPLIED_<id>` batch markers (created
@@ -217,45 +174,37 @@ object JoinView {
     try {
       // ONE probe job serves BOTH deltas' distinct buckets (≤ nBuckets
       // values per side, safe to collect — they drive the
-      // snapshot-side leaf pruning) AND both row counts (they drive
-      // the small-fold policy below); the same job materializes both
+      // snapshot-side leaf pruning); the same job materializes both
       // persisted deltas. Two serial per-side probes collapsed — the
       // CdcRollup r18/r19 probe discipline.
       val probeRows = da.select(lit("a").as("__side"),
           bucketOf.as("__bucket"))
         .unionByName(db.select(lit("b").as("__side"),
           bucketOf.as("__bucket")))
-        .groupBy("__side", "__bucket").agg(count(lit(1)).as("__n"))
-        .collect()
+        .distinct().collect()
       val touchedA = probeRows.filter(_.getString(0) == "a")
         .map(_.getInt(1)).toSet
       val touchedB = probeRows.filter(_.getString(0) == "b")
         .map(_.getInt(1)).toSet
-      val deltaRows = probeRows.map(_.getLong(2)).sum
       def snapshot(side: String, like: DataFrame,
                    buckets: Set[Int]): DataFrame =
         committedLeafDirs(fs, rootPath, side, Some(buckets), markers) match {
           case Seq() => like.limit(0)
           case dirs  => spark.read.parquet(dirs.map(_.toString): _*)
         }
-      // small folds run AQE-off: one job per action instead of one
-      // per exchange (policy + rationale: [[FoldTuning]])
-      FoldTuning.withAqeOffIf(spark,
-        FoldTuning.smallFold(spark, deltaRows, fs, rootPath)) {
-        // ΔA only matches B rows hashing into ΔA's buckets (and A↔ΔB
-        // symmetrically) — read exactly those leaves
-        val a = snapshot("a", deltaA, touchedB)
-        val b = snapshot("b", deltaB, touchedA)
-        // ΔV = ΔA ⋈ (B ∪ ΔB)  ∪  A ⋈ ΔB (same coverage as applyDelta)
-        val dv = da.join(b.unionByName(db), key)
-          .unionByName(a.join(db, key))
-        // stage (hidden, bucket-partitioned), rename, marker LAST
-        def stage(side: String, df: DataFrame): Unit =
-          df.withColumn("__bucket", bucketOf)
-            .write.mode("overwrite").partitionBy("__bucket")
-            .parquet(new Path(rootPath, s"$side/.staging$batchId").toString)
-        stage("view", dv); stage("a", da); stage("b", db)
-      }
+      // ΔA only matches B rows hashing into ΔA's buckets (and A↔ΔB
+      // symmetrically) — read exactly those leaves
+      val a = snapshot("a", deltaA, touchedB)
+      val b = snapshot("b", deltaB, touchedA)
+      // ΔV = ΔA ⋈ (B ∪ ΔB)  ∪  A ⋈ ΔB (same coverage as applyDelta)
+      val dv = da.join(b.unionByName(db), key)
+        .unionByName(a.join(db, key))
+      // stage (hidden, bucket-partitioned), rename, marker LAST
+      def stage(side: String, df: DataFrame): Unit =
+        df.withColumn("__bucket", bucketOf)
+          .write.mode("overwrite").partitionBy("__bucket")
+          .parquet(new Path(rootPath, s"$side/.staging$batchId").toString)
+      stage("view", dv); stage("a", da); stage("b", db)
     } finally { da.unpersist(); db.unpersist() }
     for (side <- Seq("view", "a", "b")) {
       val from = new Path(rootPath, s"$side/.staging$batchId")

@@ -194,20 +194,18 @@ object Maintenance {
     // one shuffle on the bucket keys: with nTasks == buckets each task
     // holds exactly one bucket (same murmur3 pmod as the bucket spec)
     // → one file per bucket; with more tasks a big bucket's keys
-    // spread, splitting its output near the target size.
-    // autoBucketedScan must be OFF for this read: with it on, the
-    // scan's HashPartitioning lets EnsureRequirements drop the
-    // repartition, and DisableUnnecessaryBucketedScan then un-buckets
-    // the scan — leaving NEITHER the distribution nor the shuffle, so
-    // every read task writes a file per bucket (the exact small-file
-    // pattern this job exists to undo)
-    val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val autoWas = spark.conf.get(autoKey)
-    spark.conf.set(autoKey, "false")
-    try graft.sources.BucketedStore.writeBucketed(
-      spark.table(table).repartition(nTasks, keys.map(col): _*),
+    // spread, splitting its output near the target size. The read
+    // takes exactly the snapshot files by path, so it has no bucket
+    // spec: a bucketed scan's HashPartitioning would let
+    // EnsureRequirements drop the repartition (and then un-bucket the
+    // scan), leaving every read task to write a file per bucket — the
+    // small-file pattern this job exists to undo. It also pins the
+    // rewrite to the files the concurrent-append recheck compares.
+    graft.sources.BucketedStore.writeBucketed(
+      spark.read.schema(meta.schema)
+        .parquet(snapshot.map(_.getPath.toString): _*)
+        .repartition(nTasks, keys.map(col): _*),
       stage, keys, buckets)
-    finally spark.conf.set(autoKey, autoWas)
     // concurrent-append recheck BEFORE the destructive swap: a batch
     // landed after the compaction read would be silently dropped by
     // drop+rename — abort loudly instead and clean our stage up

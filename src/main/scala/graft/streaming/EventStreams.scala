@@ -1186,12 +1186,9 @@ object EventStreams {
       .withColumn("bucket", bucketOf).persist()
     try {
       // the batch's distinct buckets: ≤ nBuckets values, safe to
-      // collect. The SAME probe job also counts the partial's rows —
-      // they drive the small-fold policy below.
-      val probeRows = partial.groupBy("bucket")
-        .agg(count(lit(1)).as("__n")).collect()
-      val touched = probeRows.map(_.getInt(0)).sorted.toSeq
-      val partialRows = probeRows.map(_.getLong(1)).sum
+      // collect
+      val touched = partial.select("bucket").distinct().collect()
+        .map(_.getInt(0)).sorted.toSeq
       if (touched.isEmpty) {
         // an empty fold's change log is an empty (dataless) b<id>
         // dir — present so a committed id > the bound with NO log
@@ -1199,13 +1196,6 @@ object EventStreams {
         if (logOn.isDefined) fs.mkdirs(new Path(root, s"log/b$batchId"))
         advanceLastBatch(); commitLogWitness(); return Nil
       }
-      // small folds run the remaining actions (old-slice merge, log
-      // emission, stage write, history snapshot) AQE-off: one job per
-      // action instead of one per exchange (policy + rationale:
-      // [[graft.operators.FoldTuning]])
-      graft.operators.FoldTuning.withAqeOffIf(spark,
-        graft.operators.FoldTuning.smallFold(spark, partialRows, fs,
-          root)) {
       var pending = touched.filterNot(b =>
         fs.exists(new Path(cur, s"bucket=$b/_APPLIED_$batchId")))
       if (pending.isEmpty) {
@@ -1311,7 +1301,6 @@ object EventStreams {
       commitHistory(touched)
       commitLogWitness()
       recovered.result() ++ pending
-      } // withAqeOffIf
     } finally partial.unpersist()
   }
 

@@ -3,15 +3,16 @@ package graft.tools
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Measurement tool (optimization guide §7.2) for queries whose
-  * interesting plans never reach the FINAL frame's explain: iterative
-  * operators truncate lineage with localCheckpoint and state-building
-  * operators run fold jobs eagerly, so [[PlanDump]] shows only the
-  * read-back tail. This variant registers a QueryExecutionListener and
-  * dumps the formatted plan of EVERY action the query executes
-  * (checkpoint materializations, fold probes, layer writes, the final
-  * sink) to numbered files — the loop-body / fold-job evidence a plan
-  * diff needs.
+/** Measurement tool (optimization guide §7.2): dump the formatted
+  * executed plan of EVERY action a named declared query runs to
+  * numbered files, so plan shapes (Exchange count, join strategy,
+  * PushedFilters/ReadSchema) can be diffed before/after an
+  * optimization without a UI. Iterative operators truncate lineage
+  * with localCheckpoint and state-building operators run fold jobs
+  * eagerly, so the final frame alone shows only the read-back tail;
+  * a QueryExecutionListener catches the checkpoint materializations,
+  * fold probes and layer writes too. The highest-numbered file of a
+  * query is its final frame's plan.
   *
   * Usage: runMain graft.tools.ExecPlanDump <outDir> <query>[,<query>...]
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (defaults match Bench).
@@ -59,7 +60,7 @@ object ExecPlanDump {
       current.set(name)
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       // the listener bus is async — let the tail drain before renaming
-      Thread.sleep(1000)
+      QueryProfile.awaitStable(seq.get())
       current.set("")
       println(s"[execplandump] $name -> ${seq.get()} executed plans")
     }

@@ -68,6 +68,23 @@ object QueryProfile {
     }
   }
 
+  /** The listener buses are async (and private): poll `snap` every
+    * 100 ms until two reads agree (at most 2 s) instead of hoping one
+    * fixed sleep covers the tail. Returns the settled value. */
+  private[graft] def awaitStable[T](snap: => T): T = {
+    var prev = snap
+    var polls = 0
+    var settled = false
+    while (!settled && polls < 20) {
+      Thread.sleep(100)
+      val cur = snap
+      settled = cur == prev
+      prev = cur
+      polls += 1
+    }
+    prev
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: QueryProfile <q1,q2,...> [reps]")
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
@@ -93,19 +110,7 @@ object QueryProfile {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        // listener bus is async (and private); poll until the counts
-        // stabilize instead of hoping one fixed sleep covers the tail
-        var prev = acc.snap()
-        var settled = false
-        var polls = 0
-        while (!settled && polls < 20) {
-          Thread.sleep(100)
-          val cur = acc.snap()
-          settled = cur == prev
-          prev = cur
-          polls += 1
-        }
-        val after = acc.snap()
+        val after = awaitStable(acc.snap())
         println(f"$name%-34s $r%3d  $wall%6.2f  ${after._1 - before._1}%4d " +
           f"${after._2 - before._2}%5d ${after._3 - before._3}%5d " +
           f"${(after._4 - before._4) / 1e3}%6.2f ${after._5 - before._5}%6d")

@@ -2023,4 +2023,29 @@ class CdcRollupSpec extends SparkSpec {
       rows(CdcRollup.readViewLog(spark, root, 0L, Some("by_g2"))
         .orderBy("grp2"))
   }
+
+  test("a fold that fails after persisting its aux contributions " +
+      "releases every persisted frame") {
+    val root = tmpRoot()
+    def afold(id: Long, d: DataFrame): Boolean =
+      CdcRollup.foldBatch(root, id, d, Seq("id"), "seq", "op",
+        Seq("grp"), Seq("v"), 4, 2, auxViews = Seq("byg2" -> Seq("g2")))
+    afold(0L, (1L to 20L).map(i => (i, s"g${i % 3}", s"h${i % 2}",
+      i.toDouble, 1L, "I")).toDF("id", "grp", "g2", "v", "seq", "op")) shouldBe
+      true
+    // corrupt every aux-layer data file: the next fold persists and
+    // probes its aux contribution, then fails reading the aux state
+    val parts = java.nio.file.Files
+      .walk(java.nio.file.Paths.get(root, "aux_byg2")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    parts should not be empty
+    parts.foreach(p => java.nio.file.Files.write(p,
+      "not parquet".getBytes("UTF-8")))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    an[Exception] should be thrownBy afold(1L, Seq(
+      (2L, "g0", "h1", 5.0, 2L, "U"), (21L, "g1", "h0", 1.0, 2L, "I"))
+      .toDF("id", "grp", "g2", "v", "seq", "op"))
+    spark.sparkContext.getPersistentRDDs.keySet shouldBe before
+  }
 }

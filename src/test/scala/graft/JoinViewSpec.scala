@@ -53,36 +53,6 @@ class JoinViewSpec extends SparkSpec {
         a.limit(0), b, "k")
   }
 
-  test("bucketed persisted fold equals the one-shot join, snapshot side exchange-free") {
-    val tbls = JoinView.Tables("jv_a", "jv_b", "jv_view")
-    Seq(tbls.a, tbls.b, tbls.view).foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t"))
-    JoinView.initBucketed(aRows(1 to 10), bRows(5 to 15), "k", tbls,
-      nBuckets = 4)
-    JoinView.applyDeltaBucketed(spark, aRows(11 to 20), bRows(16 to 18),
-      "k", tbls, nBuckets = 4)
-    JoinView.applyDeltaBucketed(spark, aRows(21 to 25),
-      bRows(5 until 5), "k", tbls, nBuckets = 4)
-    val got = graft.sources.BucketedStore.read(spark, tbls.view)
-    canon(got) shouldBe canon(aRows(1 to 25).join(bRows(5 to 18), "k"))
-
-    // the NEXT fold's snapshot-side join must not exchange the
-    // bucketed snapshot: with broadcast off, (delta ⋈ bucketed b)
-    // shuffles EXACTLY the delta side into the bucket layout
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val delta = aRows(26 to 27)
-      val plan = delta.join(
-          graft.sources.BucketedStore.read(spark, tbls.b), "k")
-        .queryExecution.executedPlan.toString
-      "Exchange hashpartitioning".r.findAllIn(plan).size shouldBe 1
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-    Seq(tbls.a, tbls.b, tbls.view).foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
   test("directory fold: bucket-pruned layout — a one-key delta writes " +
       "one bucket leaf; layout change refused; equals one-shot") {
     import spark.implicits._

@@ -59,6 +59,38 @@ class MaintenanceSpec extends SparkSpec {
     } finally spark.sql(s"DROP TABLE IF EXISTS $name")
   }
 
+  test("compactBucketed leaves the session conf unchanged and still " +
+      "writes one file per bucket with auto bucketed scan on") {
+    val name = "graft_cb_conf"
+    val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    val autoWas = spark.conf.get(autoKey)
+    spark.conf.set(autoKey, "true")
+    try {
+      graft.sources.BucketedStore.writeBucketed(
+        (0L until 200L).map(i => (i, i % 11)).toDF("k", "v"), name,
+        Seq("k"), 4)
+      (1 to 3).foreach { b =>
+        graft.sources.BucketedStore.appendBucketed(
+          (0L until 30L).map(i => (1000L * b + i, i)).toDF("k", "v"),
+          name, Seq("k"), 4)
+      }
+      val before = rows(spark.table(name).orderBy("k"))
+      val conf = spark.conf.getAll
+      Maintenance.compactBucketed(spark, name) shouldBe 4
+      spark.conf.getAll shouldBe conf
+      val loc = new java.io.File(java.net.URI.create(
+        spark.sessionState.catalog.getTableMetadata(
+          spark.sessionState.sqlParser.parseTableIdentifier(name))
+          .location.toString))
+      Option(loc.listFiles()).toSeq.flatten
+        .count(_.getName.endsWith(".parquet")) shouldBe 4
+      rows(spark.table(name).orderBy("k")) shouldBe before
+    } finally {
+      spark.conf.set(autoKey, autoWas)
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+    }
+  }
+
   test("compactBucketed accretion gate: below-threshold table is left untouched") {
     val name = "graft_cb_gate"
     try {
