@@ -79,70 +79,67 @@ final class Engine(spark: SparkSession, sink: TableSink) {
     // Two-phase: the clean-load path costs one codegen'd exists-probe
     // scan; the per-line location pass runs only when an offender exists.
     val staged = CsvIngest.castAndProjectStrict(raw, table, header = hasHeader)
-    if (table.incremental) {
-      // O3: staging → (create target if missing) → upsert → drop staging.
-      // The staging table materializes implicitly as `staged`'s plan; the
-      // merge is one distributed dataflow, no temp DDL needed.
-      val merged =
-        if (sink.tableExists(table.dbName)) {
-          val target = sink.read(table.dbName)
-          // Align ONLY timestamp flavors to the stored target: a config
-          // re-spelling 'timestamp' as 'timestamp without timezone'
-          // maps to NTZ while the stored table is LTZ (equivalent under
-          // the UTC pin) — cast so the merge union doesn't mix flavors.
-          // Anything else (added/removed columns, genuine type changes)
-          // passes through so Load.upsert fails LOUDLY, like the
-          // reference's column-mismatch error — a blanket cast to the
-          // target schema would silently drop new columns or null out
-          // incompatible values.
-          import org.apache.spark.sql.functions.col
-          import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-          val tsFlavors: Set[org.apache.spark.sql.types.DataType] =
-            Set(TimestampType, TimestampNTZType)
-          // keyed lowercase: JDBC catalogs that fold identifiers to
-          // uppercase (Derby, Oracle) must still match the staged names
-          val targetTypes = target.schema.fields
-            .map(f => f.name.toLowerCase -> f.dataType).toMap
-          val aligned = staged.schema.fields.foldLeft(staged) { (df, f) =>
-            targetTypes.get(f.name.toLowerCase) match {
-              case Some(tt) if tt != f.dataType &&
-                  tsFlavors(tt) && tsFlavors(f.dataType) =>
-                val q = "`" + f.name.replace("`", "``") + "`"
-                df.withColumn(f.name, col(q).cast(tt))
-              case _ => df
+    if (table.incremental && sink.tableExists(table.dbName)) {
+      // O3: stage-wins PK merge into the existing target. The sink owns
+      // where it runs: JdbcSink merges in the database (only the delta
+      // travels), the default merges in Spark and stages+swaps — the
+      // target frame below then feeds that plan lazily.
+      val target = sink.read(table.dbName)
+      // Align ONLY timestamp flavors to the stored target: a config
+      // re-spelling 'timestamp' as 'timestamp without timezone'
+      // maps to NTZ while the stored table is LTZ (equivalent under
+      // the UTC pin) — cast so the merge union doesn't mix flavors.
+      // Anything else (added/removed columns, genuine type changes)
+      // passes through so Load.upsert fails LOUDLY, like the
+      // reference's column-mismatch error — a blanket cast to the
+      // target schema would silently drop new columns or null out
+      // incompatible values.
+      import org.apache.spark.sql.functions.col
+      import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+      val tsFlavors: Set[org.apache.spark.sql.types.DataType] =
+        Set(TimestampType, TimestampNTZType)
+      // keyed lowercase: JDBC catalogs that fold identifiers to
+      // uppercase (Derby, Oracle) must still match the staged names
+      val targetTypes = target.schema.fields
+        .map(f => f.name.toLowerCase -> f.dataType).toMap
+      val aligned = staged.schema.fields.foldLeft(staged) { (df, f) =>
+        targetTypes.get(f.name.toLowerCase) match {
+          case Some(tt) if tt != f.dataType &&
+              tsFlavors(tt) && tsFlavors(f.dataType) =>
+            val q = "`" + f.name.replace("`", "``") + "`"
+            df.withColumn(f.name, col(q).cast(tt))
+          case _ => df
+        }
+      }
+      // Add-nullable-column evolution (extension; flag-gated, see
+      // TableConfig.allowAddColumns — default keeps reference
+      // parity: ANY drift fails loudly in the merge union).
+      // Only DECLARED-nullable additions are filled: NULL-filling
+      // a NOT NULL column would manufacture history rows that
+      // violate the declared constraint.
+      val evolved =
+        if (table.allowAddColumns) {
+          // same diff definition as the fill itself (Load
+          // .addedColumns) — guard and fill can never disagree on
+          // what counts as an added column
+          val added = Load.addedColumns(target, aligned)
+          val spec = table.activeItems
+            .map(c => c.dbName.toLowerCase -> c).toMap
+          added.filter(f =>
+              spec.get(f.name.toLowerCase).exists(!_.nullable))
+            .foreach { f =>
+              throw new UserException(
+                s"Cannot add NOT NULL column '${f.name}' to existing " +
+                  s"table '${table.dbName}': existing rows have no " +
+                  "value for it")
             }
-          }
-          // Add-nullable-column evolution (extension; flag-gated, see
-          // TableConfig.allowAddColumns — default keeps reference
-          // parity: ANY drift fails loudly in the merge union below).
-          // Only DECLARED-nullable additions are filled: NULL-filling
-          // a NOT NULL column would manufacture history rows that
-          // violate the declared constraint.
-          val evolved =
-            if (table.allowAddColumns) {
-              // same diff definition as the fill itself (Load
-              // .addedColumns) — guard and fill can never disagree on
-              // what counts as an added column
-              val added = Load.addedColumns(target, aligned)
-              val spec = table.activeItems
-                .map(c => c.dbName.toLowerCase -> c).toMap
-              added.filter(f =>
-                  spec.get(f.name.toLowerCase).exists(!_.nullable))
-                .foreach { f =>
-                  throw new UserException(
-                    s"Cannot add NOT NULL column '${f.name}' to existing " +
-                      s"table '${table.dbName}': existing rows have no " +
-                      "value for it")
-                }
-              Load.withStageColumns(target, aligned)
-            } else target
-          Load.upsert(evolved, aligned, table.primaryKey)
-        } else staged
-      // sink.overwrite stages-then-swaps, so the plan can read the
-      // current target while its replacement materializes.
-      Retry.withRetry(3)(sink.overwrite(merged, table.dbName))
+          Load.withStageColumns(target, aligned)
+        } else target
+      Retry.withRetry(3)(
+        sink.upsert(evolved, aligned, table.primaryKey, table.dbName))
     } else {
-      // O2: full load = drop + create + copy ≡ atomic overwrite.
+      // O2: full load = drop + create + copy ≡ atomic overwrite; an
+      // incremental load into a missing target creates it the same way.
       Retry.withRetry(3)(sink.overwrite(staged, table.dbName))
     }
     true
@@ -387,6 +384,9 @@ object Retry {
       try return f
       catch {
         case e: UserException => throw e // user errors are not transient
+        // neither are plan errors (e.g. a merge union over drifted
+        // columns): re-analysing the same plan fails the same way
+        case e: org.apache.spark.sql.AnalysisException => throw e
         case e: InterruptedException =>
           // cancellation, not a transient failure: re-executing the
           // body would resurrect a load the engine just cancelled

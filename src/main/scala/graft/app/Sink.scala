@@ -105,6 +105,15 @@ trait TableSink {
     * atomic overwrite — reference: RedshiftApplication.php:131-139). */
   def overwrite(df: DataFrame, name: String): Unit
 
+  /** Stage-wins primary-key merge of `delta` into the EXISTING table
+    * `name` (O3 — reference: Writer/Redshift.php:155-209). `target` is
+    * that table as the engine read it, already aligned to the delta
+    * (timestamp flavors, `allowAddColumns` fill). The default merges in
+    * Spark and overwrites; a sink that can merge in place overrides it. */
+  def upsert(target: DataFrame, delta: DataFrame, pk: Seq[String],
+             name: String): Unit =
+    overwrite(graft.operators.Load.upsert(target, delta, pk), name)
+
   /** List destination tables (reference getTablesInfo surface,
     * Writer/Redshift.php:295-303 — unimplemented there; real here). */
   def listTables(): Seq[String]
@@ -186,6 +195,9 @@ final class ParquetSink(spark: SparkSession, baseDir: String) extends TableSink 
   * the current target lazily, so truncating the target before the
   * write job pulls its rows would feed the merge an empty input.
   * The swap (drop old + rename stage) runs on one JDBC connection.
+  * Incremental loads ([[upsert]]) ship only the delta to a stage and
+  * merge inside the database; the Spark merge above remains their
+  * fallback for schema drift.
   *
   * `catalogSql` / `renameSql` default to the Redshift/Postgres
   * dialect; other engines (e.g. embedded Derby in the integration
@@ -535,12 +547,7 @@ final class JdbcSink(spark: SparkSession, url: String,
   }
 
   def overwrite(df: DataFrame, name: String): Unit = guarded {
-    val stage = s"${name}_temp_${java.util.UUID.randomUUID().toString.take(8)}"
-    props.filterNot(kv => sinkOnlyKeys(kv._1)).foldLeft(
-      df.write.format("jdbc")
-        .option("url", url).option("dbtable", stage)) {
-      case (w, (k, v)) => w.option(k, v)
-    }.mode("errorifexists").save()
+    val stage = writeStage(df, name)
     // same shape = identical column names AND DDL-level types: a type
     // change (e.g. a widened varchar on a full load) must take the
     // drop+rename path so the new DDL lands — DELETE+INSERT into the
@@ -551,10 +558,8 @@ final class JdbcSink(spark: SparkSession, url: String,
     // externally created target into the DDL-preserving branch.
     val sameShape = tableExists(name) && {
       val conn = connect()
-      try {
-        val t = ddlShape(conn, name)
-        t.nonEmpty && t == ddlShape(conn, stage)
-      } finally conn.close()
+      try sameDdl(ddlShape(conn, name), ddlShape(conn, stage))
+      finally conn.close()
     }
     if (sameShape) {
       // DDL-preserving transactional replace: the target keeps its
@@ -565,18 +570,8 @@ final class JdbcSink(spark: SparkSession, url: String,
       // same rows again.
       SwapGuard(s"replace failed for table '$name' after retries " +
           s"(staged data preserved in table $stage)", scrub) {
-        val conn = connect()
-        try {
-          conn.setAutoCommit(false)
-          val st = conn.createStatement()
-          try {
-            st.execute(s"DELETE FROM $name")
-            st.execute(s"INSERT INTO $name SELECT * FROM $stage")
-            conn.commit()
-          } catch {
-            case e: Throwable => conn.rollback(); throw e
-          } finally st.close()
-        } finally conn.close()
+        inTransaction(s"DELETE FROM $name",
+          s"INSERT INTO $name SELECT * FROM $stage")
       }
       dropQuietly(stage)
     } else {
@@ -607,9 +602,125 @@ final class JdbcSink(spark: SparkSession, url: String,
     }
   }
 
-  def listTables(): Seq[String] =
-    guarded(reader.option("query", catalogSql)
-      .load().collect().map(_.getString(0)).sorted.toSeq)
+  /** Stage-wins PK merge INSIDE the database, the reference's
+    * incremental path (Writer/Redshift.php:155-209): only `delta` is
+    * shipped, to a fresh stage, and one transaction runs
+    *   DELETE FROM t WHERE EXISTS (SELECT 1 FROM stage WHERE keys match)
+    *   INSERT INTO t SELECT * FROM stage
+    * — [[graft.operators.Load.upsert]]'s algebra, stage ∪ (target ▷ₚₖ
+    * stage), edge cases included: duplicate staged keys all land and
+    * NULL keys never match. (SQL MERGE would reject duplicate source
+    * keys.) Atomic and idempotent like [[overwrite]]'s DDL-preserving
+    * replace: a replayed commit deletes and re-inserts the same rows.
+    *
+    * A stage whose DDL shape differs from the target's (type drift,
+    * added or removed columns), a key column the target lacks, or a key
+    * the database may refuse to compare (LOBs) takes the default Spark
+    * merge instead, so drift keeps its drop+rename or loud-failure
+    * outcome. */
+  override def upsert(target: DataFrame, delta: DataFrame, pk: Seq[String],
+                      name: String): Unit =
+    if (!mergeInPlace(delta, pk, name)) super.upsert(target, delta, pk, name)
+
+  /** The in-database merge; false (stage dropped, target untouched)
+    * when it does not apply. */
+  private def mergeInPlace(delta: DataFrame, pk: Seq[String],
+                           name: String): Boolean = guarded {
+    val stage = writeStage(delta, name)
+    // key columns by each table's CATALOG spelling (a target created
+    // with unquoted names reads back upper-cased in Derby/Oracle)
+    val keys: Option[Seq[(String, String)]] =
+      try {
+        val conn = connect()
+        try {
+          val t = ddlShape(conn, name)
+          val s = ddlShape(conn, stage)
+          if (!sameDdl(t, s)) None
+          else {
+            val byName = t.zip(s).map { case (tc, sc) =>
+              tc.name.toLowerCase -> (tc, sc) }.toMap
+            val matched = pk.flatMap(k => byName.get(k.toLowerCase))
+            if (matched.size == pk.size &&
+                matched.forall { case (tc, _) => !unkeyableJdbcTypes(tc.jdbcType) })
+              Some(matched.map { case (tc, sc) => (tc.name, sc.name) })
+            else None
+          }
+        } finally conn.close()
+      } catch { case e: Throwable => dropQuietly(stage); throw e }
+    keys match {
+      case None =>
+        dropQuietly(stage)
+        false
+      case Some(cols) =>
+        val on = cols.map { case (tc, sc) =>
+          s"$stage.${quoteId(sc)} = $name.${quoteId(tc)}" }
+        val delete =
+          if (on.isEmpty) Nil // no key: the merge is an append
+          else Seq(s"DELETE FROM $name WHERE EXISTS " +
+            s"(SELECT 1 FROM $stage WHERE ${on.mkString(" AND ")})")
+        SwapGuard(s"merge failed for table '$name' after retries " +
+            s"(staged data preserved in table $stage)", scrub) {
+          inTransaction(delete :+ s"INSERT INTO $name SELECT * FROM $stage": _*)
+        }
+        dropQuietly(stage)
+        true
+    }
+  }
+
+  /** Column types a database may refuse to compare with `=` (LOB and
+    * LONG types — Derby stores Spark's unbounded strings as CLOB): keys
+    * of these types take the Spark merge. */
+  private val unkeyableJdbcTypes: Set[Int] = {
+    import java.sql.Types._
+    Set(CLOB, NCLOB, BLOB, LONGVARCHAR, LONGNVARCHAR, LONGVARBINARY)
+  }
+
+  /** Write `df` to a fresh `<name>_temp_<hex8>` table. Spark creates the
+    * table before its tasks run, so a failed write drops it here —
+    * nothing depends on it yet, and each outer retry would otherwise
+    * strand one. */
+  private def writeStage(df: DataFrame, name: String): String = {
+    val stage = s"${name}_temp_${java.util.UUID.randomUUID().toString.take(8)}"
+    try props.filterNot(kv => sinkOnlyKeys(kv._1)).foldLeft(
+      df.write.format("jdbc")
+        .option("url", url).option("dbtable", stage)) {
+      case (w, (k, v)) => w.option(k, v)
+    }.mode("errorifexists").save()
+    catch { case e: Throwable => dropQuietly(stage); throw e }
+    stage
+  }
+
+  /** Run `stmts` in ONE transaction on one connection; any failure
+    * rolls all of them back. */
+  private def inTransaction(stmts: String*): Unit = {
+    val conn = connect()
+    try {
+      conn.setAutoCommit(false)
+      val st = conn.createStatement()
+      try {
+        stmts.foreach(st.execute)
+        conn.commit()
+      } catch {
+        case e: Throwable => conn.rollback(); throw e
+      } finally st.close()
+    } finally conn.close()
+  }
+
+  /** Catalog listing over one driver-side connection — no Spark job. */
+  def listTables(): Seq[String] = guarded {
+    val conn = connect()
+    try {
+      val st = conn.createStatement()
+      try {
+        val rs = st.executeQuery(catalogSql)
+        try {
+          val buf = Seq.newBuilder[String]
+          while (rs.next()) buf += rs.getString(1)
+          buf.result().sorted
+        } finally rs.close()
+      } finally st.close()
+    } finally conn.close()
+  }
 
   /** Drop stranded `<name>_temp_<hex8>` staging tables (a write that
     * failed mid-job leaves one per attempt; nothing else cleans JDBC
@@ -625,14 +736,27 @@ final class JdbcSink(spark: SparkSession, url: String,
       .filter(dropQuietly)
   }
 
-  /** DDL-level column shape via JDBC metadata, in ordinal order:
-    * (lowercased name, TYPE_NAME, COLUMN_SIZE, DECIMAL_DIGITS).
+  /** One column as the catalog reports it: `name` in the catalog's own
+    * spelling, `jdbcType` the java.sql.Types code. */
+  private case class DdlColumn(name: String, jdbcType: Int, typeName: String,
+                               size: Int, digits: Int) {
+    def shape: (String, String, Int, Int) =
+      (name.toLowerCase, typeName, size, digits)
+  }
+
+  /** Same DDL shape: identical lowercased names, TYPE_NAME, COLUMN_SIZE
+    * and DECIMAL_DIGITS, in ordinal order; a missing table never
+    * matches. */
+  private def sameDdl(target: Seq[DdlColumn], stage: Seq[DdlColumn]): Boolean =
+    target.nonEmpty && target.map(_.shape) == stage.map(_.shape)
+
+  /** DDL-level columns via JDBC metadata, in ordinal order.
     * Identifier-case variants are probed because catalogs fold
     * unquoted names (Derby/Oracle upper, Postgres lower); `_` in
     * table names is escaped — it is a single-char WILDCARD in
     * `getColumns` patterns, and every staging name contains it. */
   private def ddlShape(conn: java.sql.Connection,
-                       table: String): Seq[(String, String, Int, Int)] = {
+                       table: String): Seq[DdlColumn] = {
     val md = conn.getMetaData
     val escaped = metaEscaper(md)
     // schema scoping + case folding via metaScope/scopeVariants, same
@@ -640,14 +764,14 @@ final class JdbcSink(spark: SparkSession, url: String,
     // schema; a same-named table in another schema must not
     // contribute rows and corrupt the comparison)
     def cols(c: Option[String], s: Option[String],
-             t: String): Seq[(String, String, Int, Int)] = {
+             t: String): Seq[DdlColumn] = {
       val rs = md.getColumns(c.orNull, s.map(escaped).orNull, escaped(t), null)
       try {
-        val buf = Seq.newBuilder[(String, String, Int, Int)]
+        val buf = Seq.newBuilder[DdlColumn]
         while (rs.next())
-          buf += ((rs.getString("COLUMN_NAME").toLowerCase,
+          buf += DdlColumn(rs.getString("COLUMN_NAME"), rs.getInt("DATA_TYPE"),
             rs.getString("TYPE_NAME"), rs.getInt("COLUMN_SIZE"),
-            rs.getInt("DECIMAL_DIGITS")))
+            rs.getInt("DECIMAL_DIGITS"))
         buf.result()
       } finally rs.close()
     }

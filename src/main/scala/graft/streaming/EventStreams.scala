@@ -239,14 +239,16 @@ object EventStreams {
     * otherwise the batch passes through like the reference (which does
     * not dedup).
     *
-    * Scale: each micro-batch does one PK anti-join (stage side is
-    * micro-batch-sized → broadcast) against the current target; the
-    * sink's staging+swap write keeps the read-while-replace safe.
-    * Checkpointing makes the merge effectively-once per batch id.
-    * NOTE the sink-generic shape rewrites the WHOLE target per
-    * micro-batch — O(|target|) per batch. For large parquet targets
-    * use [[streamingUpsertPartitioned]], which rewrites only the
-    * partitions a batch touches.
+    * Scale: the merge is the sink's [[graft.app.TableSink.upsert]].
+    * A JDBC sink ships only the micro-batch and merges in the
+    * database. The default does one PK anti-join (stage side is
+    * micro-batch-sized → broadcast) against the current target, and
+    * the sink's staging+swap write keeps the read-while-replace safe;
+    * that rewrites the WHOLE target per micro-batch — O(|target|) per
+    * batch. For large parquet targets use
+    * [[streamingUpsertPartitioned]], which rewrites only the
+    * partitions a batch touches. Checkpointing makes the merge
+    * effectively-once per batch id.
     */
   def streamingUpsert(stage: DataFrame, sink: graft.app.TableSink,
                       tableName: String, pk: Seq[String],
@@ -269,12 +271,9 @@ object EventStreams {
           if (pk.nonEmpty && orderCols.nonEmpty)
             graft.operators.Load.dedupLastWins(batch.toDF(), pk, orderCols)
           else batch.toDF()
-        val merged =
-          if (sink.tableExists(tableName))
-            graft.operators.Load.upsert(sink.read(tableName), deduped, pk)
-          else deduped
-        sink.overwrite(merged, tableName)
-        ()
+        if (sink.tableExists(tableName))
+          sink.upsert(sink.read(tableName), deduped, pk, tableName)
+        else sink.overwrite(deduped, tableName)
       }
       .start()
 
