@@ -10,11 +10,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Per-table plan (run action):
   *   filter export=false (P3) → guard empty schema (P4) → read CSV →
-  *   order-sensitive column check (P5) → cast/project (P1/P2/P6) →
-  *   full overwrite (O2) or stage-wins PK merge (O3/J3).
+  *   order-sensitive column check (P5) → checked cast/project
+  *   (P1/P2/P6) → full overwrite (O2) or stage-wins PK merge (O3/J3).
   *
   * Every sink write goes through [[Retry.withRetry]] (O4: ≤3 tries,
-  * quadratic backoff — reference: Writer/Redshift.php:226-260).
+  * quadratic backoff — reference: Writer/Redshift.php:226-260; strict
+  * violations and deterministic SQL failures are not retried).
   */
 final class Engine(spark: SparkSession, sink: TableSink) {
 
@@ -76,15 +77,20 @@ final class Engine(spark: SparkSession, sink: TableSink) {
     // (or a NULL in a NOT NULL column) aborts the load as a UserException
     // "Column 'x', line N: …" — the reference surfaces stl_load_errors
     // this way and its e2e asserts it (tests/Keboola/FunctionalTest.php:74-78).
-    // Two-phase: the clean-load path costs one codegen'd exists-probe
-    // scan; the per-line location pass runs only when an offender exists.
-    val staged = CsvIngest.castAndProjectStrict(raw, table, header = hasHeader)
+    // Like the reference's COPY, the check rides inside the staging
+    // write: the staged frame raises on the first offending row, and only
+    // then does the per-line location pass run, inside the retried body
+    // — its UserException is never retried and the target is never
+    // touched. A clean load scans its input once.
+    val staged = CsvIngest.castAndProjectChecked(raw, table)
+    def load(write: => Unit): Unit =
+      Retry.withRetry(3)(CsvIngest.reportingOffences(raw, table, hasHeader)(write))
     if (table.incremental && sink.tableExists(table.dbName)) {
       // O3: stage-wins PK merge into the existing target. The sink owns
       // where it runs: JdbcSink merges in the database (only the delta
-      // travels), the default merges in Spark and stages+swaps — the
-      // target frame below then feeds that plan lazily.
-      val target = sink.read(table.dbName)
+      // travels, the target is never read), the default merges in Spark
+      // and stages+swaps — the target frame below then feeds that plan.
+      val targetSchema = sink.schema(table.dbName)
       // Align ONLY timestamp flavors to the stored target: a config
       // re-spelling 'timestamp' as 'timestamp without timezone'
       // maps to NTZ while the stored table is LTZ (equivalent under
@@ -100,7 +106,7 @@ final class Engine(spark: SparkSession, sink: TableSink) {
         Set(TimestampType, TimestampNTZType)
       // keyed lowercase: JDBC catalogs that fold identifiers to
       // uppercase (Derby, Oracle) must still match the staged names
-      val targetTypes = target.schema.fields
+      val targetTypes = targetSchema.fields
         .map(f => f.name.toLowerCase -> f.dataType).toMap
       val aligned = staged.schema.fields.foldLeft(staged) { (df, f) =>
         targetTypes.get(f.name.toLowerCase) match {
@@ -117,30 +123,31 @@ final class Engine(spark: SparkSession, sink: TableSink) {
       // Only DECLARED-nullable additions are filled: NULL-filling
       // a NOT NULL column would manufacture history rows that
       // violate the declared constraint.
-      val evolved =
-        if (table.allowAddColumns) {
-          // same diff definition as the fill itself (Load
-          // .addedColumns) — guard and fill can never disagree on
-          // what counts as an added column
-          val added = Load.addedColumns(target, aligned)
-          val spec = table.activeItems
-            .map(c => c.dbName.toLowerCase -> c).toMap
-          added.filter(f =>
-              spec.get(f.name.toLowerCase).exists(!_.nullable))
-            .foreach { f =>
-              throw new UserException(
-                s"Cannot add NOT NULL column '${f.name}' to existing " +
-                  s"table '${table.dbName}': existing rows have no " +
-                  "value for it")
-            }
-          Load.withStageColumns(target, aligned)
-        } else target
-      Retry.withRetry(3)(
-        sink.upsert(evolved, aligned, table.primaryKey, table.dbName))
+      if (table.allowAddColumns) {
+        // same diff definition as the fill itself (Load
+        // .addedColumns) — guard and fill can never disagree on
+        // what counts as an added column
+        val spec = table.activeItems
+          .map(c => c.dbName.toLowerCase -> c).toMap
+        Load.addedColumns(targetSchema, aligned.schema)
+          .filter(f => spec.get(f.name.toLowerCase).exists(!_.nullable))
+          .foreach { f =>
+            throw new UserException(
+              s"Cannot add NOT NULL column '${f.name}' to existing " +
+                s"table '${table.dbName}': existing rows have no " +
+                "value for it")
+          }
+      }
+      // read only when the sink's merge asks for it (by-name)
+      def target =
+        if (table.allowAddColumns)
+          Load.withStageColumns(sink.read(table.dbName), aligned)
+        else sink.read(table.dbName)
+      load(sink.upsert(target, aligned, table.primaryKey, table.dbName))
     } else {
       // O2: full load = drop + create + copy ≡ atomic overwrite; an
       // incremental load into a missing target creates it the same way.
-      Retry.withRetry(3)(sink.overwrite(staged, table.dbName))
+      load(sink.overwrite(staged, table.dbName))
     }
     true
   }
@@ -344,7 +351,7 @@ final class Engine(spark: SparkSession, sink: TableSink) {
     * Writer/Redshift.php:295-303). */
   def tablesInfo(): Seq[(String, Seq[(String, String)])] =
     sink.listTables().map { name =>
-      name -> sink.read(name).schema.fields.toSeq
+      name -> sink.schema(name).fields.toSeq
         .map(f => f.name -> f.dataType.simpleString)
     }
 }
@@ -375,7 +382,14 @@ private[graft] object S3CredentialScope {
 /** O4 — retry with quadratic backoff: attempt i sleeps i² seconds
   * before retrying (reference: `$maxTries = 3`, sleep(pow(tries, 2)),
   * Writer/Redshift.php:238-253). Spark task retries cover the read
-  * side; this wraps driver-side sink actions. */
+  * side; this wraps driver-side sink actions.
+  *
+  * Departure from the reference, which retries every statement
+  * (Writer/Redshift.php:226-260): a failure whose SQLState is of a
+  * class that fails the same way every time — 22 data exception, 23
+  * integrity constraint violation, 42 syntax error or access rule
+  * violation — stops at once. Connection (08), transaction-rollback
+  * (40) and every other failure still retries. */
 object Retry {
   def withRetry[T](maxTries: Int, sleepMs: Long => Long = i => i * i * 1000L)(f: => T): T = {
     var tries = 0
@@ -391,6 +405,8 @@ object Retry {
           // cancellation, not a transient failure: re-executing the
           // body would resurrect a load the engine just cancelled
           Thread.currentThread().interrupt(); throw e
+        case e: Throwable if sqlState(e).exists(s => deterministicClasses(s.take(2))) =>
+          throw e
         case e: Throwable =>
           tries += 1; last = e
           if (tries < maxTries) Thread.sleep(sleepMs(tries.toLong))
@@ -398,4 +414,23 @@ object Retry {
     }
     throw last
   }
+
+  private val deterministicClasses = Set("22", "23", "42")
+
+  /** The SQLState of the first SQL failure in `e`'s cause chain — a
+    * `java.sql.SQLException`, or a [[SqlStateException]] that carries
+    * one without its raw message. */
+  private[graft] def sqlState(e: Throwable): Option[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(64)
+      .map {
+        case s: java.sql.SQLException => Option(s.getSQLState)
+        case s: SqlStateException     => s.sqlState
+        case _                        => None
+      }.collectFirst { case Some(st) => st }
 }
+
+/** A failure re-thrown with a scrubbed message and no cause, keeping
+  * only the SQLState of the failure it replaces (so [[Retry]] can still
+  * tell deterministic SQL failures from transient ones). */
+private[graft] final class SqlStateException(msg: String, val sqlState: Option[String])
+    extends RuntimeException(msg)

@@ -1,6 +1,7 @@
 package graft.app
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Destination abstraction (reference: the PDO/pgsql connection in
   * src/Keboola/DbWriter/Writer/Redshift.php:44-77). The engine's load
@@ -101,16 +102,21 @@ trait TableSink {
   /** Read the current target table (for the merge's target side). */
   def read(name: String): DataFrame
 
+  /** The table's schema, for planning a load against it. A sink that
+    * can answer without setting up a read overrides this. */
+  def schema(name: String): StructType = read(name).schema
+
   /** Replace the table wholesale (drop+create+copy collapses to one
     * atomic overwrite — reference: RedshiftApplication.php:131-139). */
   def overwrite(df: DataFrame, name: String): Unit
 
   /** Stage-wins primary-key merge of `delta` into the EXISTING table
     * `name` (O3 — reference: Writer/Redshift.php:155-209). `target` is
-    * that table as the engine read it, already aligned to the delta
-    * (timestamp flavors, `allowAddColumns` fill). The default merges in
+    * that table as the engine reads it, already aligned to the delta
+    * (timestamp flavors, `allowAddColumns` fill), passed by name so a
+    * merge that runs in place never reads it. The default merges in
     * Spark and overwrites; a sink that can merge in place overrides it. */
-  def upsert(target: DataFrame, delta: DataFrame, pk: Seq[String],
+  def upsert(target: => DataFrame, delta: DataFrame, pk: Seq[String],
              name: String): Unit =
     overwrite(graft.operators.Load.upsert(target, delta, pk), name)
 
@@ -152,12 +158,46 @@ final class ParquetSink(spark: SparkSession, baseDir: String) extends TableSink 
   // delete a stage whose target is missing.
   def tableExists(name: String): Boolean = fs.exists(path(name))
 
-  def read(name: String): DataFrame = spark.read.parquet(path(name).toString)
+  /** Read with the footer's schema: Spark's own schema inference would
+    * run a job to learn it. */
+  def read(name: String): DataFrame =
+    spark.read.schema(schema(name)).parquet(path(name).toString)
+
+  /** The schema Spark stored in ONE data file's footer, read on the
+    * driver — the schema inference would take it from there too. A
+    * directory without such a file (missing, or not written by Spark)
+    * falls back to the inference and its errors. */
+  override def schema(name: String): StructType = {
+    val dir = path(name)
+    val dataFile =
+      try fs.listStatus(dir).iterator.find { st =>
+        val n = st.getPath.getName
+        st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
+      } catch { case _: java.io.FileNotFoundException => None }
+    val stored = dataFile.flatMap { st =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
+          spark.sessionState.newHadoopConf()))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally reader.close()
+    }
+    stored.flatMap(json => scala.util.Try(
+        org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[StructType]).toOption)
+      .getOrElse(spark.read.parquet(dir.toString).schema)
+  }
 
   def overwrite(df: DataFrame, name: String): Unit = {
     val stage = path(
       s"${name}__stage_${java.util.UUID.randomUUID().toString.take(8)}")
-    df.write.mode("overwrite").parquet(stage.toString)
+    // a failed write leaves a partial stage that listTables would
+    // report as a table: remove it (nothing depends on it yet)
+    try df.write.mode("overwrite").parquet(stage.toString)
+    catch {
+      case e: Throwable =>
+        try fs.delete(stage, true) catch { case _: Exception => () }
+        throw e
+    }
     val target = path(name)
     // Idempotent swap (see SwapGuard): an ambiguous rename — committed
     // server-side, error client-side (s3a copy+delete, HDFS timeouts)
@@ -201,7 +241,8 @@ final class ParquetSink(spark: SparkSession, baseDir: String) extends TableSink 
   *
   * `catalogSql` / `renameSql` default to the Redshift/Postgres
   * dialect; other engines (e.g. embedded Derby in the integration
-  * spec) pass their own.
+  * spec) pass their own. `renameSql(from, to)` gets `to` unqualified,
+  * as both dialects' RENAME expects.
   *
   * Failures are re-thrown with credentials scrubbed from the message —
   * the JDBC layer loves echoing the connection URL (e.g. "No suitable
@@ -258,7 +299,8 @@ final class JdbcSink(spark: SparkSession, url: String,
 
   /** Wrap a JDBC action; any failure resurfaces with secrets masked.
     * Stays a RuntimeException (not UserException) so [[Retry]] still
-    * treats transient connection errors as retryable — but an inner
+    * treats transient connection errors as retryable, and keeps the
+    * failure's SQLState so it stops on deterministic ones — but an inner
     * UserException (the terminal swap failure, already scrubbed)
     * passes through untouched: re-wrapping it retryable would let the
     * outer retry re-execute a plan whose input table is gone. */
@@ -266,8 +308,8 @@ final class JdbcSink(spark: SparkSession, url: String,
     try f catch {
       case e: graft.model.UserException => throw e
       case e: Exception =>
-        throw new RuntimeException(
-          s"${e.getClass.getSimpleName}: ${scrub(e.getMessage)}")
+        throw new SqlStateException(
+          s"${e.getClass.getSimpleName}: ${scrub(e.getMessage)}", Retry.sqlState(e))
     }
 
   /** Keys the SINK interprets itself — never forwarded raw: Spark
@@ -281,13 +323,35 @@ final class JdbcSink(spark: SparkSession, url: String,
     case (r, (k, v)) => r.option(k, v)
   }
 
-  // The reference's catalog probe (Writer/Redshift.php:216-224).
-  // Connection failures PROPAGATE (scrubbed, via guarded) — mapping
-  // them to false would make the incremental paths treat a transient
-  // outage as "table missing" and replace the accumulated table with
-  // one batch.
-  def tableExists(name: String): Boolean =
-    listTables().exists(_.equalsIgnoreCase(name))
+  // The reference's catalog probe (Writer/Redshift.php:216-224),
+  // through JDBC metadata so a schema-qualified name resolves in its
+  // own schema ([[exists]]). Connection failures PROPAGATE (scrubbed,
+  // via guarded) — mapping them to false would make the incremental
+  // paths treat a transient outage as "table missing" and replace the
+  // accumulated table with one batch.
+  def tableExists(name: String): Boolean = guarded {
+    val conn = connect()
+    try exists(conn, name) finally conn.close()
+  }
+
+  /** Whether `table` is a base table, via `DatabaseMetaData.getTables`
+    * scoped and case-folded like [[ddlShape]] (a qualified `APP.t`
+    * probes schema APP; unqualified names the current schema). */
+  private def exists(conn: java.sql.Connection, table: String): Boolean = {
+    val md = conn.getMetaData
+    val escaped = metaEscaper(md)
+    scopeVariants(metaScope(conn, table)).exists { case (c, s, t) =>
+      val rs = md.getTables(c.orNull, s.map(escaped).orNull, escaped(t),
+        Array("TABLE"))
+      try rs.next() finally rs.close()
+    }
+  }
+
+  /** The schema a plain read of `name` would have, from Spark's
+    * `WHERE 1=0` resolve — no bounds or split-point probes, no job. */
+  override def schema(name: String): StructType = guarded {
+    reader.option("dbtable", name).load().schema
+  }
 
   /** Table read; parallel when `partitionColumn` is configured in
     * `props` (typically the PK). A single-connection JDBC read is the
@@ -579,22 +643,23 @@ final class JdbcSink(spark: SparkSession, url: String,
       // drop+create): rename the stage in. Idempotent across ambiguous
       // failures — if a prior attempt's rename landed, the stage is
       // gone and the target exists, which the retry treats as done.
+      // RENAME takes the new name unqualified (it stays in the stage's
+      // schema, which is the target's).
       SwapGuard(s"swap failed for table '$name' after retries " +
           s"(staged data preserved in table $stage)", scrub) {
-        // one catalog probe per attempt answers all existence checks
-        val tables = listTables().map(_.toLowerCase).toSet
         val conn = connect()
         try {
           val st = conn.createStatement()
           try {
-            if (!tables(stage.toLowerCase)) {
-              if (!tables(name.toLowerCase))
+            val targetExists = exists(conn, name)
+            if (!exists(conn, stage)) {
+              if (!targetExists)
                 throw new IllegalStateException(
                   s"stage and target both missing for '$name'")
               // else: prior rename landed — done
             } else {
-              if (tables(name.toLowerCase)) st.execute(s"DROP TABLE $name")
-              st.execute(renameSql(stage, name))
+              if (targetExists) st.execute(s"DROP TABLE $name")
+              st.execute(renameSql(stage, name.split('.').last))
             }
           } finally st.close()
         } finally conn.close()
@@ -618,7 +683,7 @@ final class JdbcSink(spark: SparkSession, url: String,
     * the database may refuse to compare (LOBs) takes the default Spark
     * merge instead, so drift keeps its drop+rename or loud-failure
     * outcome. */
-  override def upsert(target: DataFrame, delta: DataFrame, pk: Seq[String],
+  override def upsert(target: => DataFrame, delta: DataFrame, pk: Seq[String],
                       name: String): Unit =
     if (!mergeInPlace(delta, pk, name)) super.upsert(target, delta, pk, name)
 

@@ -38,7 +38,7 @@ object Load {
     * Removed/retyped columns pass through untouched so the merge union
     * still fails loudly on them. */
   def withStageColumns(target: DataFrame, stage: DataFrame): DataFrame =
-    addedColumns(target, stage).foldLeft(target)((df, f) =>
+    addedColumns(target.schema, stage.schema).foldLeft(target)((df, f) =>
       df.withColumn(f.name, lit(null).cast(f.dataType)))
 
   /** The columns `stage` carries that `target` lacks (case-insensitive
@@ -46,10 +46,11 @@ object Load {
     * the engine's nullability guard and [[withStageColumns]]'s fill
     * must agree on what counts as "added", or a column could be filled
     * without being checked. */
-  def addedColumns(target: DataFrame,
-                   stage: DataFrame): Seq[org.apache.spark.sql.types.StructField] = {
-    val have = target.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    stage.schema.fields.filterNot(f => have(f.name.toLowerCase(java.util.Locale.ROOT))).toSeq
+  def addedColumns(target: org.apache.spark.sql.types.StructType,
+                   stage: org.apache.spark.sql.types.StructType)
+      : Seq[org.apache.spark.sql.types.StructField] = {
+    val have = target.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    stage.fields.filterNot(f => have(f.name.toLowerCase(java.util.Locale.ROOT))).toSeq
   }
 
   /** Stage-wins primary-key merge (J1+J2+J3). */

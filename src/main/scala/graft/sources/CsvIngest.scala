@@ -23,15 +23,17 @@ object CsvIngest {
 
   /** Reference CSV dialect (SURVEY §1). `escape='"'` (doubled quotes,
     * not backslash) + multiLine are the two gotchas; `special.csv` is
-    * the gate fixture. */
-  private def reader(spark: SparkSession, header: Boolean) =
-    spark.read
-      .option("header", header.toString)
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .option("multiLine", "true")
-      .option("nullValue", "NULL")
-      .option("emptyValue", "")
+    * the gate fixture. ONE map for the Spark reader and the driver-side
+    * header parse, so the two cannot read a header differently. */
+  private val dialect = Map(
+    "quote" -> "\"",
+    "escape" -> "\"",
+    "multiLine" -> "true",
+    "nullValue" -> "NULL",
+    "emptyValue" -> "")
+
+  private[graft] def reader(spark: SparkSession, header: Boolean) =
+    spark.read.option("header", header.toString).options(dialect)
 
   /** Read one CSV file/dir with the declared (all-string) source schema. */
   def read(spark: SparkSession, path: String, table: TableConfig,
@@ -44,9 +46,45 @@ object CsvIngest {
     * positionally and never sees the header, so the check must read it
     * explicitly — same split as the reference, whose column list comes
     * from the storage manifest, not the COPY
-    * (RedshiftApplication.php:141-146,169-184). */
-  def headerColumns(spark: SparkSession, path: String): Seq[String] =
-    reader(spark, header = true).csv(path).columns.toSeq
+    * (RedshiftApplication.php:141-146,169-184).
+    *
+    * A single file is read on the driver, no Spark job: the first record
+    * through the Hadoop filesystem (decompressed by the path's codec,
+    * like the scan), tokenized with the reader's own univocity settings
+    * and named with Spark's safe-header rules (`_c<i>` for empty/`NULL`
+    * names, an index suffix on duplicates) — the same names
+    * `csv(path).columns` yields. A directory or glob keeps the Spark
+    * read, which decides which file comes first. */
+  def headerColumns(spark: SparkSession, path: String): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = p.getFileSystem(conf)
+    val isFile =
+      try fs.getFileStatus(p).isFile
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!isFile) reader(spark, header = true).csv(path).columns.toSeq
+    else {
+      val sqlConf = spark.sessionState.conf
+      val opts = new org.apache.spark.sql.catalyst.csv.CSVOptions(
+        dialect + ("header" -> "true"), sqlConf.csvColumnPruning,
+        sqlConf.sessionLocalTimeZone)
+      val raw = fs.open(p)
+      val in =
+        try Option(new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+          .getCodec(p)).map(_.createInputStream(raw)).getOrElse(raw)
+        catch { case e: Throwable => raw.close(); throw e }
+      try {
+        // as Spark's multiLine tokenizer: beginParsing(stream, charset)
+        // (which also skips a BOM), then the first record
+        val parser = new com.univocity.parsers.csv.CsvParser(opts.asParserSettings)
+        parser.beginParsing(in, opts.charset)
+        Option(parser.parseNext()).toSeq.flatMap(first =>
+          org.apache.spark.sql.execution.datasources.csv.CSVUtils
+            .makeSafeHeader(first, sqlConf.caseSensitiveAnalysis, opts).toSeq)
+      } finally in.close()
+    }
+  }
 
   /** Sliced-file mode: explicit file list, no header rows
     * (reference: Writer/Redshift.php:107-108). An empty entry list is a
@@ -139,54 +177,101 @@ object CsvIngest {
     * Line numbers are 1-based and count the header (so the first data
     * row is line 2), matching the reference's fixture assertions.
     *
-    * TWO-PHASE so the happy path never leaves whole-stage codegen:
-    * phase 1 is a pure vectorized offender-EXISTS aggregation over the
-    * scan (no line column, no RDD conversion); only when an offender
-    * exists does phase 2 run the zipWithIndex pass that locates the
-    * per-column first offending line. A clean load — the overwhelmingly
-    * common case at 100 TB — thus costs one codegen'd scan, while the
-    * failure path keeps the exact per-line message parity (one extra
-    * scan on a load that is about to abort anyway).
+    * TWO-PHASE, and the first phase comes in two forms:
+    *  - eager (this method, for callers that need a checked frame before
+    *    they write — view folds, JSON ingest): phase 1 is a pure
+    *    vectorized offender-EXISTS aggregation over the scan, one extra
+    *    codegen'd pass;
+    *  - fused ([[castAndProjectChecked]] + [[reportingOffences]], the
+    *    table loads): the check rides inside the staging write itself,
+    *    so a clean load scans its input once — like the reference, which
+    *    COPYs first and reads `stl_load_errors` only when the COPY fails.
+    * Only when an offender exists does phase 2 ([[locateOffence]]) run
+    * the zipWithIndex pass that finds the per-column first offending
+    * line, so both forms throw the same message.
     */
   def castAndProjectStrict(df: DataFrame, table: TableConfig,
                            header: Boolean = true): DataFrame = {
-    val base = if (header) 2L else 1L // first data row's 1-based line
-    val checks = strictChecks(table)
-    if (checks.nonEmpty && strictOffenderExists(df, table)) {
-      // ONE aggregation job over ONE pass: per check, the min (line,
-      // value) struct among its offenders — min on a struct orders by
-      // line first, so each slot holds that check's earliest offender.
-      // Column priority (declared order) is then resolved driver-side.
-      val withLine = zipWithLineNumbers(df, base)
-      val aggs = checks.zipWithIndex.map { case ((c, pred, _), i) =>
-        min(when(pred, struct(col("__line").as("line"),
-          col(quoted(c.name)).cast(StringType).as("value")))).as(s"__c$i")
-      }
-      val firsts = withLine.agg(aggs.head, aggs.tail: _*).collect().head
-      checks.zipWithIndex.foreach { case ((c, _, kind), i) =>
-        if (!firsts.isNullAt(i)) {
-          val off = firsts.getStruct(i)
-          val line = off.getLong(0)
-          val value = String.valueOf(off.get(1))
-          // message mirrors Redshift's stl_load_errors text that the
-          // reference surfaces verbatim (tests/Keboola/FunctionalTest.php:74-78)
-          val reason =
-            if (kind == "notnull") "Missing data for not-null field"
-            else c.sparkType match {
-              case org.apache.spark.sql.types.DateType if value.length < 10 =>
-                "Invalid Date Format - length must be 10 or more"
-              case org.apache.spark.sql.types.DateType =>
-                s"Invalid date format - Invalid digit encountered"
-              case org.apache.spark.sql.types.TimestampType |
-                   org.apache.spark.sql.types.TimestampNTZType =>
-                "Invalid timestamp format or value out of range"
-              case t => s"Invalid digit, Value '$value', type ${t.simpleString}"
-            }
-          throw new UserException(s"Column '${c.dbName}', line $line: $reason")
-        }
-      }
-    }
+    if (strictChecks(table).nonEmpty && strictOffenderExists(df, table))
+      locateOffence(df, table, header).foreach(e => throw e)
     castAndProject(df, table)
+  }
+
+  /** [[castAndProject]] with the strict checks fused in: every checked
+    * column becomes `CASE WHEN <offence> THEN raise_error(<sentinel>)
+    * ELSE <typed value> END`, so whatever writes this frame fails on
+    * the first offending row. Lazy — run the write inside
+    * [[reportingOffences]] to turn that failure into the "Column 'x',
+    * line N" UserException. */
+  def castAndProjectChecked(df: DataFrame, table: TableConfig): DataFrame = {
+    val cols = table.activeItems.map { c =>
+      val typed = columnChecks(c).map(_._1).reduceOption(_ || _) match {
+        case Some(offence) =>
+          when(offence, raise_error(lit(OffenceSentinel))).otherwise(typedColumn(c))
+        case None => typedColumn(c)
+      }
+      typed.as(c.dbName)
+    }
+    df.select(cols: _*)
+  }
+
+  /** Run `load`, which writes [[castAndProjectChecked]] of `df`. When a
+    * strict offence aborts it — the sentinel anywhere in the failure's
+    * message chain, which survives sinks that keep only a scrubbed
+    * message — phase 2 locates the offender in `df` and its
+    * UserException replaces the failure (not retryable, so an enclosing
+    * [[graft.app.Retry]] stops at once). */
+  def reportingOffences[T](df: DataFrame, table: TableConfig,
+                           header: Boolean)(load: => T): T =
+    try load
+    catch {
+      case e: Exception if raisedOffence(e) =>
+        throw locateOffence(df, table, header).getOrElse(e)
+    }
+
+  /** The `raise_error` message of a fused strict check. */
+  private val OffenceSentinel = "graft strict ingest: offending value"
+
+  private def raisedOffence(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(64)
+      .exists(t => Option(t.getMessage).exists(_.contains(OffenceSentinel)))
+
+  /** Phase 2: ONE aggregation job over ONE pass — per check, the min
+    * (line, value) struct among its offenders; min on a struct orders by
+    * line first, so each slot holds that check's earliest offender.
+    * Column priority (declared order) is then resolved driver-side.
+    * None when `df` holds no offender. */
+  private def locateOffence(df: DataFrame, table: TableConfig,
+                            header: Boolean): Option[UserException] = {
+    val checks = strictChecks(table)
+    if (checks.isEmpty) return None
+    val base = if (header) 2L else 1L // first data row's 1-based line
+    val withLine = zipWithLineNumbers(df, base)
+    val aggs = checks.zipWithIndex.map { case ((c, pred, _), i) =>
+      min(when(pred, struct(col("__line").as("line"),
+        col(quoted(c.name)).cast(StringType).as("value")))).as(s"__c$i")
+    }
+    val firsts = withLine.agg(aggs.head, aggs.tail: _*).collect().head
+    checks.zipWithIndex.collectFirst { case ((c, _, kind), i) if !firsts.isNullAt(i) =>
+      val off = firsts.getStruct(i)
+      val line = off.getLong(0)
+      val value = String.valueOf(off.get(1))
+      // message mirrors Redshift's stl_load_errors text that the
+      // reference surfaces verbatim (tests/Keboola/FunctionalTest.php:74-78)
+      val reason =
+        if (kind == "notnull") "Missing data for not-null field"
+        else c.sparkType match {
+          case org.apache.spark.sql.types.DateType if value.length < 10 =>
+            "Invalid Date Format - length must be 10 or more"
+          case org.apache.spark.sql.types.DateType =>
+            s"Invalid date format - Invalid digit encountered"
+          case org.apache.spark.sql.types.TimestampType |
+               org.apache.spark.sql.types.TimestampNTZType =>
+            "Invalid timestamp format or value out of range"
+          case t => s"Invalid digit, Value '$value', type ${t.simpleString}"
+        }
+      new UserException(s"Column '${c.dbName}', line $line: $reason")
+    }
   }
 
   /** Offender predicates for the strict path — per column: (a) cast
@@ -194,22 +279,25 @@ object CsvIngest {
     * (b) NOT NULL violation — the effective (post-default) value is
     * NULL on a nullable=false column (reference DDL renders NOT NULL,
     * Redshift.php:141-145). */
+  private def columnChecks(c: ColumnSpec): Seq[(org.apache.spark.sql.Column, String)] = {
+    val castCheck =
+      if (c.sparkType == StringType) Nil
+      else {
+        val casted = expr(s"try_cast(${quoted(c.name)} as ${c.sparkType.sql})")
+        Seq((col(quoted(c.name)).isNotNull && casted.isNull, "cast"))
+      }
+    val nnCheck =
+      if (c.nullable) Nil
+      else Seq((typedColumn(c).isNull, "notnull"))
+    castCheck ++ nnCheck
+  }
+
   private def strictChecks(table: TableConfig)
       : Seq[(ColumnSpec, org.apache.spark.sql.Column, String)] =
-    table.activeItems.flatMap { c =>
-      val castCheck =
-        if (c.sparkType == StringType) Nil
-        else {
-          val casted = expr(s"try_cast(${quoted(c.name)} as ${c.sparkType.sql})")
-          Seq((c, col(quoted(c.name)).isNotNull && casted.isNull, "cast"))
-        }
-      val nnCheck =
-        if (c.nullable) Nil
-        else Seq((c, typedColumn(c).isNull, "notnull"))
-      castCheck ++ nnCheck
-    }
+    table.activeItems.flatMap(c =>
+      columnChecks(c).map { case (pred, kind) => (c, pred, kind) })
 
-  /** Phase 1 of strict validation: a single boolean ANY-offender
+  /** Phase 1 of eager strict validation: a single boolean ANY-offender
     * aggregation with no auxiliary columns — stays entirely inside
     * whole-stage codegen (no RDD conversion, no row deserialization).
     * Requires at least one check (caller guards). Exposed for the
@@ -230,19 +318,11 @@ object CsvIngest {
     * bad rows land in a quarantine sink for reprocessing.
     */
   def castAndProjectQuarantine(df: DataFrame, table: TableConfig): (DataFrame, DataFrame) = {
-    val checks = table.activeItems.flatMap { c =>
-      val castCheck =
-        if (c.sparkType == StringType) Nil
-        else {
-          val casted = expr(s"try_cast(${quoted(c.name)} as ${c.sparkType.sql})")
-          Seq((col(quoted(c.name)).isNotNull && casted.isNull, c.dbName))
-        }
-      // NOT NULL violations quarantine too (reference DDL renders
-      // NOT NULL so the DB rejects the row; Redshift.php:141-145)
-      val nnCheck =
-        if (c.nullable) Nil
-        else Seq((typedColumn(c).isNull, s"${c.dbName}:notnull"))
-      castCheck ++ nnCheck
+    // the strict path's checks; NOT NULL violations quarantine too
+    // (reference DDL renders NOT NULL so the DB rejects the row;
+    // Redshift.php:141-145), tagged `<col>:notnull`
+    val checks = strictChecks(table).map { case (c, pred, kind) =>
+      (pred, if (kind == "notnull") s"${c.dbName}:notnull" else c.dbName)
     }
     val errs = array_compact(array(checks.map { case (pred, name) =>
       when(pred, lit(name)).otherwise(lit(null).cast("string"))
