@@ -789,7 +789,11 @@ final class JdbcSink(spark: SparkSession, url: String,
 
   /** Drop stranded `<name>_temp_<hex8>` staging tables (a write that
     * failed mid-job leaves one per attempt; nothing else cleans JDBC
-    * temps). Returns the names actually dropped.
+    * temps) in EVERY schema — a schema-qualified target (`OTHER.t`)
+    * stages as `OTHER.t_temp_<hex8>`. Listed through
+    * `DatabaseMetaData.getTables` like [[exists]], dropped by their
+    * quoted, qualified catalog spelling. Returns the names actually
+    * dropped: bare in the current schema, `schema.name` elsewhere.
     *
     * CAUTION — run only while no load is in flight: JDBC catalogs
     * expose no creation time, so a concurrently running overwrite's
@@ -797,8 +801,28 @@ final class JdbcSink(spark: SparkSession, url: String,
     * filesystem cleanup's mtime guard). */
   def cleanOrphanTemps(): Seq[String] = {
     val tempPattern = ".*_temp_[0-9a-f]{8}".r
-    listTables().filter(t => tempPattern.matches(t.toLowerCase))
-      .filter(dropQuietly)
+    val found = guarded {
+      val conn = connect()
+      try {
+        val md = conn.getMetaData
+        val cur = try Option(conn.getSchema) catch { case _: Throwable => None }
+        val q = Option(md.getIdentifierQuoteString).map(_.trim).getOrElse("")
+        val rs = md.getTables(null, null, "%", Array("TABLE"))
+        try {
+          val buf = Seq.newBuilder[(String, String)]
+          while (rs.next()) {
+            val (c, sc, t) = (rs.getString("TABLE_CAT"),
+              rs.getString("TABLE_SCHEM"), rs.getString("TABLE_NAME"))
+            if (tempPattern.matches(t.toLowerCase))
+              buf += ((Seq(c, sc, t).filter(x => x != null && x.nonEmpty)
+                .map(p => q + p + q).mkString("."),
+                if (sc == null || cur.contains(sc)) t else s"$sc.$t"))
+          }
+          buf.result()
+        } finally rs.close()
+      } finally conn.close()
+    }
+    found.collect { case (quoted, name) if dropQuietly(quoted) => name }
   }
 
   /** One column as the catalog reports it: `name` in the catalog's own

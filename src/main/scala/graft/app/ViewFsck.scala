@@ -1,6 +1,7 @@
 package graft.app
 
 import graft.model.UserException
+import graft.state.FoldStore
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -100,9 +101,7 @@ object ViewFsck {
           val dirs = ls(new Path(rootPath, layer)).filter(_.isDirectory)
           dirs.foreach { st =>
             val n = st.getPath.getName
-            val id = if (n.startsWith("d") && n.length > 1 &&
-              n.drop(1).forall(_.isDigit)) Some(n.drop(1).toLong)
-            else None
+            val id = FoldStore.idOf("d", n)
             check(id.isEmpty, error = false,
               s"join/$layer: unrecognized entry '$n' (not a d<id> " +
                 "batch dir) — not served, not swept; remove by hand")
@@ -265,9 +264,8 @@ object ViewFsck {
                   .filter(_.isDirectory)
                   .flatMap { v =>
                     val vn = v.getPath.getName
-                    if (vn.startsWith("v") && vn.length > 1 &&
-                      vn.drop(1).forall(_.isDigit))
-                      Some(vn.drop(1).toLong)
+                    val id = FoldStore.versionId(vn)
+                    if (id.isDefined) id
                     else {
                       check(errorWhen = true, error = false,
                         s"cdcRollup/$layer/$name/$vn: unrecognized " +
@@ -397,9 +395,7 @@ object ViewFsck {
             val present =
               (if (fs.exists(ldP))
                 fs.listStatus(ldP).toSeq.map(_.getPath.getName)
-                  .filter(n => n.startsWith("b") && n.length > 1 &&
-                    n.drop(1).forall(_.isDigit))
-                  .map(_.drop(1).toLong)
+                  .flatMap(FoldStore.idOf("b", _))
               else Nil).toSet
             markers.ids.filter(_ > lf).toSeq.sorted.foreach { id =>
               check(!present(id), error = true,
@@ -423,17 +419,17 @@ object ViewFsck {
                         frontier.exists(i <= _)), error = false,
                       s"cdcRollup/$ld/$n: staging shell that can " +
                         "never promote — gc sweeps it")
-                  } else if (n.startsWith("b") && n.length > 1 &&
-                      n.drop(1).forall(_.isDigit)) {
-                    val id = n.drop(1).toLong
-                    check(!markers.committed(id) &&
-                        frontier.exists(id <= _), error = false,
-                      s"cdcRollup/$ld/$n: uncommitted log dir below " +
-                        "the frontier — abandoned garbage, gc " +
-                        "sweeps it")
-                  } else
-                    check(errorWhen = true, error = false,
-                      s"cdcRollup/$ld/$n: unrecognized entry")
+                  } else FoldStore.idOf("b", n) match {
+                    case Some(id) =>
+                      check(!markers.committed(id) &&
+                          frontier.exists(id <= _), error = false,
+                        s"cdcRollup/$ld/$n: uncommitted log dir below " +
+                          "the frontier — abandoned garbage, gc " +
+                          "sweeps it")
+                    case None =>
+                      check(errorWhen = true, error = false,
+                        s"cdcRollup/$ld/$n: unrecognized entry")
+                  }
                 }
           }
         }
@@ -638,10 +634,7 @@ object ViewFsck {
                 fs.listStatus(st.getPath).toSeq.filter(_.isDirectory)
                   .foreach { v =>
                     val vn = v.getPath.getName
-                    val id = if (vn.startsWith("v") && vn.length > 1 &&
-                        vn.drop(1).forall(_.isDigit))
-                      Some(vn.drop(1).toLong)
-                    else None
+                    val id = FoldStore.versionId(vn)
                     check(id.isEmpty, error = false,
                       s"rollup/history/$name/$vn: unrecognized entry " +
                         "(not a v<id> version dir)")

@@ -2,6 +2,7 @@ package graft.app
 
 import graft.model._
 import graft.operators.{JoinView, Load}
+import graft.state.FoldStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Runner for the `maintainView` action — the CLI face of the
@@ -983,6 +984,9 @@ object ViewMaintenance {
     val markers = graft.operators.BatchMarkers.read(fs, rootPath)
     def ls(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       if (fs.exists(p)) fs.listStatus(p).toSeq else Nil
+    def chainJson(sh: FoldStore.Shape): String =
+      s"""{"buckets":${sh.buckets},"committed_versions":""" +
+        s"""${sh.committed},"orphan_candidates":${sh.orphans}}"""
     def opt(n: String, v: Option[Long]): String =
       v.map(x => s""""$n":$x""").getOrElse(s""""$n":null""")
     val batches = s""""batches":{"committed":${markers.count},""" +
@@ -992,12 +996,8 @@ object ViewMaintenance {
       if (pin.startsWith("join|")) {
         val layers = Seq("a", "b", "view").map { side =>
           val dirs = ls(new Path(rootPath, side)).filter(_.isDirectory)
-          val committed = dirs.count { st =>
-            val n = st.getPath.getName
-            n.startsWith("d") && n.length > 1 &&
-              n.drop(1).forall(_.isDigit) &&
-              markers.committed(n.drop(1).toLong)
-          }
+          val committed = dirs.count(st => FoldStore
+            .idOf("d", st.getPath.getName).exists(markers.committed))
           val orphans = dirs.length - committed
           s""""$side":{"batch_dirs":$committed,"orphan_candidates":$orphans}"""
         }.mkString(",")
@@ -1020,46 +1020,13 @@ object ViewMaintenance {
           .filter(n => n == "log" || n == "log_view" ||
             n.startsWith("log_aux_")).sorted
           .map { ld =>
-            val entries = ls(new Path(rootPath, ld))
-              .filter(_.isDirectory)
-            var committed = 0
-            var orphans = 0
-            entries.foreach { st =>
-              val n = st.getPath.getName
-              if (n.startsWith(".staging")) orphans += 1
-              else if (n.startsWith("b"))
-                n.drop(1).toLongOption match {
-                  case Some(i) if markers.committed(i) => committed += 1
-                  case _ => orphans += 1
-                }
-            }
-            s""""$ld":{"batch_dirs":$committed,""" +
-              s""""orphan_candidates":$orphans},"""
+            val sh = FoldStore.shape(fs, rootPath, ld, markers, flat = true)
+            s""""$ld":{"batch_dirs":${sh.committed},""" +
+              s""""orphan_candidates":${sh.orphans}},"""
           }.mkString
-        val layers = cdcLayers.map { layer =>
-          val entries = ls(new Path(rootPath, layer))
-            .filter(_.isDirectory)
-          val bucketDirs = entries
-            .filter(_.getPath.getName.startsWith("bucket="))
-          val staging = entries
-            .count(_.getPath.getName.startsWith(".staging"))
-          var committed = 0; var orphans = staging
-          bucketDirs.foreach { b =>
-            fs.listStatus(b.getPath).foreach { v =>
-              val n = v.getPath.getName
-              val id = if (n.startsWith("v")) n.drop(1).toLongOption
-                       else None
-              id match {
-                case Some(i) if markers.committed(i) => committed += 1
-                case Some(_) => orphans += 1
-                case None => ()
-              }
-            }
-          }
-          s""""$layer":{"buckets":${bucketDirs.length},""" +
-            s""""committed_versions":$committed,""" +
-            s""""orphan_candidates":$orphans}"""
-        }.mkString(",")
+        val layers = cdcLayers.map(l =>
+          s""""$l":""" + chainJson(FoldStore.shape(fs, rootPath, l, markers)))
+          .mkString(",")
         ("cdcRollup", logJson + layers,
           if (!countRows) None
           else Some(graft.operators.CdcRollup.readView(spark, root)
@@ -1101,28 +1068,8 @@ object ViewMaintenance {
         val histDir = new Path(rootPath, "history")
         val histJson =
           if (!fs.exists(histDir)) ""
-          else {
-            val bucketDirs = ls(histDir).filter(_.isDirectory)
-              .filter(_.getPath.getName.startsWith("bucket="))
-            val staging = ls(histDir)
-              .count(_.getPath.getName.startsWith(".staging"))
-            var committed = 0; var orphans = staging
-            bucketDirs.foreach { b =>
-              fs.listStatus(b.getPath).foreach { v =>
-                val n = v.getPath.getName
-                val id = if (n.startsWith("v")) n.drop(1).toLongOption
-                         else None
-                id match {
-                  case Some(i) if markers.committed(i) => committed += 1
-                  case Some(_) => orphans += 1
-                  case None => ()
-                }
-              }
-            }
-            s""","history":{"buckets":${bucketDirs.length},""" +
-              s""""committed_versions":$committed,""" +
-              s""""orphan_candidates":$orphans}"""
-          }
+          else ""","history":""" +
+            chainJson(FoldStore.shape(fs, rootPath, "history", markers))
         val layers = s""""state":{"buckets":$buckets,""" +
           opt("last_batch", last) + "," +
           s""""orphan_candidates":$stranded}""" + histJson

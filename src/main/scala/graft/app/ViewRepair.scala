@@ -1,6 +1,7 @@
 package graft.app
 
 import graft.model.UserException
+import graft.state.FoldStore
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -200,9 +201,8 @@ object ViewRepair {
           val dir = new Path(rootPath, layer)
           (if (!fs.exists(dir)) Nil
           else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-            .filter(n => n.startsWith("d") && n.length > 1 &&
-              n.drop(1).forall(_.isDigit))
-            .map(_.drop(1).toLong).filter(markers.committed)).toSet
+            .flatMap(FoldStore.idOf("d", _)).filter(markers.committed))
+            .toSet
         }
         val (aIds, bIds, vIds) =
           (committedIds("a"), committedIds("b"), committedIds("view"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.state.FoldStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -472,14 +473,8 @@ object CdcRollup {
         s"$nBaseBuckets|$nAggBuckets$mmField$auxField")
     // reap THIS batch's crash garbage (staged dirs + unmarked versions)
     for (layer <- layerNames ++ auxViews.map("aux_" + _._1) ++
-        auxMinMaxCols.keys.map("grp_aux_" + _)) {
-      fs.delete(new Path(rootPath, s"$layer/.staging$batchId"), true)
-      val layerDir = new Path(rootPath, layer)
-      if (fs.exists(layerDir))
-        fs.listStatus(layerDir).toSeq.map(_.getPath)
-          .filter(_.getName.startsWith("bucket="))
-          .foreach(b => fs.delete(new Path(b, s"v$batchId"), true))
-    }
+        auxMinMaxCols.keys.map("grp_aux_" + _))
+      FoldStore.dropVersion(fs, rootPath, layer, batchId)
     // ... and the change-log layers' (an uncommitted b<id> from the
     // crashed attempt must go before the refold stages its
     // replacement)
@@ -573,7 +568,7 @@ object CdcRollup {
       val upserts = net.filter(!col("__cdc_delete")).drop("__cdc_delete")
       val keys = net.select(pkCols.map(col): _*).distinct()
       // old images live ONLY in the delta's touched base buckets
-      val prunedBase = readLatest(spark, fs, rootPath, "base",
+      val prunedBase = FoldStore.read(spark, fs, rootPath, "base",
         Some(touchedBase), markers).getOrElse(upserts.limit(0))
       val old = prunedBase.join(keys, pkCols, "left_semi").persist()
       try {
@@ -654,7 +649,7 @@ object CdcRollup {
                   val dt = delta.schema(v).dataType
                   Seq(StructField(mins(i), dt), StructField(maxs(i), dt))
                 }))
-          val oldAgg = readLatest(spark, fs, rootPath, "agg",
+          val oldAgg = FoldStore.read(spark, fs, rootPath, "agg",
             Some(touchedAgg), markers).getOrElse(emptyAgg)
           // NULL-SAFE group merge: a using-columns join would never
           // match NULL group values (null != null), splitting a NULL
@@ -689,7 +684,7 @@ object CdcRollup {
               val emptyGrp = spark.createDataFrame(
                 java.util.Collections.emptyList[org.apache.spark.sql.Row](),
                 StructType(grpCols.map(c => delta.schema(c))))
-              val oldGrp = readLatest(spark, fs, rootPath, "grp",
+              val oldGrp = FoldStore.read(spark, fs, rootPath, "grp",
                 Some(touchedAgg), markers).getOrElse(emptyGrp)
               val newGrp = oldGrp.join(keys, pkCols, "left_anti")
                 .unionByName(upserts.select(grpCols.map(col): _*))
@@ -754,7 +749,7 @@ object CdcRollup {
                   Seq(StructField(aMins(i), dt),
                     StructField(aMaxs(i), dt))
                 }))
-            val oldA = readLatest(spark, fs, rootPath, s"aux_$name",
+            val oldA = FoldStore.read(spark, fs, rootPath, s"aux_$name",
               Some(touchedA), markers).getOrElse(emptyA)
             val condA = cols.map(c => oldA(c) <=> aContrib(c))
               .reduce(_ && _)
@@ -778,7 +773,7 @@ object CdcRollup {
                   java.util.Collections
                     .emptyList[org.apache.spark.sql.Row](),
                   StructType(grpColsA.map(c => delta.schema(c))))
-                val oldGrpA = readLatest(spark, fs, rootPath,
+                val oldGrpA = FoldStore.read(spark, fs, rootPath,
                   s"grp_aux_$name", Some(touchedA), markers)
                   .getOrElse(emptyGrpA)
                 val newGrpA = oldGrpA.join(keys, pkCols, "left_anti")
@@ -878,7 +873,7 @@ object CdcRollup {
             // retention mode: superseded versions ARE the snapshot
             // history — the fold keeps them; reapRetainedVersions
             // owns their (floor-advancing) deletion
-            retain = readAsofFloor(fs, rootPath).isDefined,
+            retain = BatchMarkers.readFloor(fs, rootPath).isDefined,
             changeLogs = changeLogs)
         } finally {
           (contrib +: auxPre.map(_._3)).foreach(_.unpersist()); ()
@@ -894,7 +889,7 @@ object CdcRollup {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    readLatest(spark, fs, rootPath, "agg", None,
+    FoldStore.read(spark, fs, rootPath, "agg", None,
       BatchMarkers.read(fs, rootPath))
   }
 
@@ -904,7 +899,7 @@ object CdcRollup {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    readLatest(spark, fs, rootPath, "base", None,
+    FoldStore.read(spark, fs, rootPath, "base", None,
       BatchMarkers.read(fs, rootPath))
   }
 
@@ -919,7 +914,7 @@ object CdcRollup {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     requireAuxDeclared(fs, rootPath, root, name)
-    readLatest(spark, fs, rootPath, s"aux_$name", None,
+    FoldStore.read(spark, fs, rootPath, s"aux_$name", None,
       BatchMarkers.read(fs, rootPath))
   }
 
@@ -933,7 +928,7 @@ object CdcRollup {
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     requireAuxDeclared(fs, rootPath, root, name)
     requireServable(fs, rootPath, asOf)
-    readLatest(spark, fs, rootPath, s"aux_$name", None,
+    FoldStore.read(spark, fs, rootPath, s"aux_$name", None,
       BatchMarkers.read(fs, rootPath), Some(asOf))
   }
 
@@ -994,7 +989,7 @@ object CdcRollup {
       // churn ([[requireServableBuckets]])
       asOf.foreach(requireServableBuckets(fs, rootPath, _,
         s"aux_$name", touched))
-      readLatest(spark, fs, rootPath, s"aux_$name", Some(touched),
+      FoldStore.read(spark, fs, rootPath, s"aux_$name", Some(touched),
         BatchMarkers.read(fs, rootPath), asOf)
         .map { agg =>
           val cond = cols.map(c => agg(c) <=> probe(c)).reduce(_ && _)
@@ -1038,7 +1033,7 @@ object CdcRollup {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    readAsofFloor(fs, rootPath).getOrElse {
+    BatchMarkers.readFloor(fs, rootPath).getOrElse {
       val floor = BatchMarkers.read(fs, rootPath).maxCommitted
         .getOrElse(-1L)
       fs.mkdirs(rootPath)
@@ -1073,12 +1068,8 @@ object CdcRollup {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    readAsofFloor(fs, rootPath)
+    BatchMarkers.readFloor(fs, rootPath)
   }
-
-  private def readAsofFloor(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.Path): Option[Long] =
-    BatchMarkers.readFloor(fs, root)
 
   /** Refuse an as-of read the retained history cannot honestly serve:
     * no floor file = retention never enabled (folds reaped history
@@ -1087,65 +1078,31 @@ object CdcRollup {
     * silently-wrong partial snapshot. */
   private def requireServable(fs: org.apache.hadoop.fs.FileSystem,
                               root: org.apache.hadoop.fs.Path,
-                              asOf: Long): Unit = {
-    val floor = readAsofFloor(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"as-of read under $root: the state is not in retention mode — " +
-          "folds reap superseded versions eagerly, so no snapshot " +
-          "history exists; enable it (enableRetention / CLI kind " +
-          "'retain') BEFORE the folds whose snapshots you need"))
-    require(asOf >= floor,
-      s"as-of read at batch $asOf under $root: retained history " +
-        s"starts at floor $floor — earlier snapshots were reaped; " +
-        "widen the retention window on the GC cadence")
-  }
+                              asOf: Long): Unit =
+    FoldStore.requireFloor(fs, root, asOf, notRetained(root),
+      reaped(root, asOf))
 
-  /** The BUCKET-PRUNED servability gate — point lookups only. A
-    * bucket's as-of resolution depends on ITS OWN version chain
-    * alone, so a lookup touching buckets S is sound at `asOf` iff
-    * `asOf >= max(seed, floor(b) for b in S)`: every reaped version
-    * in those buckets was superseded at or below that bound, so the
-    * resolution each bucket serves is exactly what an unreaped chain
-    * would serve. This is what lets a cold key's history outlive the
-    * hot buckets' churn (the global floor is the MAX across all
-    * buckets).
-    *
-    * NOT sound for range reads (diffView/readViewSince): a version
-    * reaped INSIDE the range leaves no surviving version in it, so
-    * the changed-bucket listing cannot see that the bucket moved —
-    * only the global floor (which that reap advanced) witnesses it.
-    * Those paths keep [[requireServable]].
-    *
-    * Legacy retained states (no seed file) fall back to the global
-    * floor — the pre-seed behavior, conservative. */
+  /** The per-bucket gate for point lookups
+    * ([[FoldStore.requireBucketFloors]]): a cold key's history
+    * outlives the hot buckets' churn. */
   private def requireServableBuckets(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, asOf: Long,
-      layer: String, buckets: Set[Int]): Unit = {
-    val floor = readAsofFloor(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"as-of read under $root: the state is not in retention mode — " +
-          "folds reap superseded versions eagerly, so no snapshot " +
-          "history exists; enable it (enableRetention / CLI kind " +
-          "'retain') BEFORE the folds whose snapshots you need"))
-    if (asOf >= floor) return
-    val seed = BatchMarkers.readSeed(fs, root).getOrElse(
-      // retained before seeds existed: only the global floor is known
-      throw new IllegalArgumentException(
-        s"as-of read at batch $asOf under $root: retained history " +
-          s"starts at floor $floor — earlier snapshots were reaped; " +
-          "widen the retention window on the GC cadence"))
-    val bound = (seed +: buckets.toSeq.map { b =>
-      BatchMarkers.readFloor(fs,
-        new org.apache.hadoop.fs.Path(root, s"$layer/bucket=$b"))
-        .getOrElse(seed)
-    }).max
-    require(asOf >= bound,
-      s"as-of lookup at batch $asOf under $root: a touched bucket's " +
-        s"retained chain starts at $bound (seed $seed, global floor " +
-        s"$floor) — that bucket's earlier versions were reaped; " +
-        "widen the retention window on the GC cadence")
-  }
+      layer: String, buckets: Set[Int]): Unit =
+    FoldStore.requireBucketFloors(fs, root, asOf, layer, buckets,
+      notRetained(root), reaped(root, asOf))
+
+  private def notRetained(root: org.apache.hadoop.fs.Path): String =
+    s"as-of read under $root: the state is not in retention mode — " +
+      "folds reap superseded versions eagerly, so no snapshot " +
+      "history exists; enable it (enableRetention / CLI kind " +
+      "'retain') BEFORE the folds whose snapshots you need"
+
+  private def reaped(root: org.apache.hadoop.fs.Path,
+                     asOf: Long)(floor: Long): String =
+    s"as-of read at batch $asOf under $root: retained history " +
+      s"starts at floor $floor — earlier snapshots were reaped; " +
+      "widen the retention window on the GC cadence"
 
   /** The view AS OF `asOf`: per bucket, the highest committed version
     * with id <= asOf — exactly the state a reader saw right after
@@ -1160,7 +1117,7 @@ object CdcRollup {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     requireServable(fs, rootPath, asOf)
-    readLatest(spark, fs, rootPath, "agg", None,
+    FoldStore.read(spark, fs, rootPath, "agg", None,
       BatchMarkers.read(fs, rootPath), Some(asOf))
   }
 
@@ -1173,7 +1130,7 @@ object CdcRollup {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     requireServable(fs, rootPath, asOf)
-    readLatest(spark, fs, rootPath, "base", None,
+    FoldStore.read(spark, fs, rootPath, "base", None,
       BatchMarkers.read(fs, rootPath), Some(asOf))
   }
 
@@ -1231,74 +1188,30 @@ object CdcRollup {
     val m = mmDecl.length
     val stateCols = Seq("n") ++ aggNames(k) ++ minNames(m) ++ maxNames(m)
     val markers = BatchMarkers.read(fs, rootPath)
-    val changed = changedBuckets(fs, rootPath, layer, markers,
+    val changed = FoldStore.changedBuckets(fs, rootPath, layer, markers,
       fromId, toId)
     // the empty diff keeps the full output schema (group types from
     // the pin's typed field)
     val typed = layout.typed
     import org.apache.spark.sql.types.{StructField, StructType}
-    val mmNames = mmDecl
-    def mmType(v: String) = org.apache.spark.sql.types.DataType
+    def ddl(v: String) = org.apache.spark.sql.types.DataType
       .fromDDL(typed.getOrElse(v, "string"))
     def emptyState = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       StructType(
-        groupCols.map(c => StructField(c,
-          org.apache.spark.sql.types.DataType.fromDDL(
-            typed.getOrElse(c, "string")))) ++
+        groupCols.map(c => StructField(c, ddl(c))) ++
           (StructField("n", org.apache.spark.sql.types.LongType) +:
             aggNames(k).map(t => StructField(t,
               org.apache.spark.sql.types.DecimalType(38, 6)))) ++
-          mmNames.zipWithIndex.flatMap { case (v, i) =>
-            Seq(StructField(minNames(m)(i), mmType(v)),
-              StructField(maxNames(m)(i), mmType(v)))
+          mmDecl.zipWithIndex.flatMap { case (v, i) =>
+            Seq(StructField(minNames(m)(i), ddl(v)),
+              StructField(maxNames(m)(i), ddl(v)))
           }))
-    val from = readLatest(spark, fs, rootPath, layer, Some(changed),
-      markers, Some(fromId)).getOrElse(emptyState)
-    val to = readLatest(spark, fs, rootPath, layer, Some(changed),
-      markers, Some(toId)).getOrElse(emptyState)
-    val cond = groupCols.map(c => from(c) <=> to(c)).reduce(_ && _)
-    val joined = from.join(to, cond, "full_outer")
-    // presence flags ride `n` (never NULL on a live state row)
-    val inFrom = from("n").isNotNull
-    val inTo = to("n").isNotNull
-    val differs = stateCols.map(c => !(from(c) <=> to(c)))
-      .reduce(_ || _)
-    joined
-      .where((inFrom =!= inTo) || differs)
-      .select((groupCols.map(c => coalesce(from(c), to(c)).as(c)) ++
-        stateCols.map(c => from(c).as(s"${c}_from")) ++
-        stateCols.map(c => to(c).as(s"${c}_to")) :+
-        when(inFrom && !inTo, lit("removed"))
-          .when(!inFrom && inTo, lit("added"))
-          .otherwise(lit("changed")).as("change")): _*)
-  }
-
-  /** Buckets of `layer` holding any committed version in
-    * `(fromId, toId]` — the change-set pruning both [[diffView]] and
-    * [[diffBase]] rest on: a bucket with no version in the range is
-    * byte-identical at both snapshots by construction. */
-  private def changedBuckets(fs: org.apache.hadoop.fs.FileSystem,
-                             rootPath: org.apache.hadoop.fs.Path,
-                             layer: String,
-                             markers: BatchMarkers.Markers,
-                             fromId: Long, toId: Long): Set[Int] = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(rootPath, layer)
-    if (!fs.exists(dir)) Set.empty[Int]
-    else fs.listStatus(dir).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("bucket="))
-      .filter { b =>
-        fs.listStatus(b).exists { v =>
-          val n = v.getPath.getName
-          n.startsWith("v") && n.length > 1 &&
-            n.drop(1).forall(_.isDigit) && {
-              val id = n.drop(1).toLong
-              markers.committed(id) && id > fromId && id <= toId
-            }
-        }
-      }
-      .flatMap(_.getName.stripPrefix("bucket=").toIntOption).toSet
+    def side(id: Long) = FoldStore.read(spark, fs, rootPath, layer,
+      Some(changed), markers, Some(id)).getOrElse(emptyState)
+    // presence rides `n` (never NULL on a live state row)
+    FoldStore.labelChanges(side(fromId), side(toId), groupCols, stateCols,
+      "n")
   }
 
   /** The per-KEY change set between two snapshots of the SCD1 base —
@@ -1330,7 +1243,7 @@ object CdcRollup {
     val payload = layout.typed.keys.toSeq.sorted
     val stateCols = payload.filterNot(pkCols.contains)
     val markers = BatchMarkers.read(fs, rootPath)
-    val changed = changedBuckets(fs, rootPath, "base", markers,
+    val changed = FoldStore.changedBuckets(fs, rootPath, "base", markers,
       fromId, toId)
     import org.apache.spark.sql.types.{StructField, StructType}
     def emptyState = spark.createDataFrame(
@@ -1339,27 +1252,13 @@ object CdcRollup {
         org.apache.spark.sql.types.DataType.fromDDL(
           layout.typed.getOrElse(c, "string"))))))
     def side(id: Long) =
-      readLatest(spark, fs, rootPath, "base", Some(changed),
+      FoldStore.read(spark, fs, rootPath, "base", Some(changed),
         markers, Some(id)).getOrElse(emptyState)
         .select(payload.map(col): _*)
-    val from = side(fromId)
-    val to = side(toId)
-    val cond = pkCols.map(c => from(c) <=> to(c)).reduce(_ && _)
-    val joined = from.join(to, cond, "full_outer")
     // pk components are never NULL on a live image (folds refuse
     // NULL pks) — presence rides the first pk column
-    val inFrom = from(pkCols.head).isNotNull
-    val inTo = to(pkCols.head).isNotNull
-    val differs = stateCols.map(c => !(from(c) <=> to(c)))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    joined
-      .where((inFrom =!= inTo) || differs)
-      .select((pkCols.map(c => coalesce(from(c), to(c)).as(c)) ++
-        stateCols.map(c => from(c).as(s"${c}_from")) ++
-        stateCols.map(c => to(c).as(s"${c}_to")) :+
-        when(inFrom && !inTo, lit("removed"))
-          .when(!inFrom && inTo, lit("added"))
-          .otherwise(lit("changed")).as("change")): _*)
+    FoldStore.labelChanges(side(fromId), side(toId), pkCols, stateCols,
+      pkCols.head)
   }
 
   /** [[readViewSince]]'s base-layer sibling: the per-key image
@@ -1389,19 +1288,9 @@ object CdcRollup {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val rootFrontier = BatchMarkers.read(fs, rootPath).maxCommitted
-      .getOrElse(throw new IllegalStateException(
-        s"readBaseSince: no committed state under $root"))
-    upTo.foreach(u => require(u <= rootFrontier,
-      s"readBaseSince: the manifest cap $u is AHEAD of the committed " +
-        s"frontier $rootFrontier under $root — a group frontier this " +
-        "root never produced (a reset root?); re-baseline"))
-    val frontier = upTo.getOrElse(rootFrontier)
-    require(afterId <= frontier,
-      s"readBaseSince: afterId $afterId is AHEAD of the committed " +
-        s"frontier $frontier under $root — a frontier this state " +
-        "never produced (wrong root, or a reset state); re-baseline " +
-        "the consumer with a full export")
+    val frontier = FoldStore.pinFrontier("readBaseSince", root,
+      BatchMarkers.read(fs, rootPath), afterId, upTo,
+      s"readBaseSince: no committed state under $root")
     (diffBase(spark, root, afterId, frontier), frontier)
   }
 
@@ -1455,19 +1344,9 @@ object CdcRollup {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val rootFrontier = BatchMarkers.read(fs, rootPath).maxCommitted
-      .getOrElse(throw new IllegalStateException(
-        s"readViewSince: no committed state under $root"))
-    upTo.foreach(u => require(u <= rootFrontier,
-      s"readViewSince: the manifest cap $u is AHEAD of the committed " +
-        s"frontier $rootFrontier under $root — a group frontier this " +
-        "root never produced (a reset root?); re-baseline"))
-    val frontier = upTo.getOrElse(rootFrontier)
-    require(afterId <= frontier,
-      s"readViewSince: afterId $afterId is AHEAD of the committed " +
-        s"frontier $frontier under $root — a frontier this state " +
-        "never produced (wrong root, or a reset state); re-baseline " +
-        "the consumer with a full export")
+    val frontier = FoldStore.pinFrontier("readViewSince", root,
+      BatchMarkers.read(fs, rootPath), afterId, upTo,
+      s"readViewSince: no committed state under $root")
     (diffView(spark, root, afterId, frontier, auxView), frontier)
   }
 
@@ -1581,24 +1460,9 @@ object CdcRollup {
           "(enableChangeLog / CLI kind 'changelog') BEFORE the folds " +
           "whose changes you need"))
     val markers = BatchMarkers.read(fs, rootPath)
-    val rootFrontier = markers.maxCommitted.getOrElse(
-      throw new IllegalStateException(
-        s"readBaseLog: no committed state under $root"))
-    upTo.foreach(u => require(u <= rootFrontier,
-      s"readBaseLog: the manifest cap $u is AHEAD of the committed " +
-        s"frontier $rootFrontier under $root — a group frontier this " +
-        "root never produced (a reset root?); re-baseline"))
-    val frontier = upTo.getOrElse(rootFrontier)
-    require(afterId >= logFrom,
-      s"readBaseLog: afterId $afterId is below the change-log start " +
-        s"$logFrom under $root — folds at or before it were never " +
-        "logged (mode enabled later) or their log dirs were reaped; " +
-        "re-baseline the consumer with a full export")
-    require(afterId <= frontier,
-      s"readBaseLog: afterId $afterId is AHEAD of the committed " +
-        s"frontier $frontier under $root — a frontier this state " +
-        "never produced (wrong root, or a reset state); re-baseline " +
-        "the consumer with a full export")
+    val frontier = FoldStore.pinFrontier("readBaseLog", root, markers, afterId,
+      upTo, s"readBaseLog: no committed state under $root",
+      logStart = Some(logFrom))
     val pin = graft.sources.PartitionedStore.readPin(fs, rootPath)
       .getOrElse(throw new IllegalStateException(
         s"readBaseLog: no layout pin under $root — not a cdcRollup " +
@@ -1649,24 +1513,9 @@ object CdcRollup {
           "(enableChangeLog / CLI kind 'changelog') BEFORE the folds " +
           "whose changes you need"))
     val markers = BatchMarkers.read(fs, rootPath)
-    val rootFrontier = markers.maxCommitted.getOrElse(
-      throw new IllegalStateException(
-        s"readViewLog: no committed state under $root"))
-    upTo.foreach(u => require(u <= rootFrontier,
-      s"readViewLog: the manifest cap $u is AHEAD of the committed " +
-        s"frontier $rootFrontier under $root — a group frontier this " +
-        "root never produced (a reset root?); re-baseline"))
-    val frontier = upTo.getOrElse(rootFrontier)
-    require(afterId >= logFrom,
-      s"readViewLog: afterId $afterId is below the change-log start " +
-        s"$logFrom under $root — folds at or before it were never " +
-        "logged (mode enabled later) or their log dirs were reaped; " +
-        "re-baseline the consumer with a full export")
-    require(afterId <= frontier,
-      s"readViewLog: afterId $afterId is AHEAD of the committed " +
-        s"frontier $frontier under $root — a frontier this state " +
-        "never produced (wrong root, or a reset state); re-baseline " +
-        "the consumer with a full export")
+    val frontier = FoldStore.pinFrontier("readViewLog", root, markers, afterId,
+      upTo, s"readViewLog: no committed state under $root",
+      logStart = Some(logFrom))
     val pin = graft.sources.PartitionedStore.readPin(fs, rootPath)
       .getOrElse(throw new IllegalStateException(
         s"readViewLog: no layout pin under $root — not a cdcRollup " +
@@ -1724,17 +1573,9 @@ object CdcRollup {
     val keyCols = keys.map(_._1)
     val stateCols = states.map(_._1)
     val logDir = new Path(rootPath, layer)
-    val inRange =
-      if (!fs.exists(logDir)) Nil
-      else fs.listStatus(logDir).toSeq.map(_.getPath)
-        .filter { p =>
-          val n = p.getName
-          n.startsWith("b") && n.length > 1 &&
-            n.drop(1).forall(_.isDigit) && {
-              val id = n.drop(1).toLong
-              markers.committed(id) && id > afterId && id <= frontier
-            }
-        }
+    val inRange = FoldStore.entries(fs, rootPath, Nil, Seq(layer))
+      .filter(e => !e.staging && markers.committed(e.id) &&
+        e.id > afterId && e.id <= frontier)
     // COVERAGE, not just presence: every committed fold in range MUST
     // have its `b<id>` dir (even an empty fold mkdirs one — the
     // coverage witness). A gap is the one wrong-data shape this layer
@@ -1747,7 +1588,7 @@ object CdcRollup {
     // (watermark-subsumed ids carry no per-id witness), which covers
     // the race: a fold recent enough to race the enable is never
     // aged into the watermark yet.
-    val present = inRange.map(_.getName.drop(1).toLong).toSet
+    val present = inRange.map(_.id).toSet
     val gaps = markers.ids
       .filter(id => id > afterId && id <= frontier && !present(id))
     if (gaps.nonEmpty) throw new IllegalStateException(
@@ -1758,7 +1599,7 @@ object CdcRollup {
         "in flight? a hand-deleted dir?); re-baseline the consumer " +
         "with a full export. enableChangeLog requires the " +
         "single-writer discipline: no fold in flight at enable time")
-    val dirs = inRange.filter(p =>
+    val dirs = inRange.map(_.path).filter(p =>
       graft.sources.PartitionedStore.hasDataEntries(fs, p))
     import org.apache.spark.sql.types.{LongType, StringType,
       StructField, StructType}
@@ -1798,13 +1639,10 @@ object CdcRollup {
           .otherwise(lit("changed")).as("change")): _*)
   }
 
-  /** Reap change-log dirs older than the retention window and ADVANCE
-    * `_LOG_FROM_` past everything reaped — the GC face of change-log
-    * mode (an append-only log otherwise grows forever). Crash-safe in
-    * the conservative direction: the new bound is written BEFORE any
-    * dir is deleted (a crash between refuses servable pulls, never
-    * serves a gapped one). Dirs at or below the CURRENT bound are
-    * unreachable (pulls refuse below it) and go regardless of age.
+  /** Reap committed change-log dirs older than the retention window
+    * and ADVANCE `_LOG_FROM_` past everything reaped — the GC face of
+    * change-log mode (an append-only log otherwise grows forever);
+    * bound before delete, see [[FoldStore.reapLog]].
     * @return (deleted dir paths, the bound now in force) */
   def reapChangeLog(spark: SparkSession, root: String,
                     retainMs: Long): (Seq[String], Long) = {
@@ -1815,45 +1653,17 @@ object CdcRollup {
       throw new IllegalStateException(
         s"reapChangeLog under $root: the state is not in change-log " +
           "mode — no log accretes, nothing to reap"))
-    val markers = BatchMarkers.read(fs, rootPath)
-    val cutoff = System.currentTimeMillis() - retainMs
-    val entries = presentLogLayers(fs, rootPath).flatMap { layer =>
-      fs.listStatus(new Path(rootPath, layer)).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("b"))
-        .flatMap { st =>
-          st.getPath.getName.drop(1).toLongOption.map((st, _))
-        }
-        .filter { case (_, id) => markers.committed(id) }
-    }
-    if (entries.isEmpty) return (Nil, logFrom)
-    val aged = entries.filter { case (st, id) =>
-      id > logFrom && st.getModificationTime <= cutoff }
-    val dead = entries.filter { case (_, id) => id <= logFrom }
-    if (aged.isEmpty && dead.isEmpty) return (Nil, logFrom)
-    val newFrom = (logFrom +: aged.map(_._2)).max
-    // bound FIRST, deletions after — every crash window errs
-    // conservative (the reapRetainedVersions discipline)
-    if (newFrom > logFrom)
-      BatchMarkers.writeLogFrom(fs, rootPath, newFrom)
-    val deleted = (aged ++ dead).map { case (st, _) =>
-      fs.delete(st.getPath, true); st.getPath.toString }
-    (deleted, newFrom)
+    FoldStore.reapLog(fs, rootPath, presentLogLayers(fs, rootPath),
+      BatchMarkers.read(fs, rootPath), retainMs, logFrom)
   }
 
   /** Reap retained history older than the retention window and
     * ADVANCE THE FLOOR past everything reaped — the GC face of
-    * retention mode. A version v_i is superseded the moment a later
-    * committed version v_j lands in its bucket; it stays servable
-    * (as-of ids in [v_i, v_j)) until v_j itself is OLDER than the
-    * window — gating on the SUPERSEDING version's age is what makes
-    * "retain X hours of snapshots" true: only ranges whose entire
-    * lifetime predates the window go. Crash-safe in the conservative
-    * direction: the new floor is written BEFORE any version is
-    * deleted (a crash between leaves the floor high with extra
-    * versions — refusing a servable snapshot, never serving a broken
-    * one). The latest committed version of every bucket is never
-    * touched. The advanced GLOBAL floor is the MAX superseding id
+    * retention mode ([[FoldStore.reapSuperseded]]: a version goes
+    * only once its SUPERSEDING version is older than the window, so
+    * "retain X hours of snapshots" holds; floor before delete; a
+    * bucket's latest committed version is never touched). The
+    * advanced GLOBAL floor is the MAX superseding id
     * across every reaped bucket and gates range reads; each reaped
     * bucket also gets a PER-BUCKET floor (its own max superseding
     * id) that gates point lookups — see [[enableRetention]]'s
@@ -1864,55 +1674,14 @@ object CdcRollup {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val floor = readAsofFloor(fs, rootPath).getOrElse(
+    val floor = BatchMarkers.readFloor(fs, rootPath).getOrElse(
       throw new IllegalStateException(
         s"reapRetainedVersions under $root: the state is not in " +
           "retention mode — nothing accretes, nothing to reap " +
           "(cleanOrphanBatchDirs owns crash garbage)"))
-    val markers = BatchMarkers.read(fs, rootPath)
-    val cutoff = System.currentTimeMillis() - retainMs
-    // (path to delete, the superseding id the floor must clear)
-    val doomed = Seq.newBuilder[(Path, Long)]
-    for (layer <- presentLayers(fs, rootPath)) {
-      val dir = new Path(rootPath, layer)
-      if (fs.exists(dir)) fs.listStatus(dir).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("bucket="))
-        .foreach { b =>
-          val chain = fs.listStatus(b.getPath).toSeq
-            .filter { v =>
-              val n = v.getPath.getName
-              n.startsWith("v") && n.length > 1 &&
-                n.drop(1).forall(_.isDigit) &&
-                markers.committed(n.drop(1).toLong)
-            }
-            .sortBy(_.getPath.getName.drop(1).toLong)
-          chain.sliding(2).foreach {
-            case Seq(vi, vj) if vj.getModificationTime <= cutoff =>
-              doomed += ((vi.getPath,
-                vj.getPath.getName.drop(1).toLong))
-            case _ => ()
-          }
-        }
-    }
-    val hits = doomed.result()
-    if (hits.isEmpty) return (Nil, floor)
-    val newFloor = math.max(floor, hits.map(_._2).max)
-    // floor FIRST (writeFloor also clears superseded floor files),
-    // deletions after — every crash window errs conservative
-    if (newFloor > floor)
-      BatchMarkers.writeFloor(fs, rootPath, newFloor)
-    // then PER-BUCKET floors (the same _ASOF_FLOOR_ protocol, inside
-    // each reaped bucket dir): each records the max superseding id
-    // reaped in THAT bucket, so point lookups pruned to cold buckets
-    // can keep serving history the hot buckets' churn already pushed
-    // the global floor past ([[requireServableBuckets]]). Still
-    // before any delete — every crash window errs conservative.
-    hits.groupBy(_._1.getParent).foreach { case (bucketDir, pairs) =>
-      BatchMarkers.writeFloor(fs, bucketDir, pairs.map(_._2).max)
-    }
-    val deleted = hits.map { case (p, _) => fs.delete(p, true); p.toString }
-    (deleted, newFloor)
+    FoldStore.reapSuperseded(fs, rootPath, presentLayers(fs, rootPath),
+      BatchMarkers.read(fs, rootPath), retainMs, floor,
+      bucketFloors = true)
   }
 
   /** Bucket-pruned POINT LOOKUP into the SCD1 base — the serving
@@ -1965,7 +1734,7 @@ object CdcRollup {
       // churn ([[requireServableBuckets]])
       asOf.foreach(requireServableBuckets(fs, rootPath, _, "base",
         touched))
-      readLatest(spark, fs, rootPath, "base", Some(touched),
+      FoldStore.read(spark, fs, rootPath, "base", Some(touched),
         BatchMarkers.read(fs, rootPath), asOf)
         .map(_.join(probe, pkCols, "left_semi"))
     } finally { probe.unpersist(); () }
@@ -2016,7 +1785,7 @@ object CdcRollup {
       // churn ([[requireServableBuckets]])
       asOf.foreach(requireServableBuckets(fs, rootPath, _, "agg",
         touched))
-      readLatest(spark, fs, rootPath, "agg", Some(touched),
+      FoldStore.read(spark, fs, rootPath, "agg", Some(touched),
         BatchMarkers.read(fs, rootPath), asOf)
         .map { agg =>
           val cond = groupCols.map(c => agg(c) <=> probe(c))
@@ -2054,63 +1823,12 @@ object CdcRollup {
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(rootPath)) return Nil
     val markers = BatchMarkers.read(fs, rootPath)
-    val frontier = markers.maxCommitted.getOrElse(Long.MinValue)
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    val deleted = Seq.newBuilder[String]
-    def dead(id: Long, mtime: Long): Boolean =
-      !markers.committed(id) && (id <= frontier || mtime <= cutoff)
-    // a staging shell is garbage as soon as its id can never promote
-    // again: committed (the promote already ran and a replay no-ops
-    // first) or at/below the frontier (monotone refusal); above the
-    // frontier and uncommitted it may be the in-flight fold — age gate
-    def deadStaging(id: Long, mtime: Long): Boolean =
-      markers.committed(id) || id <= frontier || mtime <= cutoff
-    for (layer <- presentLayers(fs, rootPath)) {
-      val dir = new Path(rootPath, layer)
-      if (fs.exists(dir)) fs.listStatus(dir).toSeq
-        .filter(_.isDirectory).foreach { st =>
-          val name = st.getPath.getName
-          if (name.startsWith(".staging"))
-            name.stripPrefix(".staging").toLongOption.foreach { id =>
-              if (deadStaging(id, st.getModificationTime)) {
-                fs.delete(st.getPath, true)
-                deleted += st.getPath.toString
-              }
-            }
-          else if (name.startsWith("bucket="))
-            fs.listStatus(st.getPath).toSeq.filter(_.isDirectory)
-              .foreach { v =>
-                val vn = v.getPath.getName
-                if (vn.startsWith("v"))
-                  vn.drop(1).toLongOption.foreach { id =>
-                    if (dead(id, v.getModificationTime)) {
-                      fs.delete(v.getPath, true)
-                      deleted += v.getPath.toString
-                    }
-                  }
-              }
-        }
-    }
-    // the change-log layers strand the same two shapes (staging
-    // shells and uncommitted b<id> dirs) under their own layout
-    for (layer <- presentLogLayers(fs, rootPath))
-      fs.listStatus(new Path(rootPath, layer)).toSeq
-        .filter(_.isDirectory).foreach { st =>
-          val name = st.getPath.getName
-          val id =
-            if (name.startsWith(".staging"))
-              name.stripPrefix(".staging").toLongOption
-                .filter(i => deadStaging(i, st.getModificationTime))
-            else if (name.startsWith("b"))
-              name.drop(1).toLongOption
-                .filter(i => dead(i, st.getModificationTime))
-            else None
-          id.foreach { _ =>
-            fs.delete(st.getPath, true)
-            deleted += st.getPath.toString
-          }
-        }
-    deleted.result()
+    // ids at or below the committed frontier can never commit later
+    val below = markers.maxCommitted.getOrElse(Long.MinValue) + 1
+    FoldStore.sweep(fs, FoldStore.entries(fs, rootPath,
+        presentLayers(fs, rootPath), presentLogLayers(fs, rootPath)))(
+      FoldStore.monotoneDead(markers, below,
+        System.currentTimeMillis() - olderThanMs))
   }
 
   /** Collapse AGED committed per-batch markers into ONE
@@ -2140,51 +1858,9 @@ object CdcRollup {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(rootPath)) return None
-    val markers = BatchMarkers.read(fs, rootPath)
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    val aged = markers.ids.filter(id => markers.mtimes(id) <= cutoff)
-    val w = (markers.watermark.toSeq ++ aged).maxOption
-    // fold when the frontier advances OR a prior fold's crash left
-    // subsumed per-id markers behind (foldInto is idempotent)
-    w.filter(v => markers.watermark.forall(_ < v) ||
-        markers.ids.exists(_ <= v)).map { frontier =>
-      for (layer <- presentLayers(fs, rootPath)) {
-        val dir = new Path(rootPath, layer)
-        if (fs.exists(dir)) fs.listStatus(dir).toSeq
-          .filter(_.isDirectory).foreach { st =>
-            val name = st.getPath.getName
-            if (name.startsWith(".staging"))
-              name.stripPrefix(".staging").toLongOption
-                .filter(id => id <= frontier && !markers.committed(id))
-                .foreach(_ => fs.delete(st.getPath, true))
-            else if (name.startsWith("bucket="))
-              fs.listStatus(st.getPath).toSeq.filter(_.isDirectory)
-                .filter(_.getPath.getName.startsWith("v"))
-                .foreach { v =>
-                  v.getPath.getName.drop(1).toLongOption
-                    .filter(id => id <= frontier && !markers.committed(id))
-                    .foreach(_ => fs.delete(v.getPath, true))
-                }
-          }
-      }
-      // uncommitted change-log dirs at or below the watermark would
-      // read as committed after the fold — sweep them first too
-      for (layer <- presentLogLayers(fs, rootPath))
-        fs.listStatus(new Path(rootPath, layer)).toSeq
-          .filter(_.isDirectory).foreach { st =>
-            val name = st.getPath.getName
-            val id =
-              if (name.startsWith(".staging"))
-                name.stripPrefix(".staging").toLongOption
-              else if (name.startsWith("b")) name.drop(1).toLongOption
-              else None
-            id.filter(i => i <= frontier && !markers.committed(i))
-              .foreach(_ => fs.delete(st.getPath, true))
-          }
-      BatchMarkers.foldInto(fs, rootPath, markers, frontier)
-      frontier
-    }
+    FoldStore.foldMarkers(fs, rootPath, olderThanMs)(
+      FoldStore.entries(fs, rootPath, presentLayers(fs, rootPath),
+        presentLogLayers(fs, rootPath)))
   }
 
   /** Compact a long-lived state into a FRESH root: the latest
@@ -2328,7 +2004,7 @@ object CdcRollup {
     }
     for ((layer, bucketOf) <- Seq("base" -> baseBucket,
         "agg" -> aggBucket, "grp" -> aggBucket) ++ auxBuckets)
-      readLatest(spark, fs, rootPath, layer, None, srcMarkers).foreach { df0 =>
+      FoldStore.read(spark, fs, rootPath, layer, None, srcMarkers).foreach { df0 =>
         // schema evolution: the existing images gain the added
         // columns as typed NULLs (base only — the derived layers
         // never carry payload columns outside group/pk/minMax)
@@ -2341,7 +2017,7 @@ object CdcRollup {
         df.withColumn("__bucket", bucketOf)
           .write.mode("overwrite").partitionBy("__bucket")
           .parquet(new Path(freshPath, s"$layer/.staging0").toString)
-        promoteStaged(fs, freshPath, layer, 0L)
+        FoldStore.promote(fs, freshPath, layer, 0L, "__bucket")
       }
     // a declared layer whose source held NO committed data (every row
     // retracted) still gets its dir: the pin promises the layer, and
@@ -2363,7 +2039,7 @@ object CdcRollup {
     // crash window would leave a committed root with retention
     // silently OFF — conservative (requireServable refuses) but a
     // dropped property.
-    if (readAsofFloor(fs, rootPath).isDefined) {
+    if (BatchMarkers.readFloor(fs, rootPath).isDefined) {
       // seed = floor = frontier: the collapse destroyed every chain,
       // so per-bucket lookups may not reach below it either
       BatchMarkers.writeSeed(fs, freshPath,
@@ -2391,22 +2067,12 @@ object CdcRollup {
         BatchMarkers.writeLogFrom(fs, freshPath,
           srcMarkers.maxCommitted.getOrElse(0L))
       } else {
-        for (ld <- logDirs; srcLog = new Path(rootPath, ld)
-            if fs.exists(srcLog))
-          fs.listStatus(srcLog).toSeq.map(_.getPath)
-            .filter { p =>
-              val n = p.getName
-              n.startsWith("b") && n.length > 1 &&
-                n.drop(1).forall(_.isDigit) && {
-                  val id = n.drop(1).toLong
-                  id > logFrom && srcMarkers.committed(id)
-                }
-            }
-            .foreach { p =>
-              org.apache.hadoop.fs.FileUtil.copy(fs, p, fs,
-                new Path(freshPath, s"$ld/${p.getName}"), false,
-                spark.sessionState.newHadoopConf())
-            }
+        for (ld <- logDirs; e <- FoldStore.entries(fs, rootPath, Nil,
+            Seq(ld)) if !e.staging && e.id > logFrom &&
+            srcMarkers.committed(e.id))
+          org.apache.hadoop.fs.FileUtil.copy(fs, e.path, fs,
+            new Path(freshPath, s"$ld/${e.path.getName}"), false,
+            spark.sessionState.newHadoopConf())
         BatchMarkers.writeLogFrom(fs, freshPath, logFrom)
       }
     }
@@ -2493,9 +2159,9 @@ object CdcRollup {
       s"rebuildDerivedLayer: layer '$layer' under $root holds " +
         "entries — a present layer is live state and repair only " +
         "rebuilds MISSING ones; re-shard via compact instead")
-    val baseOpt = readLatest(spark, fs, rootPath, "base", None, markers)
+    val baseOpt = FoldStore.read(spark, fs, rootPath, "base", None, markers)
     fs.mkdirs(layerDir)
-    val retained = readAsofFloor(fs, rootPath).isDefined
+    val retained = BatchMarkers.readFloor(fs, rootPath).isDefined
     val written = baseOpt match {
       case None => 0L
       case Some(base) =>
@@ -2531,7 +2197,7 @@ object CdcRollup {
           cached.withColumn("__bucket", bucketOf)
             .write.mode("overwrite").partitionBy("__bucket")
             .parquet(staging.toString)
-          val buckets = promoteStaged(fs, rootPath, layer, frontier)
+          val buckets = FoldStore.promote(fs, rootPath, layer, frontier, "__bucket")
           if (retained) buckets.foreach { b =>
             BatchMarkers.writeFloor(fs,
               new Path(rootPath, s"$layer/bucket=$b"), frontier)
@@ -2558,41 +2224,6 @@ object CdcRollup {
   }
 
   // ---- layout plumbing ------------------------------------------------
-
-  /** Latest COMMITTED version dir of each bucket of `layer` —
-    * restricted to `buckets` when given, and to versions with id <=
-    * `asOf` when given (the snapshot-read resolution: the bucket's
-    * state AS OF that batch). Empty version dirs (a touched bucket
-    * whose rows were all retracted) contribute nothing. Committedness
-    * resolves against the ONE marker listing the caller already
-    * holds. None when nothing committed holds data. */
-  private def readLatest(spark: SparkSession,
-                         fs: org.apache.hadoop.fs.FileSystem,
-                         root: org.apache.hadoop.fs.Path, layer: String,
-                         buckets: Option[Set[Int]],
-                         markers: BatchMarkers.Markers,
-                         asOf: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(root, layer)
-    if (!fs.exists(dir)) return None
-    val dirs = fs.listStatus(dir).toSeq.map(_.getPath)
-      .filter { b =>
-        b.getName.startsWith("bucket=") &&
-          buckets.forall(bs => b.getName.stripPrefix("bucket=")
-            .toIntOption.exists(bs.contains))
-      }
-      .flatMap { b =>
-        fs.listStatus(b).toSeq.map(_.getPath)
-          .filter(v => v.getName.startsWith("v") &&
-            v.getName.drop(1).forall(_.isDigit) && v.getName.length > 1 &&
-            markers.committed(v.getName.drop(1).toLong) &&
-            asOf.forall(v.getName.drop(1).toLong <= _))
-          .sortBy(_.getName.drop(1).toLong).lastOption
-      }
-      .filter(v => graft.sources.PartitionedStore.hasDataEntries(fs, v))
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs.map(_.toString): _*))
-  }
 
   /** Stage each layer's new touched-bucket content (hidden dir,
     * partitioned by bucket), promote the children to
@@ -2633,7 +2264,7 @@ object CdcRollup {
           .write.mode("overwrite").partitionBy("__bucket")
           .parquet(new Path(root, s"$layer/.staging$batchId").toString)
       }
-      val written = promoteStaged(fs, root, layer, batchId)
+      val written = FoldStore.promote(fs, root, layer, batchId, "__bucket")
       // a touched bucket with no surviving rows still needs a NEW
       // latest version, else its old content would resurface
       (touched -- written).foreach { b =>
@@ -2659,33 +2290,9 @@ object CdcRollup {
       val bDir = new Path(root, s"$layer/bucket=$b")
       if (fs.exists(bDir))
         fs.listStatus(bDir).toSeq.map(_.getPath)
-          .filter(v => v.getName.startsWith("v") &&
-            v.getName.drop(1).forall(_.isDigit) &&
-            v.getName.drop(1).toLongOption.exists(_ < batchId))
+          .filter(v => FoldStore.versionId(v.getName).exists(_ < batchId))
           .foreach(v => fs.delete(v, true))
     }
   }
 
-  /** Rename `.staging<id>/__bucket=<k>` children into their
-    * `bucket=<k>/v<id>` homes; returns the bucket ids promoted. */
-  private def promoteStaged(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.Path, layer: String,
-                            batchId: Long): Set[Int] = {
-    import org.apache.hadoop.fs.Path
-    val staging = new Path(root, s"$layer/.staging$batchId")
-    if (!fs.exists(staging)) return Set.empty
-    val promoted = fs.listStatus(staging).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("__bucket="))
-      .map { child =>
-        val b = child.getName.stripPrefix("__bucket=").toInt
-        val home = new Path(root, s"$layer/bucket=$b")
-        fs.mkdirs(home)
-        val to = new Path(home, s"v$batchId")
-        if (!fs.rename(child, to))
-          throw new java.io.IOException(s"cdcRollup: rename failed: $to")
-        b
-      }.toSet
-    fs.delete(staging, true) // empty shell (or non-bucket leftovers)
-    promoted
-  }
 }

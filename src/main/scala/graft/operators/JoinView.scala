@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.state.FoldStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -243,28 +244,16 @@ object JoinView {
     if (!fs.exists(rootPath)) return Nil
     val markers = BatchMarkers.read(fs, rootPath)
     val cutoff = System.currentTimeMillis() - olderThanMs
-    val deleted = Seq.newBuilder[String]
-    for (side <- Seq("a", "b", "view")) {
-      val dir = new Path(rootPath, side)
-      if (fs.exists(dir)) fs.listStatus(dir).toSeq
-        .filter(_.isDirectory).foreach { st =>
-          val name = st.getPath.getName
-          val staged = name.startsWith(".staging") &&
-            name.stripPrefix(".staging").forall(_.isDigit) &&
-            name.length > ".staging".length
-          // committedness resolves marker-or-watermark: a d<id> whose
-          // marker was folded into `_APPLIED_UPTO_` is live state
-          val unmarked = name.startsWith("d") && name.length > 1 &&
-            name.drop(1).forall(_.isDigit) &&
-            !markers.committed(name.drop(1).toLong)
-          if ((staged || unmarked) && st.getModificationTime <= cutoff) {
-            fs.delete(st.getPath, true)
-            deleted += st.getPath.toString
-          }
-        }
-    }
-    deleted.result()
+    // committedness resolves marker-or-watermark: a d<id> whose marker
+    // was folded into `_APPLIED_UPTO_` is live state
+    FoldStore.sweep(fs, batchEntries(fs, rootPath))(e =>
+      (e.staging || !markers.committed(e.id)) && e.mtime <= cutoff)
   }
+
+  /** Every `.staging<id>` and `d<id>` entry of the three layers. */
+  private def batchEntries(fs: org.apache.hadoop.fs.FileSystem,
+                           root: org.apache.hadoop.fs.Path) =
+    FoldStore.entries(fs, root, Nil, Seq("a", "b", "view"), prefix = "d")
 
   /** Collapse AGED committed per-batch markers into ONE
     * `_APPLIED_UPTO_<w>` watermark — year-long streams stay listable
@@ -285,32 +274,8 @@ object JoinView {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(rootPath)) return None
-    val markers = BatchMarkers.read(fs, rootPath)
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    val aged = markers.ids.filter(id => markers.mtimes(id) <= cutoff)
-    val w = (markers.watermark.toSeq ++ aged).maxOption
-    // fold when the frontier advances OR a prior fold's crash left
-    // subsumed per-id markers behind (foldInto is idempotent)
-    w.filter(v => markers.watermark.forall(_ < v) ||
-        markers.ids.exists(_ <= v)).map { frontier =>
-      for (side <- Seq("a", "b", "view")) {
-        val dir = new Path(rootPath, side)
-        if (fs.exists(dir)) fs.listStatus(dir).toSeq
-          .filter(_.isDirectory).foreach { st =>
-            val name = st.getPath.getName
-            val id: Option[Long] =
-              if (name.startsWith(".staging"))
-                name.stripPrefix(".staging").toLongOption
-              else if (name.startsWith("d")) name.drop(1).toLongOption
-              else None
-            id.filter(i => i <= frontier && !markers.committed(i))
-              .foreach(_ => fs.delete(st.getPath, true))
-          }
-      }
-      BatchMarkers.foldInto(fs, rootPath, markers, frontier)
-      frontier
-    }
+    FoldStore.foldMarkers(fs, rootPath, olderThanMs)(
+      batchEntries(fs, rootPath))
   }
 
   /** Bucket-pruned POINT LOOKUP into the maintained view — the
@@ -427,7 +392,8 @@ object JoinView {
     val markers = BatchMarkers.read(fs, rootPath)
     val dirs = committedLeafDirs(fs, rootPath, "view", None, markers,
       toId.orElse(markers.maxCommitted))
-      .filter(_.getParent.getName.drop(1).toLong > afterId)
+      .filter(p => FoldStore.idOf("d", p.getParent.getName)
+        .exists(_ > afterId))
     if (dirs.isEmpty) None
     else Some(spark.read.parquet(dirs.map(_.toString): _*))
   }
@@ -473,9 +439,7 @@ object JoinView {
       (if (!fs.exists(new Path(rootPath, layer))) Nil
       else fs.listStatus(new Path(rootPath, layer)).toSeq
         .map(_.getPath.getName)
-        .filter(n => n.startsWith("d") && n.length > 1 &&
-          n.drop(1).forall(_.isDigit))
-        .map(_.drop(1).toLong).filter(markers.committed)).toSet
+        .flatMap(FoldStore.idOf("d", _)).filter(markers.committed)).toSet
     val (aIds, bIds, vIds) =
       (committedIds("a"), committedIds("b"), committedIds("view"))
     val all = aIds ++ bIds ++ vIds + batchId
@@ -778,12 +742,8 @@ object JoinView {
     if (!fs.exists(dir)) return Nil
     val batchDirs = fs.listStatus(dir).toSeq.filter(_.isDirectory)
       .map(_.getPath)
-      .filter { p =>
-        p.getName.startsWith("d") && p.getName.length > 1 &&
-          p.getName.drop(1).forall(_.isDigit) &&
-          markers.committed(p.getName.drop(1).toLong) &&
-          asOf.forall(p.getName.drop(1).toLong <= _)
-      }
+      .filter(p => FoldStore.idOf("d", p.getName)
+        .exists(id => markers.committed(id) && asOf.forall(id <= _)))
       .sortBy(_.getName)
     batchDirs.flatMap { d =>
       fs.listStatus(d).toSeq.filter(_.isDirectory).map(_.getPath)

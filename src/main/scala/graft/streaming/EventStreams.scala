@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.state.FoldStore
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -1377,26 +1378,11 @@ object EventStreams {
   private def writeHistoryVersion(fs: org.apache.hadoop.fs.FileSystem,
                                   root: org.apache.hadoop.fs.Path,
                                   id: Long, df: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val staging = new Path(root, s"history/.staging$id")
-    fs.delete(staging, true)
-    val histDir = new Path(root, "history")
-    if (fs.exists(histDir))
-      fs.listStatus(histDir).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("bucket="))
-        .foreach(b => fs.delete(new Path(b, s"v$id"), true))
+    FoldStore.dropVersion(fs, root, "history", id)
     df.write.mode("overwrite").partitionBy("bucket")
-      .parquet(staging.toString)
-    fs.listStatus(staging).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("bucket="))
-      .foreach { child =>
-        val home = new Path(root, s"history/${child.getName}")
-        fs.mkdirs(home)
-        val to = new Path(home, s"v$id")
-        if (!fs.rename(child, to))
-          throw new java.io.IOException(s"rollup history: rename failed: $to")
-      }
-    fs.delete(staging, true)
+      .parquet(new org.apache.hadoop.fs.Path(root, s"history/.staging$id")
+        .toString)
+    FoldStore.promote(fs, root, "history", id, "bucket"); ()
   }
 
   /** Switch a bucketed rollup state into AS-OF RETENTION mode — the
@@ -1457,6 +1443,23 @@ object EventStreams {
     graft.operators.BatchMarkers.readFloor(fs, root)
   }
 
+  /** The bucketed rollup's `nBuckets|keys|valueCol` pin: (bucket
+    * count, decoded key columns, raw fields). Throws `missing` when no
+    * pin exists and refuses a malformed one, `what` naming the read. */
+  private def rollupPin(fs: org.apache.hadoop.fs.FileSystem,
+                        root: org.apache.hadoop.fs.Path, statePath: String,
+                        what: String)(missing: => Exception)
+      : (Int, Seq[String], Array[String]) = {
+    val pin = graft.sources.PartitionedStore.readPin(fs, root)
+      .getOrElse(throw missing)
+    val parts = pin.split('|')
+    require(parts.length == 3 && parts(0).toIntOption.exists(_ >= 1),
+      s"$what: unrecognized layout pin '$pin' under $statePath")
+    (parts(0).toInt,
+      parts(1).split(',').toSeq.map(java.net.URLDecoder.decode(_, "UTF-8")),
+      parts)
+  }
+
   /** The RAW monoid state as of `asOf`: per history bucket, the
     * highest committed version with id <= asOf — exactly the state
     * any reader saw right after that batch folded (ids between two
@@ -1471,38 +1474,17 @@ object EventStreams {
     import org.apache.hadoop.fs.Path
     val root = new Path(statePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val floor = graft.operators.BatchMarkers.readFloor(fs, root)
-      .getOrElse(throw new IllegalStateException(
-        s"rollup as-of read under $statePath: the state is not in " +
-          "retention mode — folds keep no history; enable it " +
-          "(enableRollupRetention / CLI kind 'retain') BEFORE the " +
-          "folds whose snapshots you need"))
-    require(asOf >= floor,
-      s"rollup as-of read at batch $asOf under $statePath: retained " +
-        s"history starts at floor $floor — earlier snapshots were " +
-        "never retained (or were reaped); widen the retention window " +
-        "on the gc cadence")
-    val markers = graft.operators.BatchMarkers.read(fs, root)
-    val histDir = new Path(root, "history")
-    if (!fs.exists(histDir)) return None
-    val dirs = fs.listStatus(histDir).toSeq.map(_.getPath)
-      .filter { b =>
-        b.getName.startsWith("bucket=") &&
-          buckets.forall(bs => b.getName.stripPrefix("bucket=")
-            .toIntOption.exists(bs.contains))
-      }
-      .flatMap { b =>
-        fs.listStatus(b).toSeq.map(_.getPath)
-          .filter(v => v.getName.startsWith("v") &&
-            v.getName.length > 1 &&
-            v.getName.drop(1).forall(_.isDigit) &&
-            markers.committed(v.getName.drop(1).toLong) &&
-            v.getName.drop(1).toLong <= asOf)
-          .sortBy(_.getName.drop(1).toLong).lastOption
-      }
-      .filter(v => graft.sources.PartitionedStore.hasDataEntries(fs, v))
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs.map(_.toString): _*))
+    FoldStore.requireFloor(fs, root, asOf,
+      s"rollup as-of read under $statePath: the state is not in " +
+        "retention mode — folds keep no history; enable it " +
+        "(enableRollupRetention / CLI kind 'retain') BEFORE the " +
+        "folds whose snapshots you need",
+      floor => s"rollup as-of read at batch $asOf under $statePath: " +
+        s"retained history starts at floor $floor — earlier snapshots " +
+        "were never retained (or were reaped); widen the retention " +
+        "window on the gc cadence")
+    FoldStore.read(spark, fs, root, "history", buckets,
+      graft.operators.BatchMarkers.read(fs, root), Some(asOf))
   }
 
   /** The FINALIZED rollup view as of `asOf` — [[readRollupStateAsOf]]
@@ -1514,35 +1496,26 @@ object EventStreams {
     import org.apache.hadoop.fs.Path
     val root = new Path(statePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val pin = graft.sources.PartitionedStore.readPin(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"readRollupViewAsOf: no layout pin under $statePath — not a " +
-          "rollup-view state"))
-    val parts = pin.split('|')
-    require(parts.length == 3 && parts(0).toIntOption.exists(_ >= 1),
-      s"readRollupViewAsOf: unrecognized layout pin '$pin' under " +
-        statePath)
-    val keys = parts(1).split(',').toSeq
-      .map(java.net.URLDecoder.decode(_, "UTF-8"))
+    val (_, keys, _) = rollupPin(fs, root, statePath, "readRollupViewAsOf")(
+      new IllegalStateException(s"readRollupViewAsOf: no layout pin " +
+        s"under $statePath — not a rollup-view state"))
     readRollupStateAsOf(spark, statePath, asOf)
       .map(st => graft.operators.IncrementalAgg.finalizeState(st, keys))
   }
 
-  /** The CHANGE SET between two rollup snapshots — the
-    * [[graft.operators.CdcRollup.diffView]] discipline for the plain
-    * bucketed rollup family, closing its last face asymmetry: the
-    * FINALIZED view at `fromId` vs at `toId`, restricted to keys that
-    * actually differ, labeled `added` / `removed` / `changed`. The
-    * rollup answer to "what moved since the run I shipped?"
+  /** The CHANGE SET between two rollup snapshots: the FINALIZED view
+    * at `fromId` vs at `toId`, restricted to keys that actually
+    * differ, labeled `added` / `removed` / `changed`
+    * ([[FoldStore.labelChanges]]). The rollup answer to "what moved
+    * since the run I shipped?"
     *
     * 100 TB shape: the COW version chain itself says which buckets
-    * changed — exactly those holding a committed `v<id>` in
-    * `(fromId, toId]` — so BOTH snapshot reads prune to the changed
-    * buckets ([[readRollupStateAsOf]]'s `buckets`) and the diff costs
-    * O(changed buckets), never two state scans. Keys in untouched
-    * buckets are byte-identical at both snapshots by construction;
-    * keys in touched buckets that merely rode along are compared and
-    * dropped (null-safe on every view column).
+    * changed ([[FoldStore.changedBuckets]]), so BOTH snapshot reads
+    * prune to them and the diff costs O(changed buckets), never two
+    * state scans. Keys in untouched buckets are byte-identical at both
+    * snapshots by construction; keys in touched buckets that merely
+    * rode along are compared and dropped (null-safe on every view
+    * column).
     *
     * Output: key columns, every finalized view column twice
     * (`<col>_from` / `<col>_to`, NULL on the absent side), `change`.
@@ -1557,55 +1530,35 @@ object EventStreams {
       s"diffRollupView: fromId $fromId must be <= toId $toId")
     val root = new Path(statePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val floor = graft.operators.BatchMarkers.readFloor(fs, root)
-      .getOrElse(throw new IllegalStateException(
-        s"diffRollupView under $statePath: the state is not in " +
-          "retention mode — folds keep no history to diff; enable it " +
-          "(enableRollupRetention / CLI kind 'retain') BEFORE the " +
-          "folds whose change sets you need"))
-    require(fromId >= floor,
-      s"diffRollupView from batch $fromId under $statePath: retained " +
-        s"history starts at floor $floor — earlier snapshots were " +
-        "never retained (or were reaped); widen the retention window " +
-        "on the gc cadence")
-    val pin = graft.sources.PartitionedStore.readPin(fs, root)
-      .getOrElse(throw new IllegalStateException(
-        s"diffRollupView: no layout pin under $statePath — not a " +
-          "rollup-view state"))
-    val parts = pin.split('|')
-    require(parts.length == 3 && parts(0).toIntOption.exists(_ >= 1),
-      s"diffRollupView: unrecognized layout pin '$pin' under $statePath")
-    val keys = parts(1).split(',').toSeq
-      .map(java.net.URLDecoder.decode(_, "UTF-8"))
+    FoldStore.requireFloor(fs, root, fromId,
+      s"diffRollupView under $statePath: the state is not in " +
+        "retention mode — folds keep no history to diff; enable it " +
+        "(enableRollupRetention / CLI kind 'retain') BEFORE the " +
+        "folds whose change sets you need",
+      floor => s"diffRollupView from batch $fromId under $statePath: " +
+        s"retained history starts at floor $floor — earlier snapshots " +
+        "were never retained (or were reaped); widen the retention " +
+        "window on the gc cadence")
+    val (_, keys, _) = rollupPin(fs, root, statePath, "diffRollupView")(
+      new IllegalStateException(s"diffRollupView: no layout pin under " +
+        s"$statePath — not a rollup-view state"))
     // version-chain pruning: only buckets holding a committed version
     // in (fromId, toId] can differ between the two snapshots
     val markers = graft.operators.BatchMarkers.read(fs, root)
-    val histDir = new Path(root, "history")
-    val changed: Set[Int] =
-      if (!fs.exists(histDir)) Set.empty
-      else fs.listStatus(histDir).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("bucket="))
-        .filter { b =>
-          fs.listStatus(b).exists { v =>
-            val n = v.getPath.getName
-            n.startsWith("v") && n.length > 1 &&
-              n.drop(1).forall(_.isDigit) && {
-                val id = n.drop(1).toLong
-                markers.committed(id) && id > fromId && id <= toId
-              }
-          }
-        }
-        .flatMap(_.getName.stripPrefix("bucket=").toIntOption).toSet
+    val changed = FoldStore.changedBuckets(fs, root, "history", markers,
+      fromId, toId)
     def snap(asOf: Long): Option[DataFrame] =
       if (changed.isEmpty) None
-      else readRollupStateAsOf(spark, statePath, asOf, Some(changed))
+      else FoldStore.read(spark, fs, root, "history", Some(changed),
+        markers, Some(asOf))
     val fromRaw = snap(fromId)
     val toRaw = snap(toId)
     // the empty diff keeps the full output schema — raw monoid schema
     // from whichever endpoint holds data, else from the chain tip
     // (metadata-only read; runs only on the no-change fast path)
     val rawSchema = fromRaw.orElse(toRaw).map(_.schema).orElse(
-      readRollupStateAsOf(spark, statePath, Long.MaxValue).map(_.schema))
+      FoldStore.read(spark, fs, root, "history", None, markers)
+        .map(_.schema))
       .getOrElse(throw new IllegalStateException(
         s"diffRollupView: nothing committed under $statePath — " +
           "nothing to diff"))
@@ -1616,22 +1569,9 @@ object EventStreams {
       fromRaw.getOrElse(emptyRaw), keys)
     val to = graft.operators.IncrementalAgg.finalizeState(
       toRaw.getOrElse(emptyRaw), keys)
-    val viewCols = from.columns.toSeq.filterNot(keys.contains)
-    val cond = keys.map(c => from(c) <=> to(c)).reduce(_ && _)
-    val joined = from.join(to, cond, "full_outer")
-    // presence flags ride `n` (a count — never NULL on a live row)
-    val inFrom = from("n").isNotNull
-    val inTo = to("n").isNotNull
-    val differs = viewCols.map(c => !(from(c) <=> to(c)))
-      .reduce(_ || _)
-    joined
-      .where((inFrom =!= inTo) || differs)
-      .select((keys.map(c => coalesce(from(c), to(c)).as(c)) ++
-        viewCols.map(c => from(c).as(s"${c}_from")) ++
-        viewCols.map(c => to(c).as(s"${c}_to")) :+
-        when(inFrom && !inTo, lit("removed"))
-          .when(!inFrom && inTo, lit("added"))
-          .otherwise(lit("changed")).as("change")): _*)
+    // presence rides `n` (a count — never NULL on a live row)
+    FoldStore.labelChanges(from, to, keys,
+      from.columns.toSeq.filterNot(keys.contains), "n")
   }
 
   /** The rollup view change set since `afterId` — `diffRollupView
@@ -1652,24 +1592,11 @@ object EventStreams {
     import org.apache.hadoop.fs.Path
     val root = new Path(statePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val rootFrontier = graft.operators.BatchMarkers.read(fs, root)
-      .maxCommitted.getOrElse(throw new IllegalStateException(
-        s"readRollupViewSince: no committed history under $statePath " +
-          "— retention mode commits a root marker per fold; enable " +
-          "it (enableRollupRetention / CLI kind 'retain') first"))
-    upTo.foreach(u => require(u <= rootFrontier,
-      s"readRollupViewSince: the manifest cap $u is AHEAD of the " +
-        s"committed frontier $rootFrontier under $statePath — a " +
-        "group frontier this root never produced (a reset root?); " +
-        "re-baseline"))
-    val frontier = upTo.getOrElse(rootFrontier)
-    // ahead of the frontier refuses LOUD (the cdc-pull discipline): a
-    // silent empty pull would drop the consumer's backlog forever
-    require(afterId <= frontier,
-      s"readRollupViewSince: afterId $afterId is AHEAD of the " +
-        s"committed frontier $frontier under $statePath — a frontier " +
-        "this state never produced (wrong root, or a reset state); " +
-        "re-baseline the consumer with a full export")
+    val frontier = FoldStore.pinFrontier("readRollupViewSince", statePath,
+      graft.operators.BatchMarkers.read(fs, root), afterId, upTo,
+      s"readRollupViewSince: no committed history under $statePath " +
+        "— retention mode commits a root marker per fold; enable " +
+        "it (enableRollupRetention / CLI kind 'retain') first")
     (diffRollupView(spark, statePath, afterId, frontier), frontier)
   }
 
@@ -1773,34 +1700,14 @@ object EventStreams {
           "(enableRollupChangeLog) BEFORE the folds whose changes " +
           "you need"))
     val markers = graft.operators.BatchMarkers.read(fs, root)
-    val rootFrontier = markers.maxCommitted.getOrElse(
-      throw new IllegalStateException(
-        s"readRollupViewLog: no log-witnessed folds under $statePath"))
-    upTo.foreach(u => require(u <= rootFrontier,
-      s"readRollupViewLog: the manifest cap $u is AHEAD of the " +
-        s"witnessed frontier $rootFrontier under $statePath — a " +
-        "group frontier this root never produced (a reset root?); " +
-        "re-baseline"))
-    val frontier = upTo.getOrElse(rootFrontier)
-    require(afterId >= logFrom,
-      s"readRollupViewLog: afterId $afterId is below the change-log " +
-        s"start $logFrom under $statePath — folds at or before it " +
-        "were never logged (mode enabled later) or their dirs were " +
-        "reaped; re-baseline the consumer with a full export")
-    require(afterId <= frontier,
-      s"readRollupViewLog: afterId $afterId is AHEAD of the " +
-        s"witnessed frontier $frontier under $statePath — a frontier " +
-        "this state never produced (wrong root, or a reset state); " +
-        "re-baseline the consumer with a full export")
-    val pin = graft.sources.PartitionedStore.readPin(fs, root)
-      .getOrElse(throw new IllegalStateException(
+    val frontier = FoldStore.pinFrontier("readRollupViewLog", statePath,
+      markers, afterId, upTo,
+      s"readRollupViewLog: no log-witnessed folds under $statePath",
+      witness = "witnessed", logStart = Some(logFrom),
+      logDirs = "their dirs")
+    val (_, keys, _) = rollupPin(fs, root, statePath, "readRollupViewLog")(
+      new IllegalStateException(
         s"readRollupViewLog: no layout pin under $statePath"))
-    val parts = pin.split('|')
-    require(parts.length == 3 && parts(0).toIntOption.exists(_ >= 1),
-      s"readRollupViewLog: unrecognized layout pin '$pin' under " +
-        statePath)
-    val keys = parts(1).split(',').toSeq
-      .map(java.net.URLDecoder.decode(_, "UTF-8"))
     // key + extremum types come from the state's own schema (the
     // rollup pin carries no types); a state with a witnessed fold
     // always has state rows (empty folds witness but add no keys —
@@ -1822,12 +1729,12 @@ object EventStreams {
       keyTypes, stateTypes, markers, afterId, frontier), frontier)
   }
 
-  /** Reap rollup change-log dirs older than the window and ADVANCE
-    * the bound past everything reaped — the
-    * [[graft.operators.CdcRollup.reapChangeLog]] protocol verbatim:
-    * the new bound writes BEFORE any delete (a crash between refuses
-    * servable pulls, never serves a gapped one); dirs at or below
-    * the CURRENT bound are unreachable and go regardless of age.
+  /** Reap witnessed rollup change-log dirs older than the window and
+    * ADVANCE the bound past them ([[FoldStore.reapLog]]). An
+    * unwitnessed dir stays: the fold renames `log/b<id>` in BEFORE its
+    * swap and a replay that finds it skips re-emission, so reaping it
+    * between a crash and the replay would lose the emission and move
+    * the bound past the witnessed frontier.
     * @return (deleted dir paths, the bound now in force) */
   def reapRollupChangeLog(spark: org.apache.spark.sql.SparkSession,
                           statePath: String,
@@ -1839,34 +1746,15 @@ object EventStreams {
       .getOrElse(throw new IllegalStateException(
         s"reapRollupChangeLog under $statePath: the state is not in " +
           "change-log mode — nothing accretes, nothing to reap"))
-    val logDir = new Path(root, "log")
-    if (!fs.exists(logDir)) return (Nil, logFrom)
-    val cutoff = System.currentTimeMillis() - retainMs
-    val entries = fs.listStatus(logDir).toSeq
-      .filter(st => st.getPath.getName.startsWith("b") &&
-        st.getPath.getName.drop(1).nonEmpty &&
-        st.getPath.getName.drop(1).forall(_.isDigit))
-      .map(st => (st.getPath, st.getPath.getName.drop(1).toLong,
-        st.getModificationTime))
-    val doomed = entries.filter { case (_, id, m) =>
-      id <= logFrom || m <= cutoff }
-    if (doomed.isEmpty) return (Nil, logFrom)
-    val newBound = (logFrom +: doomed.map(_._2)).max
-    if (newBound > logFrom)
-      graft.operators.BatchMarkers.writeLogFrom(fs, root, newBound)
-    val deleted = doomed.map { case (p, _, _) =>
-      fs.delete(p, true); p.toString }
-    (deleted, newBound)
+    FoldStore.reapLog(fs, root, Seq("log"),
+      graft.operators.BatchMarkers.read(fs, root), retainMs, logFrom)
   }
 
   /** Reap retained rollup history older than the window and ADVANCE
-    * THE FLOOR past everything reaped — the
-    * [[graft.operators.CdcRollup.reapRetainedVersions]] protocol
-    * verbatim: a version goes only when its SUPERSEDING version is
-    * older than the window, the new floor is written BEFORE any
-    * delete (crash windows refuse servable snapshots, never serve
-    * broken ones), and the latest committed version of every bucket
-    * is never touched. @return (deleted paths, floor in force) */
+    * THE FLOOR past everything reaped ([[FoldStore.reapSuperseded]]:
+    * a version goes only when its superseding version is older than
+    * the window; a bucket's latest committed version is never
+    * touched). @return (deleted paths, floor in force) */
   def reapRollupHistory(spark: org.apache.spark.sql.SparkSession,
                         statePath: String,
                         retainMs: Long): (Seq[String], Long) = {
@@ -1877,53 +1765,25 @@ object EventStreams {
       .getOrElse(throw new IllegalStateException(
         s"reapRollupHistory under $statePath: the state is not in " +
           "retention mode — nothing accretes, nothing to reap"))
-    val markers = graft.operators.BatchMarkers.read(fs, root)
-    val cutoff = System.currentTimeMillis() - retainMs
-    val histDir = new Path(root, "history")
-    if (!fs.exists(histDir)) return (Nil, floor)
-    val doomed = Seq.newBuilder[(Path, Long)]
-    fs.listStatus(histDir).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("bucket="))
-      .foreach { b =>
-        val chain = fs.listStatus(b.getPath).toSeq
-          .filter { v =>
-            val n = v.getPath.getName
-            n.startsWith("v") && n.length > 1 &&
-              n.drop(1).forall(_.isDigit) &&
-              markers.committed(n.drop(1).toLong)
-          }
-          .sortBy(_.getPath.getName.drop(1).toLong)
-        chain.sliding(2).foreach {
-          case Seq(vi, vj) if vj.getModificationTime <= cutoff =>
-            doomed += ((vi.getPath, vj.getPath.getName.drop(1).toLong))
-          case _ => ()
-        }
-      }
-    val hits = doomed.result()
-    if (hits.isEmpty) return (Nil, floor)
-    val newFloor = math.max(floor, hits.map(_._2).max)
-    if (newFloor > floor)
-      graft.operators.BatchMarkers.writeFloor(fs, root, newFloor)
-    val deleted = hits.map { case (p, _) =>
-      fs.delete(p, true); p.toString }
-    (deleted, newFloor)
+    FoldStore.reapSuperseded(fs, root, Seq("history"),
+      graft.operators.BatchMarkers.read(fs, root), retainMs, floor,
+      bucketFloors = false)
   }
 
-  /** Collapse AGED committed history markers into ONE
-    * `_APPLIED_UPTO_<w>` watermark — the
-    * [[graft.operators.CdcRollup.foldMarkers]] discipline for the
-    * retained rollup family (root `_APPLIED_<id>` markers accrete one
-    * per fold in retention mode; the per-bucket swap markers are NOT
-    * touched — they belong to the fold protocol). The age gate keeps
+  /** Collapse AGED committed root markers into ONE
+    * `_APPLIED_UPTO_<w>` watermark ([[FoldStore.foldMarkers]]; root
+    * `_APPLIED_<id>` markers accrete one per fold in retention or
+    * change-log mode; the per-bucket swap markers are NOT touched —
+    * they belong to the fold protocol). The age gate keeps
     * every id inside its replay window on a per-id marker: a replayed
     * frontier fold finishing late must find its own marker absent (so
     * `commitHistory` backfills), never watermark-subsumed — folding
     * only markers older than `olderThanMs` keeps that window open,
     * and anything older is abandoned by the single-writer contract.
-    * Uncommitted history garbage at or below the new watermark is
-    * swept FIRST — after the fold it would read as committed.
-    * @return the watermark written, None when nothing qualifies */
+    * Uncommitted history versions and log dirs at or below the new
+    * watermark are swept FIRST — after the fold they would read as
+    * committed. @return the watermark written, None when nothing
+    * qualifies */
   def foldRollupMarkers(spark: org.apache.spark.sql.SparkSession,
                         statePath: String,
                         olderThanMs: Long = 24L * 3600 * 1000)
@@ -1931,38 +1791,15 @@ object EventStreams {
     import org.apache.hadoop.fs.Path
     val root = new Path(statePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return None
-    val markers = graft.operators.BatchMarkers.read(fs, root)
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    val aged = markers.ids.filter(id => markers.mtimes(id) <= cutoff)
-    val w = (markers.watermark.toSeq ++ aged).maxOption
-    w.filter(v => markers.watermark.forall(_ < v) ||
-        markers.ids.exists(_ <= v)).map { frontier =>
-      val histDir = new Path(root, "history")
-      if (fs.exists(histDir))
-        fs.listStatus(histDir).toSeq.filter(_.isDirectory).foreach { st =>
-          val name = st.getPath.getName
-          if (name.startsWith(".staging"))
-            name.stripPrefix(".staging").toLongOption
-              .filter(id => id <= frontier && !markers.committed(id))
-              .foreach(_ => fs.delete(st.getPath, true))
-          else if (name.startsWith("bucket="))
-            fs.listStatus(st.getPath).toSeq.filter(_.isDirectory)
-              .filter(_.getPath.getName.startsWith("v"))
-              .foreach { v =>
-                v.getPath.getName.drop(1).toLongOption
-                  .filter(id => id <= frontier && !markers.committed(id))
-                  .foreach(_ => fs.delete(v.getPath, true))
-              }
-        }
-      graft.operators.BatchMarkers.foldInto(fs, root, markers, frontier)
-      frontier
-    }
+    FoldStore.foldMarkers(fs, root, olderThanMs)(
+      FoldStore.entries(fs, root, Seq("history"), Seq("log")))
   }
 
-  /** Reap ABANDONED rollup-history garbage — staging shells and
-    * uncommitted `v<id>` dirs of batch ids the scheduler will never
-    * replay. An id STRICTLY below the `_LAST_BATCH` frontier can
+  /** Reap ABANDONED rollup-history garbage — staging shells,
+    * uncommitted `v<id>` versions and unwitnessed `log/b<id>` dirs of
+    * batch ids the scheduler will never replay
+    * ([[FoldStore.monotoneDead]]). An id STRICTLY below the
+    * `_LAST_BATCH` frontier can
     * never fold again (the monotone guard refuses it), so its
     * garbage goes regardless of age; the frontier id itself may be a
     * mid-replay fold and anything above it in-flight — those only go
@@ -1975,38 +1812,11 @@ object EventStreams {
     import org.apache.hadoop.fs.Path
     val root = new Path(statePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val histDir = new Path(root, "history")
-    if (!fs.exists(histDir)) return Nil
-    val markers = graft.operators.BatchMarkers.read(fs, root)
-    val frontier = readLastBatch(fs, root).getOrElse(Long.MinValue)
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    def dead(id: Long, mtime: Long): Boolean =
-      !markers.committed(id) && (id < frontier || mtime <= cutoff)
-    val deleted = Seq.newBuilder[String]
-    fs.listStatus(histDir).toSeq.filter(_.isDirectory).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith(".staging"))
-        name.stripPrefix(".staging").toLongOption.foreach { id =>
-          if (markers.committed(id) || id < frontier ||
-              st.getModificationTime <= cutoff) {
-            fs.delete(st.getPath, true)
-            deleted += st.getPath.toString
-          }
-        }
-      else if (name.startsWith("bucket="))
-        fs.listStatus(st.getPath).toSeq.filter(_.isDirectory)
-          .foreach { v =>
-            val vn = v.getPath.getName
-            if (vn.startsWith("v"))
-              vn.drop(1).toLongOption.foreach { id =>
-                if (dead(id, v.getModificationTime)) {
-                  fs.delete(v.getPath, true)
-                  deleted += v.getPath.toString
-                }
-              }
-          }
-    }
-    deleted.result()
+    FoldStore.sweep(fs, FoldStore.entries(fs, root, Seq("history"),
+        Seq("log")))(
+      FoldStore.monotoneDead(graft.operators.BatchMarkers.read(fs, root),
+        readLastBatch(fs, root).getOrElse(Long.MinValue),
+        System.currentTimeMillis() - olderThanMs))
   }
 
   /** Bucket-pruned POINT LOOKUP into a bucketed rollup state — the
@@ -2032,17 +1842,10 @@ object EventStreams {
     import org.apache.hadoop.fs.Path
     val root = new Path(statePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val pin = graft.sources.PartitionedStore.readPin(fs, root).getOrElse(
-      throw new graft.model.UserException(
-        s"lookupRollupState: no layout pin under $statePath — not a " +
-          "rollup-view state"))
-    val parts = pin.split('|')
-    require(parts.length == 3 && parts(0).toIntOption.exists(_ >= 1),
-      s"lookupRollupState: unrecognized layout pin '$pin' under " +
-        statePath)
-    val keyCols = parts(1).split(',').toSeq
-      .map(java.net.URLDecoder.decode(_, "UTF-8"))
-    val nBuckets = parts(0).toInt
+    val (nBuckets, keyCols, _) =
+      rollupPin(fs, root, statePath, "lookupRollupState")(
+        new graft.model.UserException(s"lookupRollupState: no layout " +
+          s"pin under $statePath — not a rollup-view state"))
     require(keys.columns.sorted.toSeq == keyCols.sorted,
       s"lookupRollupState: the key frame must carry exactly the " +
         s"pinned key columns (${keyCols.mkString(", ")}), got " +
@@ -2122,17 +1925,11 @@ object EventStreams {
     val root = new Path(statePath)
     val freshRoot = new Path(freshPath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val pin = graft.sources.PartitionedStore.readPin(fs, root).getOrElse(
-      throw new graft.model.UserException(
-        s"compactRollupStateTo: no layout pin under $statePath — not a " +
-          "rollup-view state"))
-    val parts = pin.split('|')
-    require(parts.length == 3 && parts(0).toIntOption.exists(_ >= 1),
-      s"compactRollupStateTo: unrecognized layout pin '$pin' under " +
-        statePath)
-    val keys = parts(1).split(',').toSeq
-      .map(java.net.URLDecoder.decode(_, "UTF-8"))
-    val nB = nBuckets.getOrElse(parts(0).toInt)
+    val (pinned, keys, parts) =
+      rollupPin(fs, root, statePath, "compactRollupStateTo")(
+        new graft.model.UserException(s"compactRollupStateTo: no layout " +
+          s"pin under $statePath — not a rollup-view state"))
+    val nB = nBuckets.getOrElse(pinned)
     require(nB >= 1, s"nBuckets must be >= 1, got $nB")
     val cur = new Path(root, "state")
     require(fs.exists(cur),

@@ -40,4 +40,26 @@ class ContractSpec extends AnyFunSuite with Matchers {
       }
     }
   }
+
+  test("only graft.state.FoldStore parses version-dir names") {
+    // the version-chain layout (`v<id>`, `b<id>`, `d<id>`) is decided
+    // once, in FoldStore; a second parser re-forks the protocol
+    val shape = """startsWith\("v"\)|drop\(1\)\.(forall\(_\.isDigit\)|toLong)""".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val owner = root.resolve("graft/state/FoldStore.scala")
+    val files = java.nio.file.Files.walk(root).iterator()
+    val offenders = Seq.newBuilder[String]
+    while (files.hasNext) {
+      val f = files.next()
+      if (f.toString.endsWith(".scala") && f != owner) {
+        val lines = java.nio.file.Files.readAllLines(f).toArray
+        lines.zipWithIndex.foreach { case (l, i) =>
+          if (shape.findFirstIn(l.toString).isDefined)
+            offenders += s"${root.relativize(f)}:${i + 1}"
+        }
+      }
+    }
+    java.nio.file.Files.exists(owner) shouldBe true
+    offenders.result() shouldBe empty
+  }
 }

@@ -93,4 +93,21 @@ class JdbcQualifiedNameSpec extends SparkSpec {
     colType("APP", "JM", "v") shouldBe "VARCHAR(40)"
     temps shouldBe empty
   }
+
+  test("cleanOrphanTemps drops a stranded stage in another schema; " +
+      "a real table there and a non-hex _temp_ name stay") {
+    exec("CREATE SCHEMA orph",
+      "CREATE TABLE orph.ot (\"id\" BIGINT)",
+      "CREATE TABLE orph.ot_temp_0badf00d (\"id\" BIGINT)",
+      "CREATE TABLE orph.x_temp_name (\"id\" BIGINT)",
+      "CREATE TABLE APP.oy_temp_deadbeef (\"id\" BIGINT)")
+    val s = sink()
+    s.cleanOrphanTemps().map(_.toLowerCase) should contain allOf (
+      "orph.ot_temp_0badf00d", "oy_temp_deadbeef")
+    s.tableExists("orph.ot_temp_0badf00d") shouldBe false
+    s.tableExists("APP.oy_temp_deadbeef") shouldBe false
+    s.tableExists("orph.ot") shouldBe true
+    s.tableExists("orph.x_temp_name") shouldBe true
+    exec("DROP TABLE orph.x_temp_name", "DROP TABLE orph.ot")
+  }
 }

@@ -419,4 +419,31 @@ class RollupHistorySpec extends SparkSpec {
       .select(col("g"), col("n"), col("total"), col("vmin"),
         col("vmax"))) shouldBe oneShot(b0, b1)
   }
+
+  test("a change-log reap between a crash and its replay keeps the " +
+      "unwitnessed emission: the replay completes and a pull from the " +
+      "old frontier equals diffRollupView") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val root = tmpRoot(); val ahead = tmpRoot(); val twin = tmpRoot()
+    EventStreams.enableRollupChangeLog(spark, root) shouldBe -1L
+    EventStreams.enableRollupChangeLog(spark, ahead) shouldBe -1L
+    EventStreams.enableRollupRetention(spark, twin) shouldBe -1L
+    val b0 = batch(("a", 10.0), ("b", 20.0))
+    val b1 = batch(("a", 1.0), ("c", 30.0))
+    val b2 = batch(("a", 2.0), ("d", 4.0))
+    Seq(root, ahead, twin).foreach { r => fold(r, 0L, b0); fold(r, 1L, b1) }
+    fold(ahead, 2L, b2); fold(twin, 2L, b2)
+    // the crash: batch 2's emission is renamed in (a pure function of
+    // the old state and the batch, identical on every attempt) but its
+    // swap and witness never landed
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(root).getFileSystem(conf)
+    FileUtil.copy(fs, new Path(ahead, "log/b2"), fs,
+      new Path(root, "log/b2"), false, conf) shouldBe true
+    EventStreams.reapRollupChangeLog(spark, root, 0L)._2 shouldBe 1L
+    fs.exists(new Path(root, "log/b2")) shouldBe true
+    fold(root, 2L, b2) // the replay finds the dir and skips re-emission
+    rows(EventStreams.readRollupViewLog(spark, root, 1L).orderBy("g")) shouldBe
+      rows(EventStreams.diffRollupView(spark, twin, 1L, 2L).orderBy("g"))
+  }
 }
