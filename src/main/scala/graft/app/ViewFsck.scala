@@ -294,16 +294,17 @@ object ViewFsck {
                     "crashed best-effort reap left supersedees; the " +
                     "next fold touching the bucket (or compact) " +
                     "clears them")
-              } else if (name.startsWith(".staging")) {
-                val id = name.stripPrefix(".staging").toLongOption
-                check(id.exists(i => markers.committed(i) ||
-                    frontier.exists(i <= _)), error = false,
-                  s"cdcRollup/$layer/$name: staging shell that can " +
-                    "never promote (committed or below the frontier) " +
-                    "— gc sweeps it")
-              } else
-                check(errorWhen = true, error = false,
-                  s"cdcRollup/$layer/$name: unrecognized entry")
+              } else FoldStore.stagingId(name) match {
+                case Some(id) =>
+                  check(markers.committed(id) || frontier.exists(id <= _),
+                    error = false,
+                    s"cdcRollup/$layer/$name: staging shell that can " +
+                      "never promote (committed or below the frontier) " +
+                      "— gc sweeps it")
+                case None =>
+                  check(errorWhen = true, error = false,
+                    s"cdcRollup/$layer/$name: unrecognized entry")
+              }
             }
         }
         // retention invariants: at most one floor; floor <= frontier
@@ -413,20 +414,19 @@ object ViewFsck {
               fs.listStatus(ldP).toSeq.filter(_.isDirectory)
                 .foreach { st =>
                   val n = st.getPath.getName
-                  if (n.startsWith(".staging")) {
-                    val id = n.stripPrefix(".staging").toLongOption
-                    check(id.exists(i => markers.committed(i) ||
-                        frontier.exists(i <= _)), error = false,
-                      s"cdcRollup/$ld/$n: staging shell that can " +
-                        "never promote — gc sweeps it")
-                  } else FoldStore.idOf("b", n) match {
-                    case Some(id) =>
+                  (FoldStore.stagingId(n), FoldStore.idOf("b", n)) match {
+                    case (Some(id), _) =>
+                      check(markers.committed(id) ||
+                          frontier.exists(id <= _), error = false,
+                        s"cdcRollup/$ld/$n: staging shell that can " +
+                          "never promote — gc sweeps it")
+                    case (_, Some(id)) =>
                       check(!markers.committed(id) &&
                           frontier.exists(id <= _), error = false,
                         s"cdcRollup/$ld/$n: uncommitted log dir below " +
                           "the frontier — abandoned garbage, gc " +
                           "sweeps it")
-                    case None =>
+                    case _ =>
                       check(errorWhen = true, error = false,
                         s"cdcRollup/$ld/$n: unrecognized entry")
                   }
@@ -646,16 +646,17 @@ object ViewFsck {
                           "garbage, gc sweeps it")
                     }
                   }
-              } else if (name.startsWith(".staging")) {
-                val id = name.stripPrefix(".staging").toLongOption
-                check(id.exists(i => rMarkers.committed(i) ||
-                    last.exists(i < _)), error = false,
-                  s"rollup/history/$name: staging shell that can " +
-                    "never promote (committed or below the frontier) " +
-                    "— gc sweeps it")
-              } else
-                check(errorWhen = true, error = false,
-                  s"rollup/history/$name: unrecognized entry")
+              } else FoldStore.stagingId(name) match {
+                case Some(id) =>
+                  check(rMarkers.committed(id) || last.exists(id < _),
+                    error = false,
+                    s"rollup/history/$name: staging shell that can " +
+                      "never promote (committed or below the frontier) " +
+                      "— gc sweeps it")
+                case None =>
+                  check(errorWhen = true, error = false,
+                    s"rollup/history/$name: unrecognized entry")
+              }
             }
         "rollup"
       }

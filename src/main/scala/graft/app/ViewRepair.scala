@@ -150,20 +150,9 @@ object ViewRepair {
             plan("restore _CONFIG from the writer-declared witness " +
               "(provable: the witness parses for its family and " +
               "every on-disk bucket dir fits its pinned counts)") {
-              // the pin's own temp+rename discipline
-              fs.listStatus(rootPath).toSeq
-                .filter(_.getPath.getName.startsWith("_CONFIG_tmp_"))
-                .foreach(st => fs.delete(st.getPath, false))
-              val tmp = new Path(rootPath, "_CONFIG_tmp_repair")
-              val out = fs.create(tmp, true)
-              try out.write(w.getBytes("UTF-8")) finally out.close()
-              val dst = new Path(rootPath, "_CONFIG")
-              if (!fs.rename(tmp, dst)) {
-                if (fs.exists(dst)) fs.delete(dst, true)
-                if (!fs.rename(tmp, dst))
-                  throw new java.io.IOException(
-                    s"repair: could not restore _CONFIG at $root")
-              }
+              // the pin's own replace
+              graft.state.SmallFiles.replace(fs, rootPath, "_CONFIG", w,
+                s"repair: could not restore _CONFIG at $root")
               "restored"
             }
             w // plan (and on apply: run) the rest against the witness
@@ -197,13 +186,8 @@ object ViewRepair {
         // holes and multiple view holes stay the manual class (the
         // embedded fsck names them)
         val markers = graft.operators.BatchMarkers.read(fs, rootPath)
-        def committedIds(layer: String): Set[Long] = {
-          val dir = new Path(rootPath, layer)
-          (if (!fs.exists(dir)) Nil
-          else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-            .flatMap(FoldStore.idOf("d", _)).filter(markers.committed))
-            .toSet
-        }
+        def committedIds(layer: String): Set[Long] =
+          FoldStore.committedIds(fs, rootPath, layer, "d", markers)
         val (aIds, bIds, vIds) =
           (committedIds("a"), committedIds("b"), committedIds("view"))
         val sidesComplete = {
@@ -280,27 +264,11 @@ object ViewRepair {
             plan(s"restore _LAST_BATCH to $ev (the max _APPLIED " +
               "evidence across buckets — overstating skips replays, " +
               "understating would re-admit folded ids)") {
-              // the fold's own temp+rename discipline
-              fs.listStatus(rootPath).toSeq
-                .filter(_.getPath.getName.startsWith("_LAST_BATCH_tmp_"))
-                .foreach(st => fs.delete(st.getPath, false))
-              val tmp = new Path(rootPath, "_LAST_BATCH_tmp_repair")
-              val out = fs.create(tmp, true)
-              try out.write(ev.toString.getBytes("UTF-8"))
-              finally out.close()
-              val dst = new Path(rootPath, "_LAST_BATCH")
-              // overwriting-rename FIRST (local rename(2) replaces
-              // dst in place — no missing-_LAST_BATCH crash window);
-              // only a store whose rename refuses an existing dst
-              // falls back to delete-then-rename, whose crash residue
+              // the fold's own replace: the fallback's crash residue
               // (a missing _LAST_BATCH) is exactly what a re-run of
               // this repair restores from the same evidence
-              if (!fs.rename(tmp, dst)) {
-                if (fs.exists(dst)) fs.delete(dst, false)
-                if (!fs.rename(tmp, dst))
-                  throw new java.io.IOException(
-                    s"repair: could not restore _LAST_BATCH at $root")
-              }
+              graft.state.SmallFiles.replace(fs, rootPath, "_LAST_BATCH",
+                ev.toString, s"repair: could not restore _LAST_BATCH at $root")
               s"restored=$ev"
             }
           }

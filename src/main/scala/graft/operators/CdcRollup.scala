@@ -471,17 +471,12 @@ object CdcRollup {
         s"${groupCols.map(enc).mkString(",")}|" +
         s"${valueCols.map(enc).mkString(",")}|" +
         s"$nBaseBuckets|$nAggBuckets$mmField$auxField")
-    // reap THIS batch's crash garbage (staged dirs + unmarked versions)
-    for (layer <- layerNames ++ auxViews.map("aux_" + _._1) ++
-        auxMinMaxCols.keys.map("grp_aux_" + _))
-      FoldStore.dropVersion(fs, rootPath, layer, batchId)
-    // ... and the change-log layers' (an uncommitted b<id> from the
-    // crashed attempt must go before the refold stages its
-    // replacement)
-    for (ld <- logLayerNames(auxViews.map(_._1))) {
-      fs.delete(new Path(rootPath, s"$ld/.staging$batchId"), true)
-      fs.delete(new Path(rootPath, s"$ld/b$batchId"), true)
-    }
+    // every layer this state can hold: THIS batch's crash garbage
+    // (staged dirs, unmarked versions, an uncommitted log b<id>) goes
+    // from each before the marker, written by this fold or not
+    val chains = layerNames ++ auxViews.map("aux_" + _._1) ++
+      auxMinMaxCols.keys.map("grp_aux_" + _)
+    val logs = logLayerNames(auxViews.map(_._1))
     // change-log mode: every fold ALSO emits its net per-key image
     // changes into the append-only log/ layer (see [[enableChangeLog]])
     val logOn = BatchMarkers.readLogFrom(fs, rootPath).isDefined
@@ -552,9 +547,8 @@ object CdcRollup {
         // an empty fold's change logs are empty (dataless) b<id>
         // dirs — present so a committed id > logFrom with NO log dir
         // stays an fsck-able GAP signal, never an ambiguous shape
-        if (logOn) logLayerNames(auxViews.map(_._1))
-          .foreach(ld => fs.mkdirs(new Path(rootPath, s"$ld/b$batchId")))
-        BatchMarkers.commit(fs, rootPath, batchId)
+        stageAndCommit(spark, fs, rootPath, batchId, Nil, chains, logs,
+          changeLogs = if (logOn) logs.map(_ -> None) else Nil)
         return true
       }
       // NULL pk components refuse LOUD: the pk joins below (semi/anti)
@@ -865,16 +859,17 @@ object CdcRollup {
               Seq("log" -> baseLog, "log_view" -> viewLog) ++
                 auxLayers.flatMap(_._2)
             }
-          stageAndCommit(fs, rootPath, batchId,
+          stageAndCommit(spark, fs, rootPath, batchId,
             Seq(("base", newBase, baseBucket, touchedBase),
               // a fully-retracted group drops out of the view
               ("agg", withMinMax.filter(col("n") > 0), aggBucket,
                 touchedAgg)) ++ grpLayer ++ auxLayers.flatMap(_._1),
+            chains, logs,
             // retention mode: superseded versions ARE the snapshot
             // history — the fold keeps them; reapRetainedVersions
             // owns their (floor-advancing) deletion
             retain = BatchMarkers.readFloor(fs, rootPath).isDefined,
-            changeLogs = changeLogs)
+            changeLogs = changeLogs.map { case (l, df) => l -> Some(df) })
         } finally {
           (contrib +: auxPre.map(_._3)).foreach(_.unpersist()); ()
         }
@@ -2014,10 +2009,8 @@ object CdcRollup {
               d.withColumn(c, lit(null).cast(t))
             }
           else df0
-        df.withColumn("__bucket", bucketOf)
-          .write.mode("overwrite").partitionBy("__bucket")
-          .parquet(new Path(freshPath, s"$layer/.staging0").toString)
-        FoldStore.promote(fs, freshPath, layer, 0L, "__bucket")
+        FoldStore.writeVersion(fs, freshPath, layer, 0L,
+          df.withColumn("__bucket", bucketOf), "__bucket")
       }
     // a declared layer whose source held NO committed data (every row
     // retracted) still gets its dir: the pin promises the layer, and
@@ -2071,7 +2064,7 @@ object CdcRollup {
             Seq(ld)) if !e.staging && e.id > logFrom &&
             srcMarkers.committed(e.id))
           org.apache.hadoop.fs.FileUtil.copy(fs, e.path, fs,
-            new Path(freshPath, s"$ld/${e.path.getName}"), false,
+            FoldStore.batchDir(freshPath, ld, e.id), false,
             spark.sessionState.newHadoopConf())
         BatchMarkers.writeLogFrom(fs, freshPath, logFrom)
       }
@@ -2189,18 +2182,14 @@ object CdcRollup {
           }
         val bucketOf = pmod(xxhash64(groupCols.map(col): _*),
           lit(layout.nAggBuckets)).cast("int")
-        val staging = new Path(rootPath, s"$layer/.staging$frontier")
-        fs.delete(staging, true)
         val cached = df.persist()
         try {
           val n = cached.count()
-          cached.withColumn("__bucket", bucketOf)
-            .write.mode("overwrite").partitionBy("__bucket")
-            .parquet(staging.toString)
-          val buckets = FoldStore.promote(fs, rootPath, layer, frontier, "__bucket")
+          val buckets = FoldStore.writeVersion(fs, rootPath, layer, frontier,
+            cached.withColumn("__bucket", bucketOf), "__bucket")
           if (retained) buckets.foreach { b =>
             BatchMarkers.writeFloor(fs,
-              new Path(rootPath, s"$layer/bucket=$b"), frontier)
+              FoldStore.bucketDir(rootPath, layer, b), frontier)
           }
           n
         } finally { cached.unpersist(); () }
@@ -2225,28 +2214,28 @@ object CdcRollup {
 
   // ---- layout plumbing ------------------------------------------------
 
-  /** Stage each layer's new touched-bucket content (hidden dir,
-    * partitioned by bucket), promote the children to
-    * `bucket=<k>/v<batchId>`, cover retracted-to-empty buckets with an
-    * empty version (the old version must stop being latest), commit
-    * the marker LAST, then best-effort reap superseded versions —
-    * UNLESS `retain` (as-of retention mode), where superseded
-    * versions are the snapshot history and only
+  /** Write each layer's new touched-bucket content as version
+    * `v<batchId>` ([[FoldStore.writeVersion]]: staged, promoted,
+    * retracted-to-empty buckets covered) and each change log as
+    * `<log>/b<batchId>` (None: an empty fold's empty dir), drop the
+    * batch's residue from every other layer of `chains` and `logs`,
+    * commit the marker LAST, then best-effort drop superseded
+    * versions — UNLESS `retain` (as-of retention mode), where
+    * superseded versions are the snapshot history and only
     * [[reapRetainedVersions]] may delete them (floor-advancing). */
-  private def stageAndCommit(fs: org.apache.hadoop.fs.FileSystem,
+  private def stageAndCommit(spark: SparkSession,
+                             fs: org.apache.hadoop.fs.FileSystem,
                              root: org.apache.hadoop.fs.Path, batchId: Long,
                              layers: Seq[(String, DataFrame, Column,
                                Set[Int])],
+                             chains: Seq[String], logs: Seq[String],
                              retain: Boolean = false,
                              /** change-log mode: this fold's change
                                * rows per log layer (base + view +
-                               * aux), each staged and renamed into
-                               * `<layer>/b<batchId>` before the
-                               * marker — committed atomically with
-                               * the state they describe. */
-                             changeLogs: Seq[(String, DataFrame)] = Nil)
+                               * aux), committed atomically with the
+                               * state they describe. */
+                             changeLogs: Seq[(String, Option[DataFrame])])
       : Unit = {
-    import org.apache.hadoop.fs.Path
     // NOTE (r18, measured): running these independent layer writes
     // from a thread pool (guide §2.6) was tried and REJECTED — at the
     // bench config the concurrent write jobs contend on broadcast
@@ -2258,41 +2247,21 @@ object CdcRollup {
     // concurrent write jobs — re-measure there before changing the
     // default. Retro-documented in OPTIMIZATION_r19.md (the r18 round
     // ended before its own account was written).
-    for ((layer, df, bucketOf, touched) <- layers) {
-      labeled(df.sparkSession, s"cdc-fold b$batchId: write $layer") {
-        df.withColumn("__bucket", bucketOf)
-          .write.mode("overwrite").partitionBy("__bucket")
-          .parquet(new Path(root, s"$layer/.staging$batchId").toString)
+    for ((layer, df, bucketOf, touched) <- layers)
+      labeled(spark, s"cdc-fold b$batchId: write $layer") {
+        FoldStore.writeVersion(fs, root, layer, batchId,
+          df.withColumn("__bucket", bucketOf), "__bucket", touched)
       }
-      val written = FoldStore.promote(fs, root, layer, batchId, "__bucket")
-      // a touched bucket with no surviving rows still needs a NEW
-      // latest version, else its old content would resurface
-      (touched -- written).foreach { b =>
-        fs.mkdirs(new Path(root, s"$layer/bucket=$b/v$batchId")); ()
-      }
-    }
     changeLogs.foreach { case (layer, logDf) =>
-      val staging = new Path(root, s"$layer/.staging$batchId")
-      labeled(logDf.sparkSession, s"cdc-fold b$batchId: write $layer") {
-        logDf.write.mode("overwrite").parquet(staging.toString)
+      labeled(spark, s"cdc-fold b$batchId: write $layer") {
+        FoldStore.writeBatchDir(fs, root, layer, batchId, logDf)
       }
-      val home = new Path(root, s"$layer/b$batchId")
-      if (!fs.rename(staging, home))
-        throw new java.io.IOException(s"cdcRollup: rename failed: $home")
     }
+    FoldStore.dropBatch(fs, root, batchId, chains.diff(layers.map(_._1)),
+      logs.diff(changeLogs.map(_._1)))
     BatchMarkers.commit(fs, root, batchId)
-    if (retain) return
-    // GC: every older version of a bucket this batch rewrote is
-    // superseded. Best-effort — a crash here leaves extra committed
-    // versions that stay invisible to readers (latest wins) and get
-    // reaped by the next fold touching the bucket.
-    for ((layer, _, _, touched) <- layers; b <- touched) {
-      val bDir = new Path(root, s"$layer/bucket=$b")
-      if (fs.exists(bDir))
-        fs.listStatus(bDir).toSeq.map(_.getPath)
-          .filter(v => FoldStore.versionId(v.getName).exists(_ < batchId))
-          .foreach(v => fs.delete(v, true))
-    }
+    if (!retain) for ((layer, _, _, touched) <- layers)
+      FoldStore.dropSuperseded(fs, root, layer, batchId, touched)
   }
 
 }

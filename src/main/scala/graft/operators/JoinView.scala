@@ -162,11 +162,6 @@ object JoinView {
       s"join|${enc(key)}|${cols(deltaA)}|${cols(deltaB)}|$nBuckets",
       legacy = Some(
         s"join|${enc(key)}|${legacyCols(deltaA)}|${legacyCols(deltaB)}|$nBuckets"))
-    // reap THIS batch's rename-window garbage from a prior crash —
-    // no marker means none of its dirs are part of the state yet
-    for (side <- Seq("a", "b", "view");
-         name <- Seq(s"d$batchId", s".staging$batchId"))
-      fs.delete(new Path(rootPath, s"$side/$name"), true)
     val bucketOf = pmod(xxhash64(col(key)), lit(nBuckets)).cast("int")
     // each delta feeds a bucket probe, a join AND its own append (and
     // may carry a CDC netting window upstream) — cache the small
@@ -189,10 +184,8 @@ object JoinView {
         .map(_.getInt(1)).toSet
       def snapshot(side: String, like: DataFrame,
                    buckets: Set[Int]): DataFrame =
-        committedLeafDirs(fs, rootPath, side, Some(buckets), markers) match {
-          case Seq() => like.limit(0)
-          case dirs  => spark.read.parquet(dirs.map(_.toString): _*)
-        }
+        FoldStore.readBatches(spark, fs, rootPath, side, "d", markers,
+          Some(buckets)).getOrElse(like.limit(0))
       // ΔA only matches B rows hashing into ΔA's buckets (and A↔ΔB
       // symmetrically) — read exactly those leaves
       val a = snapshot("a", deltaA, touchedB)
@@ -200,20 +193,14 @@ object JoinView {
       // ΔV = ΔA ⋈ (B ∪ ΔB)  ∪  A ⋈ ΔB (same coverage as applyDelta)
       val dv = da.join(b.unionByName(db), key)
         .unionByName(a.join(db, key))
-      // stage (hidden, bucket-partitioned), rename, marker LAST
-      def stage(side: String, df: DataFrame): Unit =
-        df.withColumn("__bucket", bucketOf)
-          .write.mode("overwrite").partitionBy("__bucket")
-          .parquet(new Path(rootPath, s"$side/.staging$batchId").toString)
-      stage("view", dv); stage("a", da); stage("b", db)
+      // each side's d<id> (hidden, bucket-partitioned, renamed in;
+      // this id's rename-window garbage from a prior crash dropped
+      // first — no marker means none of it is part of the state)
+      for ((side, df) <- Seq("view" -> dv, "a" -> da, "b" -> db))
+        FoldStore.writeBatchDir(fs, rootPath, side, batchId,
+          Some(df.withColumn("__bucket", bucketOf)), "d", Some("__bucket"))
     } finally { da.unpersist(); db.unpersist() }
-    for (side <- Seq("view", "a", "b")) {
-      val from = new Path(rootPath, s"$side/.staging$batchId")
-      val to = new Path(rootPath, s"$side/d$batchId")
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"join-view fold: rename failed: $to")
-    }
-    fs.create(new Path(rootPath, s"_APPLIED_$batchId"), true).close()
+    BatchMarkers.commit(fs, rootPath, batchId) // marker LAST
     true
   }
 
@@ -328,12 +315,10 @@ object JoinView {
         .select(pmod(xxhash64(col(key)), lit(nBuckets)).cast("int")
           .as("__b"))
         .distinct().collect().map(_.getInt(0)).toSet
-      committedLeafDirs(fs, rootPath, "view", Some(touched),
-        BatchMarkers.read(fs, rootPath), asOf) match {
-        case Seq() => None
-        case dirs => Some(spark.read.parquet(dirs.map(_.toString): _*)
-          .join(probe, Seq(key), "left_semi"))
-      }
+      FoldStore.readBatches(spark, fs, rootPath, "view", "d",
+        BatchMarkers.read(fs, rootPath), Some(touched),
+        id => asOf.forall(id <= _))
+        .map(_.join(probe, Seq(key), "left_semi"))
     } finally { probe.unpersist(); () }
   }
 
@@ -353,11 +338,8 @@ object JoinView {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     requireAsofServable(fs, rootPath, asOf)
-    committedLeafDirs(fs, rootPath, "view", None,
-      BatchMarkers.read(fs, rootPath), Some(asOf)) match {
-      case Seq() => None
-      case dirs  => Some(spark.read.parquet(dirs.map(_.toString): _*))
-    }
+    FoldStore.readBatches(spark, fs, rootPath, "view", "d",
+      BatchMarkers.read(fs, rootPath), ids = _ <= asOf)
   }
 
   /** The view rows APPENDED in batches `(afterId, toId]` — the
@@ -390,12 +372,9 @@ object JoinView {
           "pre-compaction root")
     }
     val markers = BatchMarkers.read(fs, rootPath)
-    val dirs = committedLeafDirs(fs, rootPath, "view", None, markers,
-      toId.orElse(markers.maxCommitted))
-      .filter(p => FoldStore.idOf("d", p.getParent.getName)
-        .exists(_ > afterId))
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs.map(_.toString): _*))
+    val upTo = toId.orElse(markers.maxCommitted)
+    FoldStore.readBatches(spark, fs, rootPath, "view", "d", markers,
+      ids = id => id > afterId && upTo.forall(id <= _))
   }
 
   /** Rebuild ONE missing `view/d<id>` batch dir from the committed
@@ -436,15 +415,12 @@ object JoinView {
       s"rebuildViewBatchDir: batch $batchId is not committed under " +
         s"$root — an uncommitted dir is gc's garbage, not a hole")
     def committedIds(layer: String): Set[Long] =
-      (if (!fs.exists(new Path(rootPath, layer))) Nil
-      else fs.listStatus(new Path(rootPath, layer)).toSeq
-        .map(_.getPath.getName)
-        .flatMap(FoldStore.idOf("d", _)).filter(markers.committed)).toSet
+      FoldStore.committedIds(fs, rootPath, layer, "d", markers)
     val (aIds, bIds, vIds) =
       (committedIds("a"), committedIds("b"), committedIds("view"))
     val all = aIds ++ bIds ++ vIds + batchId
-    val sideHoles = (all -- aIds).map("a/d" + _) ++
-      (all -- bIds).map("b/d" + _)
+    val sideHoles = (all -- aIds).map("a/" + FoldStore.batchName("d", _)) ++
+      (all -- bIds).map("b/" + FoldStore.batchName("d", _))
     require(sideHoles.isEmpty,
       s"rebuildViewBatchDir: side dir(s) ${sideHoles.toSeq.sorted
         .mkString(", ")} missing under $root — the sides are the " +
@@ -458,40 +434,26 @@ object JoinView {
         (if (viewHoles.isEmpty) "nothing (no hole)"
         else "them one at a time is NOT possible — restore from a " +
           "pre-compaction root or re-fold"))
-    // reap this id's rename-window garbage from a prior crashed
-    // rebuild (no view marker concept — the batch marker already
-    // exists; the staged dir is the only residue class)
-    fs.delete(new Path(rootPath, s"view/.staging$batchId"), true)
-    def side(layer: String): DataFrame =
-      committedLeafDirs(fs, rootPath, layer, None, markers) match {
-        case Seq() => null
-        case dirs  => spark.read.parquet(dirs.map(_.toString): _*)
-      }
+    // the write drops this id's residue from a prior crashed rebuild
+    // first (no view marker concept — the batch marker already exists)
+    def side(layer: String) =
+      FoldStore.readBatches(spark, fs, rootPath, layer, "d", markers)
     val (a, b) = (side("a"), side("b"))
-    if (a == null || b == null) {
+    if (a.isEmpty || b.isEmpty) {
       // a side with ZERO committed rows means the inner join is empty
       // everywhere — the hole is an honest empty dir
-      fs.mkdirs(new Path(rootPath, s"view/d$batchId"))
+      FoldStore.writeBatchDir(fs, rootPath, "view", batchId, None, "d")
       return 0L
     }
-    val total = a.join(b, key)
-    val surviving = committedLeafDirs(fs, rootPath, "view", None,
-      markers)
-    val dv =
-      if (surviving.isEmpty) total
-      else total.exceptAll(spark.read
-        .parquet(surviving.map(_.toString): _*)
-        .select(total.columns.map(col): _*))
+    val total = a.get.join(b.get, key)
+    val dv = side("view").fold(total)(surviving =>
+      total.exceptAll(surviving.select(total.columns.map(col): _*)))
     val bucketOf = pmod(xxhash64(col(key)), lit(nBuckets)).cast("int")
     val staged = dv.withColumn("__bucket", bucketOf).persist()
     try {
       val n = staged.count()
-      staged.write.mode("overwrite").partitionBy("__bucket")
-        .parquet(new Path(rootPath, s"view/.staging$batchId").toString)
-      if (!fs.rename(new Path(rootPath, s"view/.staging$batchId"),
-        new Path(rootPath, s"view/d$batchId")))
-        throw new java.io.IOException(
-          s"rebuildViewBatchDir: rename failed: $root/view/d$batchId")
+      FoldStore.writeBatchDir(fs, rootPath, "view", batchId, Some(staged),
+        "d", Some("__bucket"))
       n
     } finally { staged.unpersist(); () }
   }
@@ -518,11 +480,8 @@ object JoinView {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    committedLeafDirs(fs, rootPath, "view", None,
-      BatchMarkers.read(fs, rootPath)) match {
-      case Seq() => None
-      case dirs  => Some(spark.read.parquet(dirs.map(_.toString): _*))
-    }
+    FoldStore.readBatches(spark, fs, rootPath, "view", "d",
+      BatchMarkers.read(fs, rootPath))
   }
 
   /** Compact a long-lived view's per-batch dirs into ONE committed
@@ -657,10 +616,7 @@ object JoinView {
     // matched yet): committed batch dirs with zero bucket leaves —
     // compact it to an empty d0, not a refusal
     def committed(side: String): Option[DataFrame] =
-      committedLeafDirs(fs, rootPath, side, None, srcMarkers) match {
-        case Seq() => None
-        case dirs  => Some(spark.read.parquet(dirs.map(_.toString): _*))
-      }
+      FoldStore.readBatches(spark, fs, rootPath, side, "d", srcMarkers)
     // fresh pin: the SOURCE pin's key + column fields verbatim (so a
     // later fold checks against exactly what it would have at the old
     // root), the (possibly new) bucket count — and the MIGRATED side
@@ -693,17 +649,10 @@ object JoinView {
       }
     val addsFor = Map("a" -> addsA, "b" -> addsB,
       "view" -> (addsA ++ addsB))
-    def stage(side: String): Unit = committed(side) match {
-      case Some(df) =>
-        widen(df, addsFor(side)).withColumn("__bucket", bucketOf)
-          .write.mode("overwrite").partitionBy("__bucket")
-          .parquet(new Path(freshPath, s"$side/.staging0").toString)
-        if (!fs.rename(new Path(freshPath, s"$side/.staging0"),
-          new Path(freshPath, s"$side/d0")))
-          throw new java.io.IOException(
-            s"compactStateTo: rename failed: $freshRoot/$side/d0")
-      case None => fs.mkdirs(new Path(freshPath, s"$side/d0")); ()
-    }
+    def stage(side: String): Unit =
+      FoldStore.writeBatchDir(fs, freshPath, side, 0L, committed(side)
+        .map(widen(_, addsFor(side)).withColumn("__bucket", bucketOf)),
+        "d", Some("__bucket"))
     stage("a"); stage("b"); stage("view")
     // the collapsed d0 merges ALL pre-frontier history — floor the
     // as-of axis there so it is never served as an earlier snapshot.
@@ -721,38 +670,5 @@ object JoinView {
       BatchMarkers.read(fs, freshPath),
       srcMarkers.maxCommitted.getOrElse(0L))
     readCommittedView(spark, freshRoot).map(_.count()).getOrElse(0L)
-  }
-
-  /** `__bucket=<k>` leaf dirs of `side` under committed (marker- or
-    * watermark-covered) `d<id>` batch dirs, restricted to `buckets`
-    * when given — the committed, bucket-pruned prefix of the state,
-    * immune to rename-window garbage. Committedness resolves against
-    * the ONE marker listing the caller already holds (O(batches), not
-    * O(batches) exists-probes). Leaves are read directly (no partition
-    * discovery), so the helper `__bucket` column never reaches a
-    * consumer. */
-  private def committedLeafDirs(fs: org.apache.hadoop.fs.FileSystem,
-                                root: org.apache.hadoop.fs.Path,
-                                side: String, buckets: Option[Set[Int]],
-                                markers: BatchMarkers.Markers,
-                                asOf: Option[Long] = None)
-      : Seq[org.apache.hadoop.fs.Path] = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(root, side)
-    if (!fs.exists(dir)) return Nil
-    val batchDirs = fs.listStatus(dir).toSeq.filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(p => FoldStore.idOf("d", p.getName)
-        .exists(id => markers.committed(id) && asOf.forall(id <= _)))
-      .sortBy(_.getName)
-    batchDirs.flatMap { d =>
-      fs.listStatus(d).toSeq.filter(_.isDirectory).map(_.getPath)
-        .filter { leaf =>
-          leaf.getName.startsWith("__bucket=") &&
-            buckets.forall(bs =>
-              leaf.getName.stripPrefix("__bucket=").toIntOption
-                .exists(bs.contains))
-        }
-    }
   }
 }

@@ -229,16 +229,16 @@ object PartitionedStore {
   /** ONE layout pin for every pinned-layout writer (the bucketed SCD2
     * merge here and the bucketed rollup in EventStreams): refuse a
     * call whose layout differs from the one the table was built with.
-    * The pin commits by write-to-temp + rename, so a crash can never
-    * leave a half-written `_CONFIG`; leftover `_CONFIG_tmp_*` from
-    * crashed commits are reaped inside the next commit (the only
-    * producer of them — the steady-state matching-pin path stays at
-    * one exists+open, no directory LIST per micro-batch).
+    * The pin commits by [[graft.state.SmallFiles.replace]], so a crash
+    * can never leave a half-written or (on a local rename) missing
+    * `_CONFIG`; the steady-state matching-pin path stays at one
+    * exists+open, no directory LIST per micro-batch.
     *
     * A MISSING or EMPTY stored pin reads as a fresh bootstrap ONLY
     * while the table holds no data — every pinned table carries its
     * pin from birth, so pin-less data means a crashed migration (the
-    * delete→rename window) or a manual deletion: the layout is
+    * delete→rename fallback's window, on a store whose rename refuses
+    * an existing target) or a manual deletion: the layout is
     * unknowable and silently re-pinning to THIS call's layout could
     * bless a changed bucket function, so it fails loud instead.
     *
@@ -253,58 +253,27 @@ object PartitionedStore {
                                legacy: Option[String] = None,
                                canon: String => String = identity): Unit = {
     import org.apache.hadoop.fs.Path
-    val configFile = new Path(target, "_CONFIG")
     def commit(): Unit = {
       fs.mkdirs(target)
-      // reap stranded temp files from prior crashed commits
-      fs.listStatus(target).toSeq
-        .filter(_.getPath.getName.startsWith("_CONFIG_tmp_"))
-        .foreach(st => fs.delete(st.getPath, false))
-      val tmp = new Path(target,
-        s"_CONFIG_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(tmp, true)
-      try out.write(config.getBytes("UTF-8")) finally out.close()
-      if (fs.exists(configFile)) fs.delete(configFile, true)
-      if (!fs.rename(tmp, configFile))
-        throw new java.io.IOException(
-          s"could not commit layout pin at $configFile")
+      graft.state.SmallFiles.replace(fs, target, "_CONFIG", config,
+        s"could not commit layout pin at ${new Path(target, "_CONFIG")}")
     }
     // WRITER-DECLARED LAYOUT WITNESS: a second copy of the pin under
-    // an independent name (`_CONFIG_WITNESS`, same temp+rename
-    // discipline), refreshed on every call — the writer holds the
-    // full layout in hand anyway. It is maintenance metadata, never
+    // an independent name (`_CONFIG_WITNESS`, same replace), refreshed
+    // on every call — the writer holds the full layout in hand
+    // anyway. It is maintenance metadata, never
     // read on a serving path (readers trust only `_CONFIG`); its one
     // consumer is `repair`, which may RESTORE a lost/garbled pin when
     // the witness parses AND its bucket counts match the on-disk
     // dirs — proof, hence the safe class. Cost on the steady-state
     // matching-pin path: one extra exists+open per call.
-    def witness(): Unit = {
-      val wFile = new Path(target, "_CONFIG_WITNESS")
-      val cur =
-        if (!fs.exists(wFile)) None
-        else {
-          val in = fs.open(wFile)
-          try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-          finally in.close()
-        }
-      if (!cur.contains(config)) {
-        fs.listStatus(target).toSeq
-          .filter(_.getPath.getName.startsWith("_CONFIG_WITNESS_tmp_"))
-          .foreach(st => fs.delete(st.getPath, false))
-        val tmp = new Path(target, "_CONFIG_WITNESS_tmp_" +
-          java.util.UUID.randomUUID().toString.take(8))
-        val out = fs.create(tmp, true)
-        try out.write(config.getBytes("UTF-8")) finally out.close()
-        // overwriting-rename first; delete-then-rename fallback's
-        // crash residue is a missing witness — refreshed next call
-        if (!fs.rename(tmp, wFile)) {
-          if (fs.exists(wFile)) fs.delete(wFile, false)
-          if (!fs.rename(tmp, wFile))
-            throw new java.io.IOException(
-              s"could not commit layout witness at $wFile")
-        }
-      }
-    }
+    def witness(): Unit =
+      // the fallback's crash residue is a missing witness — refreshed
+      // next call
+      if (!readWitness(fs, target).contains(config))
+        graft.state.SmallFiles.replace(fs, target, "_CONFIG_WITNESS",
+          config, "could not commit layout witness at " +
+            new Path(target, "_CONFIG_WITNESS"))
     readPin(fs, target) match {
       case Some(c) if c == config => witness()
       case Some(c) if c.nonEmpty &&
@@ -336,34 +305,18 @@ object PartitionedStore {
     * pin-driven readers ([[scd2KeyHistory]]) — a future encoding or
     * trim change must reach both or they drift. */
   private[graft] def readPin(fs: org.apache.hadoop.fs.FileSystem,
-                             target: org.apache.hadoop.fs.Path): Option[String] = {
-    import org.apache.hadoop.fs.Path
-    val configFile = new Path(target, "_CONFIG")
-    if (!fs.exists(configFile)) None
-    else {
-      val in = fs.open(configFile)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      Some(s)
-    }
-  }
+                             target: org.apache.hadoop.fs.Path): Option[String] =
+    graft.state.SmallFiles.read(fs,
+      new org.apache.hadoop.fs.Path(target, "_CONFIG"))
 
   /** The writer-declared layout witness (`_CONFIG_WITNESS`) — the
     * second pin copy [[pinLayout]] maintains; read ONLY by `repair`
     * (serving paths trust `_CONFIG` alone). */
   private[graft] def readWitness(fs: org.apache.hadoop.fs.FileSystem,
                                  target: org.apache.hadoop.fs.Path)
-      : Option[String] = {
-    import org.apache.hadoop.fs.Path
-    val wFile = new Path(target, "_CONFIG_WITNESS")
-    if (!fs.exists(wFile)) None
-    else {
-      val in = fs.open(wFile)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      Some(s)
-    }
-  }
+      : Option[String] =
+    graft.state.SmallFiles.read(fs,
+      new org.apache.hadoop.fs.Path(target, "_CONFIG_WITNESS"))
 
   /** ONE pin canonicalizer for every pinned-layout writer (the SCD2
     * and rollup pins differ only in WHICH `|`-fields name columns):

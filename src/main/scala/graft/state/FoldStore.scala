@@ -6,12 +6,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The version-chain store under the view families' persisted history:
-  * the ONE module that knows the on-disk layout and the read/GC half
-  * of its protocol. [[graft.operators.CdcRollup]]'s versioned layers,
-  * the bucketed rollup's `history/` ([[graft.streaming.EventStreams]])
-  * and the change-log and join batch dirs all resolve, diff, gate and
+  * the ONE module that knows the on-disk layout and the protocol over
+  * it. [[graft.operators.CdcRollup]]'s versioned layers, the bucketed
+  * rollup's `history/` ([[graft.streaming.EventStreams]]) and the
+  * change-log and join batch dirs all write, resolve, diff, gate and
   * sweep through here; the families keep their delta algebra, their
-  * fold write paths and their layout pins.
+  * layout pins and when they commit.
   *
   * Layout, under a state root:
   *
@@ -31,6 +31,16 @@ import org.apache.spark.sql.functions._
   *    (root, and per bucket on CDC states) bounds the servable as-of
   *    axis; `_LOG_FROM_<f>` bounds the change-log range.
   *
+  * Writes: stage → promote/rename → cover → reap. A fold writes each
+  * layer hidden under `.staging<id>` and renames it into place:
+  * [[writeVersion]] promotes the bucket children to `bucket=<k>/v<id>`
+  * and COVERS every touched bucket left without rows with an empty
+  * `v<id>` (its old version must stop being latest);
+  * [[writeBatchDir]] renames the shell to `<p><id>` (an empty fold
+  * makes an empty dir). The family then commits its marker, and a
+  * non-retained state reaps the versions the batch superseded
+  * ([[dropSuperseded]]). Writes run one layer at a time.
+  *
   * Reads: a bucket AS OF `a` is its highest committed version with
   * id <= a ([[read]]); the buckets that can differ between two
   * snapshots are exactly those holding a committed version in the
@@ -41,6 +51,12 @@ import org.apache.spark.sql.functions._
   *
   *  - MARKER LAST: a fold's versions and batch dirs land before its
   *    marker, so a crash leaves only invisible garbage.
+  *  - RESIDUE BEFORE MARKER: batch `id`'s leftovers from a crashed
+  *    attempt (a staging shell, a `v<id>` in any bucket, a `<p><id>`
+  *    dir) are dropped from EVERY layer of the state, written by this
+  *    fold or not, before its marker commits — the marker would make
+  *    them committed ([[dropBatch]]; both writes drop their own
+  *    layer's first).
   *  - FLOOR BEFORE DELETE: a reap writes the advanced floor (or log
   *    bound) before it deletes anything ([[reapSuperseded]],
   *    [[reapLog]]); a crash between leaves a high floor over extra
@@ -65,7 +81,7 @@ private[graft] object FoldStore {
   def versionId(name: String): Option[Long] = idOf("v", name)
 
   /** The id of a `.staging<id>` shell. */
-  private def stagingId(name: String): Option[Long] = idOf(".staging", name)
+  def stagingId(name: String): Option[Long] = idOf(".staging", name)
 
   /** The bucket of a `bucket=<k>` dir. */
   private def bucketId(name: String): Option[Int] =
@@ -260,7 +276,7 @@ private[graft] object FoldStore {
     val seed = BatchMarkers.readSeed(fs, root)
       .getOrElse(throw new IllegalArgumentException(below(floor)))
     val bound = (seed +: buckets.toSeq.map(b => BatchMarkers
-      .readFloor(fs, new Path(root, s"$layer/bucket=$b")).getOrElse(seed)))
+      .readFloor(fs, bucketDir(root, layer, b)).getOrElse(seed)))
       .max
     require(asOf >= bound,
       s"as-of lookup at batch $asOf under $root: a touched bucket's " +
@@ -360,27 +376,133 @@ private[graft] object FoldStore {
            (dead: Entry => Boolean): Seq[String] =
     entries.filter(dead).map { e => fs.delete(e.path, true); e.path.toString }
 
-  // ---- write-side helpers -----------------------------------------
+  // ---- write protocol -------------------------------------------
 
-  /** Drop batch `id`'s residue from `layer`: its staging shell and its
-    * version in every bucket (a crashed attempt's garbage). */
-  def dropVersion(fs: FileSystem, root: Path, layer: String, id: Long): Unit = {
-    fs.delete(new Path(root, s"$layer/.staging$id"), true)
-    bucketDirs(fs, root, layer, None)
-      .foreach { case (_, b) => fs.delete(new Path(b, s"v$id"), true) }
+  private def stagingDir(root: Path, layer: String, id: Long): Path =
+    new Path(root, s"$layer/.staging$id")
+
+  /** `<layer>/bucket=<k>`: a bucket's chain (and its floor files). */
+  def bucketDir(root: Path, layer: String, bucket: Int): Path =
+    new Path(root, s"$layer/bucket=$bucket")
+
+  /** The name of batch `id`'s flat dir: `<prefix><id>`. */
+  def batchName(prefix: String, id: Long): String = s"$prefix$id"
+
+  /** `<layer>/<prefix><id>`: batch `id`'s flat dir. */
+  def batchDir(root: Path, layer: String, id: Long,
+               prefix: String = "b"): Path =
+    new Path(root, s"$layer/${batchName(prefix, id)}")
+
+  /** Drop batch `id`'s residue — a crashed attempt's garbage — from
+    * the versioned `chains` layers (staging shell, `v<id>` in every
+    * bucket) and the flat `batchDirs` layers (staging shell,
+    * `<prefix><id>`). */
+  def dropBatch(fs: FileSystem, root: Path, id: Long, chains: Seq[String],
+                batchDirs: Seq[String] = Nil, prefix: String = "b"): Unit = {
+    chains.foreach { layer =>
+      fs.delete(stagingDir(root, layer, id), true)
+      bucketDirs(fs, root, layer, None)
+        .foreach { case (_, b) => fs.delete(new Path(b, s"v$id"), true) }
+    }
+    batchDirs.foreach { layer =>
+      fs.delete(stagingDir(root, layer, id), true)
+      fs.delete(batchDir(root, layer, id, prefix), true)
+    }
   }
+
+  /** VERSIONED WRITE: `df`, bucketed by its `partCol` column, becomes
+    * version `v<id>` of every bucket of `layer` it holds rows for, and
+    * each bucket of `touched` left without rows gets an EMPTY `v<id>`
+    * (the cover). The layer's residue of `id` goes first: a stale
+    * `v<id>` would take the promote's rename as a nested child.
+    * @return the buckets written */
+  def writeVersion(fs: FileSystem, root: Path, layer: String, id: Long,
+                   df: DataFrame, partCol: String,
+                   touched: Set[Int] = Set.empty): Set[Int] = {
+    dropBatch(fs, root, id, Seq(layer))
+    df.write.mode("overwrite").partitionBy(partCol)
+      .parquet(stagingDir(root, layer, id).toString)
+    val written = promote(fs, root, layer, id, partCol)
+    (touched -- written).foreach { b =>
+      fs.mkdirs(new Path(bucketDir(root, layer, b), s"v$id")); ()
+    }
+    written
+  }
+
+  /** FLAT BATCH-DIR WRITE: `df` (partitioned by `partCol` when given)
+    * becomes `<layer>/<prefix><id>`, staged hidden and renamed in;
+    * None — an empty fold — makes an empty dir. The layer's residue
+    * of `id` goes first. */
+  def writeBatchDir(fs: FileSystem, root: Path, layer: String, id: Long,
+                    df: Option[DataFrame], prefix: String = "b",
+                    partCol: Option[String] = None): Unit = {
+    dropBatch(fs, root, id, Nil, Seq(layer), prefix)
+    val home = batchDir(root, layer, id, prefix)
+    df match {
+      case None => fs.mkdirs(home); ()
+      case Some(d) =>
+        val staging = stagingDir(root, layer, id)
+        val w = d.write.mode("overwrite")
+        partCol.fold(w)(w.partitionBy(_)).parquet(staging.toString)
+        if (!fs.rename(staging, home))
+          throw new java.io.IOException(s"$layer: rename failed: $home")
+    }
+  }
+
+  /** SUPERSEDED DROP, after the marker on a non-retained state: every
+    * version below `id` in the `touched` buckets of `layer`, each of
+    * which batch `id` gave a new latest version. Best-effort — a crash
+    * leaves extra committed versions no read resolves (latest wins),
+    * reaped by the next fold touching the bucket. */
+  def dropSuperseded(fs: FileSystem, root: Path, layer: String, id: Long,
+                     touched: Set[Int]): Unit =
+    touched.foreach { b =>
+      list(fs, bucketDir(root, layer, b)).map(_.getPath)
+        .filter(v => versionId(v.getName).exists(_ < id))
+        .foreach(fs.delete(_, true))
+    }
+
+  /** Ids of `layer`'s committed `<prefix><id>` batch dirs. */
+  def committedIds(fs: FileSystem, root: Path, layer: String, prefix: String,
+                   markers: BatchMarkers.Markers): Set[Long] =
+    entries(fs, root, Nil, Seq(layer), prefix)
+      .filter(e => !e.staging && markers.committed(e.id)).map(_.id).toSet
+
+  /** The `__bucket=<k>` leaves of `layer`'s committed `<prefix><id>`
+    * batch dirs whose id passes `ids`, restricted to `buckets` when
+    * given, read as one frame — the committed, bucket-pruned prefix of
+    * a batch-dir layer, blind to rename-window garbage. Leaves are
+    * read directly (no partition discovery), so the `__bucket` column
+    * never reaches a reader. None when no leaf qualifies. */
+  def readBatches(spark: SparkSession, fs: FileSystem, root: Path,
+                  layer: String, prefix: String,
+                  markers: BatchMarkers.Markers,
+                  buckets: Option[Set[Int]] = None,
+                  ids: Long => Boolean = _ => true): Option[DataFrame] =
+    entries(fs, root, Nil, Seq(layer), prefix)
+      .filter(e => !e.staging && markers.committed(e.id) && ids(e.id))
+      .sortBy(_.path.getName)
+      .flatMap(e => list(fs, e.path).filter(_.isDirectory).map(_.getPath)
+        .filter { leaf =>
+          val n = leaf.getName
+          n.startsWith("__bucket=") && buckets.forall(bs =>
+            n.stripPrefix("__bucket=").toIntOption.exists(bs.contains))
+        }) match {
+      case Seq() => None
+      case dirs  => Some(spark.read.parquet(dirs.map(_.toString): _*))
+    }
 
   /** Rename `<layer>/.staging<id>/<partCol>=<k>` children into their
     * `bucket=<k>/v<id>` homes, then drop the shell. @return the
     * buckets promoted */
-  def promote(fs: FileSystem, root: Path, layer: String, id: Long,
-              partCol: String): Set[Int] = {
-    val staging = new Path(root, s"$layer/.staging$id")
+  private def promote(fs: FileSystem, root: Path, layer: String, id: Long,
+                      partCol: String): Set[Int] = {
+    val staging = stagingDir(root, layer, id)
     val promoted = list(fs, staging).map(_.getPath)
       .filter(_.getName.startsWith(s"$partCol="))
       .map { child =>
         val b = child.getName.stripPrefix(s"$partCol=").toInt
-        val home = new Path(root, s"$layer/bucket=$b")
+        val home = bucketDir(root, layer, b)
         fs.mkdirs(home)
         val to = new Path(home, s"v$id")
         if (!fs.rename(child, to))

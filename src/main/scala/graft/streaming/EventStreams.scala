@@ -1093,14 +1093,14 @@ object EventStreams {
       val maxC = graft.operators.BatchMarkers.read(fs, root)
         .maxCommitted.getOrElse(-1L) max bound
       lastBatch.filter(_ > maxC).foreach { lb =>
-        if (fs.exists(new Path(root, s"log/b$lb")) &&
+        if (fs.exists(FoldStore.batchDir(root, "log", lb)) &&
             rollupBatchApplied(fs, root, lb)) {
           graft.operators.BatchMarkers.commit(fs, root, lb); ()
         } else if (batchId > lb)
           throw new graft.model.UserException(
             s"rollup change log under $statePath: the frontier $lb " +
               "is above every log witness and its log dir is " +
-              (if (fs.exists(new Path(root, s"log/b$lb")))
+              (if (fs.exists(FoldStore.batchDir(root, "log", lb)))
                 "present but its swap never finished — replay that " +
                 "batch first (the recovery completes the swap)"
               else "absent — a fold committed without logging (the " +
@@ -1121,33 +1121,17 @@ object EventStreams {
       val slice = spark.read.parquet(cur.toString)
         .filter(col("bucket")
           .isin(touched.map(b => lit(b): Column): _*))
-      writeHistoryVersion(fs, root, batchId, slice)
+      FoldStore.writeVersion(fs, root, "history", batchId, slice, "bucket",
+        touched.toSet)
       graft.operators.BatchMarkers.commit(fs, root, batchId)
     }
+    // the replace renames over the old frontier, so no local crash
+    // leaves it missing (a missing _LAST_BATCH would drop the monotone
+    // guard and briefly re-admit older ids)
     def advanceLastBatch(): Unit =
-      if (lastBatch.forall(batchId > _)) {
-        // reap stranded temp files from prior crashed advances (the
-        // pinLayout _CONFIG_tmp_ discipline)
-        fs.listStatus(root).toSeq
-          .filter(_.getPath.getName.startsWith("_LAST_BATCH_tmp_"))
-          .foreach(st => fs.delete(st.getPath, false))
-        val tmp = new Path(root,
-          s"_LAST_BATCH_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-        val out = fs.create(tmp, true)
-        try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-        val dst = new Path(root, "_LAST_BATCH")
-        // overwriting-rename FIRST: local rename(2) replaces dst in
-        // place, so no crash leaves the frontier missing (a missing
-        // _LAST_BATCH would drop the monotone guard and briefly
-        // re-admit older ids); delete-then-rename only as a fallback
-        // for stores whose rename refuses an existing dst
-        if (!fs.rename(tmp, dst)) {
-          if (fs.exists(dst)) fs.delete(dst, false)
-          if (!fs.rename(tmp, dst))
-            throw new java.io.IOException(
-              s"could not advance _LAST_BATCH at $root")
-        }
-      }
+      if (lastBatch.forall(batchId > _))
+        graft.state.SmallFiles.replace(fs, root, "_LAST_BATCH",
+          batchId.toString, s"could not advance _LAST_BATCH at $root")
     // The bucket function is part of the PERSISTED layout: a changed
     // nBuckets (or key set/order) re-hashes keys into different
     // buckets, and a partial rewrite under the new function would
@@ -1193,7 +1177,8 @@ object EventStreams {
         // an empty fold's change log is an empty (dataless) b<id>
         // dir — present so a committed id > the bound with NO log
         // dir stays an unambiguous GAP signal (the cdc discipline)
-        if (logOn.isDefined) fs.mkdirs(new Path(root, s"log/b$batchId"))
+        if (logOn.isDefined)
+          FoldStore.writeBatchDir(fs, root, "log", batchId, None)
         advanceLastBatch(); commitLogWitness(); return Nil
       }
       var pending = touched.filterNot(b =>
@@ -1258,7 +1243,7 @@ object EventStreams {
       // attempt's complete, identical emission — see the mode note
       // above: recovery paths REQUIRE the skip)
       if (logOn.isDefined &&
-          !fs.exists(new Path(root, s"log/b$batchId"))) {
+          !fs.exists(FoldStore.batchDir(root, "log", batchId))) {
         val batchKeys = partialPending.select(keys.map(col): _*)
         // null-safe restriction: a NULL group key is a real group
         def forKeys(df: DataFrame) = df.join(batchKeys,
@@ -1277,12 +1262,7 @@ object EventStreams {
             when(fromF("n").isNull, lit("added"))
               .otherwise(lit("changed")).as("change") :+
             lit(batchId).as("__batch_id")): _*)
-        val logStaging = new Path(root, s"log/.staging$batchId")
-        fs.delete(logStaging, true) // a crashed attempt's partial
-        logDf.write.mode("overwrite").parquet(logStaging.toString)
-        if (!fs.rename(logStaging, new Path(root, s"log/b$batchId")))
-          throw new java.io.IOException(
-            s"rollup change log: rename failed: $root/log/b$batchId")
+        FoldStore.writeBatchDir(fs, root, "log", batchId, Some(logDf))
       }
       val next = merged.withColumn("bucket", bucketOf)
       val stage = new Path(root,
@@ -1309,17 +1289,10 @@ object EventStreams {
     * it). */
   private[graft] def readLastBatch(fs: org.apache.hadoop.fs.FileSystem,
                                    root: org.apache.hadoop.fs.Path)
-      : Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    val f = new Path(root, "_LAST_BATCH")
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      s.trim.toLongOption
-    }
-  }
+      : Option[Long] =
+    graft.state.SmallFiles.read(fs,
+      new org.apache.hadoop.fs.Path(root, "_LAST_BATCH"))
+      .flatMap(_.trim.toLongOption)
 
   /** POST-SWAP evidence that `batchId` is FULLY applied to a bucketed
     * rollup state — the group-witness face ([[graft.operators
@@ -1371,20 +1344,6 @@ object EventStreams {
 
   // ---- as-of retention for bucketed rollup states --------------------
 
-  /** Replace/create history version `v<id>` of every bucket present
-    * in `df` (rollup state rows INCLUDING the `bucket` column) —
-    * staged hidden, renamed in; any prior v<id> of a touched bucket
-    * (a crashed attempt's residue) is dropped first. */
-  private def writeHistoryVersion(fs: org.apache.hadoop.fs.FileSystem,
-                                  root: org.apache.hadoop.fs.Path,
-                                  id: Long, df: DataFrame): Unit = {
-    FoldStore.dropVersion(fs, root, "history", id)
-    df.write.mode("overwrite").partitionBy("bucket")
-      .parquet(new org.apache.hadoop.fs.Path(root, s"history/.staging$id")
-        .toString)
-    FoldStore.promote(fs, root, "history", id, "bucket"); ()
-  }
-
   /** Switch a bucketed rollup state into AS-OF RETENTION mode — the
     * [[graft.operators.CdcRollup.enableRetention]] story for the
     * insert-only rollup family, closing its "no history" gap: from
@@ -1424,8 +1383,8 @@ object EventStreams {
       val floor = last.getOrElse(-1L)
       fs.mkdirs(root)
       if (floor >= 0 && fs.exists(cur)) {
-        writeHistoryVersion(fs, root, floor,
-          spark.read.parquet(cur.toString))
+        FoldStore.writeVersion(fs, root, "history", floor,
+          spark.read.parquet(cur.toString), "bucket")
         graft.operators.BatchMarkers.commit(fs, root, floor)
       }
       graft.operators.BatchMarkers.writeFloor(fs, root, floor)
@@ -1637,7 +1596,7 @@ object EventStreams {
           .maxCommitted.getOrElse(-1L) max bound
         readLastBatch(fs, root)
           .filter(lb => lb > maxC &&
-            !fs.exists(new Path(root, s"log/b$lb"))) match {
+            !fs.exists(FoldStore.batchDir(root, "log", lb))) match {
           case Some(lb) =>
             // the raced-enable residue: advance past the unlogged fold
             graft.operators.BatchMarkers.writeLogFrom(fs, root, lb)
@@ -2008,8 +1967,8 @@ object EventStreams {
     // which the crash-reset retry reclaims.
     if (graft.operators.BatchMarkers.readFloor(fs, root).isDefined) {
       val floor = seedId
-      writeHistoryVersion(fs, freshRoot, floor,
-        spark.read.parquet(new Path(freshRoot, "state").toString))
+      FoldStore.writeVersion(fs, freshRoot, "history", floor,
+        spark.read.parquet(new Path(freshRoot, "state").toString), "bucket")
       graft.operators.BatchMarkers.commit(fs, freshRoot, floor)
       graft.operators.BatchMarkers.writeFloor(fs, freshRoot, floor)
     }

@@ -62,4 +62,42 @@ class ContractSpec extends AnyFunSuite with Matchers {
     java.nio.file.Files.exists(owner) shouldBe true
     offenders.result() shouldBe empty
   }
+
+  test("only graft.state.FoldStore builds version-chain layout paths") {
+    // `.staging<id>`, `bucket=<k>/v<id>`, `b<id>` and `d<id>` paths
+    // are written in one module. A literal holding whitespace is a
+    // message naming such a dir, not a path; a bare `d0` is a column.
+    val name = """(\.staging|[bdv])"""
+    val interp = """\$(\{[^}]*\}|[A-Za-z_]\w*)"""
+    val pathShapes = Seq(s".*/$name($interp|\\d+)", s"$name$interp",
+      ".*bucket=[^/]*/v.*").map(_.r)
+    val literal = "\"([^\"]*)\"".r
+    val concat = ("\"([^\"\\s]*/)?" + name + "\"\\s*\\+").r
+    val parse = """stripPrefix\("\.staging"\)""".r
+    def offends(line: String): Boolean =
+      parse.findFirstIn(line).isDefined ||
+        concat.findFirstIn(line).isDefined ||
+        literal.findAllMatchIn(line).map(_.group(1)).exists(c =>
+          !c.exists(_.isWhitespace) && pathShapes.exists(_.matches(c)))
+    Seq("""new Path(root, s"$layer/.staging$id")""",
+      """s"$side/d0"""", """Seq(s"d$batchId")""",
+      """s"$layer/bucket=$b/v$batchId"""", """map("a/d" + _)""",
+      """n.stripPrefix(".staging")""").foreach(l => offends(l) shouldBe true)
+    Seq("""s"join/$layer/d$i: uncommitted batch dir"""", """.as("d0")""",
+      """new Path(root, "_CONFIG")""").foreach(l => offends(l) shouldBe false)
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val owner = root.resolve("graft/state/FoldStore.scala")
+    val files = java.nio.file.Files.walk(root).iterator()
+    val offenders = Seq.newBuilder[String]
+    while (files.hasNext) {
+      val f = files.next()
+      if (f.toString.endsWith(".scala") && f != owner)
+        java.nio.file.Files.readAllLines(f).toArray.zipWithIndex.foreach {
+          case (l, i) =>
+            if (offends(l.toString)) offenders += s"${root.relativize(f)}:${i + 1}"
+        }
+    }
+    java.nio.file.Files.exists(owner) shouldBe true
+    offenders.result() shouldBe empty
+  }
 }
