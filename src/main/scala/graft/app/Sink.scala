@@ -158,34 +158,15 @@ final class ParquetSink(spark: SparkSession, baseDir: String) extends TableSink 
   // delete a stage whose target is missing.
   def tableExists(name: String): Boolean = fs.exists(path(name))
 
-  /** Read with the footer's schema: Spark's own schema inference would
-    * run a job to learn it. */
+  /** Read with the footer's schema ([[graft.sources.ParquetFooter]]):
+    * Spark's own schema inference would run a job to learn it. */
   def read(name: String): DataFrame =
-    spark.read.schema(schema(name)).parquet(path(name).toString)
+    graft.sources.ParquetFooter.read(spark, fs, Seq(path(name)))
 
-  /** The schema Spark stored in ONE data file's footer, read on the
-    * driver — the schema inference would take it from there too. A
-    * directory without such a file (missing, or not written by Spark)
-    * falls back to the inference and its errors. */
-  override def schema(name: String): StructType = {
-    val dir = path(name)
-    val dataFile =
-      try fs.listStatus(dir).iterator.find { st =>
-        val n = st.getPath.getName
-        st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
-      } catch { case _: java.io.FileNotFoundException => None }
-    val stored = dataFile.flatMap { st =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
-          spark.sessionState.newHadoopConf()))
-      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-        .get("org.apache.spark.sql.parquet.row.metadata"))
-      finally reader.close()
-    }
-    stored.flatMap(json => scala.util.Try(
-        org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[StructType]).toOption)
-      .getOrElse(spark.read.parquet(dir.toString).schema)
-  }
+  /** The schema Spark stored in one data file's footer, read on the
+    * driver; a directory without one falls back to the inference. */
+  override def schema(name: String): StructType =
+    graft.sources.ParquetFooter.schema(spark, fs, Seq(path(name)))
 
   def overwrite(df: DataFrame, name: String): Unit = {
     val stage = path(

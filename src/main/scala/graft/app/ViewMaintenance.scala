@@ -2,8 +2,10 @@ package graft.app
 
 import graft.model._
 import graft.operators.{JoinView, Load}
+import graft.sources.ParquetFooter
 import graft.state.FoldStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Runner for the `maintainView` action — the CLI face of the
   * incremental view-maintenance library ([[graft.operators.JoinView]],
@@ -377,23 +379,15 @@ object ViewMaintenance {
                 if (!fs.exists(statePq)) throw new UserException(
                   s"maintainView export: no committed state under $root")
                 (graft.operators.IncrementalAgg.finalizeState(
-                  spark.read.parquet(statePq.toString).drop("bucket"),
+                  ParquetFooter.read(spark, fs, Seq(statePq)).drop("bucket"),
                   keys), None)
             }
           }
-        // count the CACHED view once before the write — the same rows
-        // the write materializes, without a second full scan of the
-        // export (the write itself still fails loud on any IO error).
         // `pulledTo` (a sinceBatch pull's resolved frontier) rides the
         // report as batch_id — the value the consumer records and
         // passes back as the next pull's sinceBatch
-        val cached = df.persist()
-        try {
-          val n = cached.count()
-          cached.write.mode("overwrite").parquet(out)
-          Report(e.kind, applied = true, batchId = pulledTo,
-            rows = Some(n), output = Some(out))
-        } finally { cached.unpersist(); () }
+        Report(e.kind, applied = true, batchId = pulledTo,
+          rows = Some(writeCounted(df, out)), output = Some(out))
       case st: StatusViewConfig =>
         val root = resolve(st.statePath, dataDir)
         Report(st.kind, applied = false,
@@ -455,13 +449,8 @@ object ViewMaintenance {
                 ex.getMessage.contains("no aux view") =>
             throw new UserException(s"maintainView diff: ${ex.getMessage}")
         }
-        val cached = df.persist()
-        try {
-          val n = cached.count()
-          cached.write.mode("overwrite").parquet(out)
-          Report(d.kind, applied = true, rows = Some(n),
-            output = Some(out))
-        } finally { cached.unpersist(); () }
+        Report(d.kind, applied = true, rows = Some(writeCounted(df, out)),
+          output = Some(out))
       case f: FsckViewConfig =>
         val root = resolve(f.statePath, dataDir)
         Report(f.kind, applied = false,
@@ -848,7 +837,8 @@ object ViewMaintenance {
   private def runLookup(spark: SparkSession, lk: LookupViewConfig,
                         dataDir: String): Report = {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{StructField, StructType, StringType}
+    import org.apache.spark.sql.types.{DataType, StructField, StructType,
+      StringType}
     val root = resolve(lk.statePath, dataDir)
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -904,42 +894,48 @@ object ViewMaintenance {
         ("view", JoinView.lookupView(spark, root,
           typedKeys(view.schema), lk.asOf))
       } else if (pin.startsWith("cdcRollup|")) {
-        // key TYPES come from the current state's schema — identical
-        // at every retained snapshot (the pin refuses type drift), so
-        // an as-of probe types its keys the same way
+        // key TYPES come from the layout pin — identical at every
+        // retained snapshot (the pin refuses type drift), so an as-of
+        // probe types its keys the same way
+        val layout = graft.operators.CdcRollup.parseLayout(pin, root)
+        val pinned = StructType(layout.typed.toSeq.sorted.map {
+          case (c, t) => StructField(c, DataType.fromDDL(t))
+        })
+        // nothing in the probed buckets: a layer holding no rows at
+        // all is no committed state
+        def orNoState(found: Option[DataFrame])(
+            layer: => Option[DataFrame]): Option[DataFrame] =
+          found.orElse { if (layer.isEmpty) noState; None }
         lk.layer.getOrElse("base") match {
           case "base" =>
-            val base = graft.operators.CdcRollup.readBase(spark, root)
-              .getOrElse(noState)
-            ("base", gated(graft.operators.CdcRollup.lookupBase(spark,
-              root, typedKeys(base.schema), lk.asOf)))
+            ("base", orNoState(gated(graft.operators.CdcRollup.lookupBase(
+              spark, root, typedKeys(pinned), lk.asOf)))(
+              graft.operators.CdcRollup.readBase(spark, root)))
           case l if l.startsWith("aux:") =>
             val name = l.stripPrefix("aux:")
             // undeclared name = config misuse, exit 1
-            val aux = try graft.operators.CdcRollup
-              .readAuxView(spark, root, name)
+            try graft.operators.CdcRollup.requireAuxDeclared(layout, root,
+              name)
             catch {
               case ex: IllegalArgumentException =>
                 throw new UserException(
                   s"maintainView lookup: ${ex.getMessage}")
             }
-            (l, gated(graft.operators.CdcRollup.lookupAuxView(spark,
-              root, name, typedKeys(aux.getOrElse(noState).schema),
-              lk.asOf)))
+            (l, orNoState(gated(graft.operators.CdcRollup.lookupAuxView(
+              spark, root, name, typedKeys(pinned), lk.asOf)))(
+              graft.operators.CdcRollup.readAuxView(spark, root, name)))
           case _ =>
-            val view = graft.operators.CdcRollup.readView(spark, root)
-              .getOrElse(noState)
-            ("view", gated(graft.operators.CdcRollup.lookupView(spark,
-              root, typedKeys(view.schema), lk.asOf)))
+            ("view", orNoState(gated(graft.operators.CdcRollup.lookupView(
+              spark, root, typedKeys(pinned), lk.asOf)))(
+              graft.operators.CdcRollup.readView(spark, root)))
         }
       } else {
         // rollup pin: nBuckets|keys|valueCol — key types come from the
-        // state's own parquet schema (the pin is names-only)
+        // state's own parquet footer (the pin is names-only)
         val statePq = new org.apache.hadoop.fs.Path(root, "state")
         if (!fs.exists(statePq)) noState
-        val stateSchema = spark.read.parquet(statePq.toString).schema
-        ("view", graft.streaming.EventStreams.lookupRollupState(
-          spark, root, typedKeys(stateSchema), lk.asOf))
+        ("view", graft.streaming.EventStreams.lookupRollupState(spark, root,
+          typedKeys(ParquetFooter.schema(spark, fs, Seq(statePq))), lk.asOf))
       }
     val json = result.map(_.toJSON.take(lk.maxRows + 1))
       .getOrElse(Array.empty[String])
@@ -1076,7 +1072,7 @@ object ViewMaintenance {
         ("rollup", layers,
           if (!countRows) None
           else Some(if (fs.exists(statePq))
-            spark.read.parquet(statePq.toString).count()
+            ParquetFooter.read(spark, fs, Seq(statePq)).count()
           else 0L))
       }
     // as-of floor: cdcRollup = retention mode (null = off); join =
@@ -1131,7 +1127,10 @@ object ViewMaintenance {
         // has no quarantine sink, so bad data must never fold silently
         graft.sources.CsvIngest.castAndProjectStrict(
           graft.sources.CsvIngest.read(spark, path, tc), tc)
-      case _ => spark.read.parquet(path)
+      case _ =>
+        val p = new org.apache.hadoop.fs.Path(path)
+        ParquetFooter.read(spark,
+          p.getFileSystem(spark.sessionState.newHadoopConf()), Seq(p))
     }
     d.cdc match {
       case Some(c) =>
@@ -1142,6 +1141,16 @@ object ViewMaintenance {
         Load.cdcNetEffect(raw, c.keyColumns, c.seqColumn, c.opColumn)
       case None => raw
     }
+  }
+
+  /** Write `df` to `out` as parquet and return its row count, observed
+    * on that one write: no persist, no count job. A failed write
+    * throws before the observation is read. */
+  private def writeCounted(df: DataFrame, out: String): Long = {
+    val rows = org.apache.spark.sql.Observation()
+    df.observe(rows, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(out)
+    rows.get("rows").asInstanceOf[Long]
   }
 
   private def resolve(path: String, dataDir: String): String =

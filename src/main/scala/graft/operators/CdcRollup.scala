@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.ParquetFooter
 import graft.state.FoldStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -933,7 +934,12 @@ object CdcRollup {
     val pin = graft.sources.PartitionedStore.readPin(fs, rootPath)
       .getOrElse(throw new IllegalStateException(
         s"readAuxView: no layout pin under $root — not a cdcRollup state"))
-    val layout = parseLayout(pin, root)
+    requireAuxDeclared(parseLayout(pin, root), root, name)
+  }
+
+  /** Refuses an aux `name` the `layout` never declared. */
+  private[graft] def requireAuxDeclared(layout: Layout, root: String,
+                                        name: String): Unit = {
     require(layout.auxViews.exists(_._1 == name),
       s"readAuxView: no aux view '$name' declared under $root (has: " +
         s"${layout.auxViews.map(_._1).mkString(", ")}) — an " +
@@ -974,23 +980,17 @@ object CdcRollup {
           "bucketing is type-sensitive, a drifted lookup would probe " +
           "the wrong buckets and miss silently; cast to the pinned type")
     }
-    val probe = keys.distinct().persist()
-    try {
-      val bucketOf = pmod(xxhash64(cols.map(col): _*),
-        lit(layout.nAggBuckets)).cast("int")
-      val touched = probe.select(bucketOf.as("__b")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      // per-bucket gate: a cold key's history outlives hot-bucket
-      // churn ([[requireServableBuckets]])
-      asOf.foreach(requireServableBuckets(fs, rootPath, _,
-        s"aux_$name", touched))
-      FoldStore.read(spark, fs, rootPath, s"aux_$name", Some(touched),
-        BatchMarkers.read(fs, rootPath), asOf)
-        .map { agg =>
-          val cond = cols.map(c => agg(c) <=> probe(c)).reduce(_ && _)
-          agg.join(probe, cond, "left_semi")
-        }
-    } finally { probe.unpersist(); () }
+    val touched = FoldStore.probeBuckets(keys, cols, layout.nAggBuckets)
+    // per-bucket gate: a cold key's history outlives hot-bucket churn
+    // ([[requireServableBuckets]])
+    asOf.foreach(requireServableBuckets(fs, rootPath, _, s"aux_$name",
+      touched))
+    FoldStore.read(spark, fs, rootPath, s"aux_$name", Some(touched),
+      BatchMarkers.read(fs, rootPath), asOf)
+      .map { agg =>
+        val cond = cols.map(c => agg(c) <=> keys(c)).reduce(_ && _)
+        agg.join(keys, cond, "left_semi")
+      }
   }
 
   // ---- as-of snapshot reads ---------------------------------------
@@ -1594,8 +1594,6 @@ object CdcRollup {
         "in flight? a hand-deleted dir?); re-baseline the consumer " +
         "with a full export. enableChangeLog requires the " +
         "single-writer discipline: no fold in flight at enable time")
-    val dirs = inRange.map(_.path).filter(p =>
-      graft.sources.PartitionedStore.hasDataEntries(fs, p))
     import org.apache.spark.sql.types.{LongType, StringType,
       StructField, StructType}
     val rawSchema = StructType(
@@ -1604,11 +1602,10 @@ object CdcRollup {
         states.map { case (c, t) => StructField(s"${c}_to", t) } ++
         Seq(StructField("change", StringType),
           StructField("__batch_id", LongType)))
-    val raw =
-      if (dirs.isEmpty) spark.createDataFrame(
+    val raw = ParquetFooter.readHoldingData(spark, fs, inRange.map(_.path))
+      .getOrElse(spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        rawSchema)
-      else spark.read.parquet(dirs.map(_.toString): _*)
+        rawSchema))
     val fromStruct = struct((stateCols.map(c => col(s"${c}_from")) :+
       col("change").as("__chg")): _*)
     val toStruct = struct((stateCols.map(c => col(s"${c}_to")) :+
@@ -1716,23 +1713,14 @@ object CdcRollup {
           "type-sensitive, a drifted lookup would probe the wrong " +
           "buckets and miss silently; cast to the pinned type")
     }
-    val probe = keys.distinct().persist()
-    try {
-      require(probe.filter(pkCols.map(col(_).isNull).reduce(_ || _))
-          .isEmpty,
-        "lookupBase: NULL in a pk column — a NULL key can never match")
-      val bucketOf = pmod(xxhash64(pkCols.map(col): _*),
-        lit(nBaseBuckets)).cast("int")
-      val touched = probe.select(bucketOf.as("__b")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      // per-bucket gate: a cold key's history outlives hot-bucket
-      // churn ([[requireServableBuckets]])
-      asOf.foreach(requireServableBuckets(fs, rootPath, _, "base",
-        touched))
-      FoldStore.read(spark, fs, rootPath, "base", Some(touched),
-        BatchMarkers.read(fs, rootPath), asOf)
-        .map(_.join(probe, pkCols, "left_semi"))
-    } finally { probe.unpersist(); () }
+    val touched = FoldStore.probeBuckets(keys, pkCols, nBaseBuckets,
+      Some("lookupBase: NULL in a pk column — a NULL key can never match"))
+    // per-bucket gate: a cold key's history outlives hot-bucket churn
+    // ([[requireServableBuckets]])
+    asOf.foreach(requireServableBuckets(fs, rootPath, _, "base", touched))
+    FoldStore.read(spark, fs, rootPath, "base", Some(touched),
+      BatchMarkers.read(fs, rootPath), asOf)
+      .map(_.join(keys, pkCols, "left_semi"))
   }
 
   /** Bucket-pruned POINT LOOKUP into the VIEW (agg) layer — the
@@ -1770,24 +1758,16 @@ object CdcRollup {
           "type-sensitive, a drifted lookup would probe the wrong " +
           "buckets and miss silently; cast to the pinned type")
     }
-    val probe = keys.distinct().persist()
-    try {
-      val bucketOf = pmod(xxhash64(groupCols.map(col): _*),
-        lit(nAggBuckets)).cast("int")
-      val touched = probe.select(bucketOf.as("__b")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      // per-bucket gate: a cold key's history outlives hot-bucket
-      // churn ([[requireServableBuckets]])
-      asOf.foreach(requireServableBuckets(fs, rootPath, _, "agg",
-        touched))
-      FoldStore.read(spark, fs, rootPath, "agg", Some(touched),
-        BatchMarkers.read(fs, rootPath), asOf)
-        .map { agg =>
-          val cond = groupCols.map(c => agg(c) <=> probe(c))
-            .reduce(_ && _)
-          agg.join(probe, cond, "left_semi")
-        }
-    } finally { probe.unpersist(); () }
+    val touched = FoldStore.probeBuckets(keys, groupCols, nAggBuckets)
+    // per-bucket gate: a cold key's history outlives hot-bucket churn
+    // ([[requireServableBuckets]])
+    asOf.foreach(requireServableBuckets(fs, rootPath, _, "agg", touched))
+    FoldStore.read(spark, fs, rootPath, "agg", Some(touched),
+      BatchMarkers.read(fs, rootPath), asOf)
+      .map { agg =>
+        val cond = groupCols.map(c => agg(c) <=> keys(c)).reduce(_ && _)
+        agg.join(keys, cond, "left_semi")
+      }
   }
 
   /** Reap ABANDONED batch garbage — the CDC sibling of

@@ -306,20 +306,13 @@ object JoinView {
           "lookup would probe the wrong buckets and miss silently; " +
           "cast to the pinned type")
     }
-    val probe = keys.distinct().persist()
-    try {
-      require(probe.filter(col(key).isNull).isEmpty,
-        "lookupView: NULL join key — an inner-join view never holds it")
-      asOf.foreach(requireAsofServable(fs, rootPath, _))
-      val touched = probe
-        .select(pmod(xxhash64(col(key)), lit(nBuckets)).cast("int")
-          .as("__b"))
-        .distinct().collect().map(_.getInt(0)).toSet
-      FoldStore.readBatches(spark, fs, rootPath, "view", "d",
-        BatchMarkers.read(fs, rootPath), Some(touched),
-        id => asOf.forall(id <= _))
-        .map(_.join(probe, Seq(key), "left_semi"))
-    } finally { probe.unpersist(); () }
+    val touched = FoldStore.probeBuckets(keys, Seq(key), nBuckets,
+      Some("lookupView: NULL join key — an inner-join view never holds it"))
+    asOf.foreach(requireAsofServable(fs, rootPath, _))
+    FoldStore.readBatches(spark, fs, rootPath, "view", "d",
+      BatchMarkers.read(fs, rootPath), Some(touched),
+      id => asOf.forall(id <= _))
+      .map(_.join(keys, Seq(key), "left_semi"))
   }
 
   /** The view AS OF `asOf` — FREE on this family: batch dirs are

@@ -1,6 +1,8 @@
 package graft.state
 
 import graft.operators.BatchMarkers
+import graft.sources.ParquetFooter
+import graft.sources.ParquetFooter.list
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -44,7 +46,12 @@ import org.apache.spark.sql.functions._
   * Reads: a bucket AS OF `a` is its highest committed version with
   * id <= a ([[read]]); the buckets that can differ between two
   * snapshots are exactly those holding a committed version in the
-  * range ([[changedBuckets]]), so a diff costs O(changed buckets).
+  * range ([[changedBuckets]]), so a diff costs O(changed buckets). A
+  * read costs listings, one footer (its schema, taken on the driver
+  * from the listings it already made: [[graft.sources.ParquetFooter]])
+  * and the jobs that move rows; a point lookup learns its buckets
+  * from one collect of its keys ([[probeBuckets]]), which runs no job
+  * on a local key frame.
   *
   * Crash rules, every one erring conservative (refusing a servable
   * read, never serving a wrong one):
@@ -87,11 +94,6 @@ private[graft] object FoldStore {
   private def bucketId(name: String): Option[Int] =
     if (name.startsWith("bucket=")) name.stripPrefix("bucket=").toIntOption
     else None
-
-  /** Children of `p`, empty when it does not exist (one list call). */
-  private def list(fs: FileSystem, p: Path): Seq[FileStatus] =
-    try fs.listStatus(p).toSeq
-    catch { case _: java.io.FileNotFoundException => Nil }
 
   /** An id-carrying entry: a staging shell, a version or a batch dir. */
   final case class Entry(status: FileStatus, id: Long, staging: Boolean) {
@@ -157,25 +159,31 @@ private[graft] object FoldStore {
       .filter(markers.committed).map(_ -> v)).sortBy(_._1)
 
   /** The latest committed version <= `asOf` of each bucket of `layer`
-    * (restricted to `buckets` when given) that holds data — a
-    * retracted-to-empty version resolves the bucket to nothing. */
-  private def resolve(fs: FileSystem, root: Path, layer: String,
-              buckets: Option[Set[Int]], markers: BatchMarkers.Markers,
-              asOf: Option[Long] = None): Seq[Path] =
-    bucketDirs(fs, root, layer, buckets).flatMap { case (_, b) =>
-      chain(fs, b, markers).filter { case (id, _) => asOf.forall(id <= _) }
-        .lastOption.map(_._2.getPath)
-    }.filter(graft.sources.PartitionedStore.hasDataEntries(fs, _))
-
-  /** [[resolve]] read as one frame; None when nothing resolved holds
-    * data. */
+    * (restricted to `buckets` when given), read as one frame; a
+    * retracted-to-empty version resolves the bucket to nothing. None
+    * when nothing resolved holds data. */
   def read(spark: SparkSession, fs: FileSystem, root: Path, layer: String,
            buckets: Option[Set[Int]], markers: BatchMarkers.Markers,
            asOf: Option[Long] = None): Option[DataFrame] =
-    resolve(fs, root, layer, buckets, markers, asOf) match {
-      case Seq() => None
-      case dirs  => Some(spark.read.parquet(dirs.map(_.toString): _*))
-    }
+    ParquetFooter.readHoldingData(spark, fs,
+      bucketDirs(fs, root, layer, buckets).flatMap { case (_, b) =>
+        chain(fs, b, markers).filter { case (id, _) => asOf.forall(id <= _) }
+          .lastOption.map(_._2.getPath)
+      })
+
+  /** The buckets `keys` hash into under the folds' bucket function,
+    * `pmod(xxhash64(cols), nBuckets)`: ONE collect of an (any-key-NULL,
+    * bucket) pair per key row. No persist and no distinct (a lookup's
+    * left-semi join ignores duplicate keys), and no job at all on a
+    * local key frame. `nullRefusal` refuses a key with a NULL
+    * component with that message. */
+  def probeBuckets(keys: DataFrame, cols: Seq[String], nBuckets: Int,
+                   nullRefusal: Option[String] = None): Set[Int] = {
+    val pairs = keys.select(cols.map(col(_).isNull).reduce(_ || _),
+      pmod(xxhash64(cols.map(col): _*), lit(nBuckets)).cast("int")).collect()
+    nullRefusal.foreach(msg => require(!pairs.exists(_.getBoolean(0)), msg))
+    pairs.map(_.getInt(1)).toSet
+  }
 
   // ---- change sets --------------------------------------------------
 
@@ -489,7 +497,7 @@ private[graft] object FoldStore {
             n.stripPrefix("__bucket=").toIntOption.exists(bs.contains))
         }) match {
       case Seq() => None
-      case dirs  => Some(spark.read.parquet(dirs.map(_.toString): _*))
+      case dirs  => Some(ParquetFooter.read(spark, fs, dirs))
     }
 
   /** Rename `<layer>/.staging<id>/<partCol>=<k>` children into their

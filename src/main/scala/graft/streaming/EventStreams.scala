@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.ParquetFooter
 import graft.state.FoldStore
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -1118,7 +1119,7 @@ object EventStreams {
       if (!retainOn || touched.isEmpty) return
       if (graft.operators.BatchMarkers.read(fs, root)
           .committed(batchId)) return // fully finished before
-      val slice = spark.read.parquet(cur.toString)
+      val slice = ParquetFooter.read(spark, fs, Seq(cur))
         .filter(col("bucket")
           .isin(touched.map(b => lit(b): Column): _*))
       FoldStore.writeVersion(fs, root, "history", batchId, slice, "bucket",
@@ -1230,7 +1231,7 @@ object EventStreams {
       val oldSlice =
         if (havePrior)
           // partition-pruned: only the pending buckets' files scan
-          Some(spark.read.parquet(cur.toString)
+          Some(ParquetFooter.read(spark, fs, Seq(cur))
             .filter(col("bucket").isin(pendingCols: _*)))
         else None
       val merged = oldSlice match {
@@ -1384,7 +1385,7 @@ object EventStreams {
       fs.mkdirs(root)
       if (floor >= 0 && fs.exists(cur)) {
         FoldStore.writeVersion(fs, root, "history", floor,
-          spark.read.parquet(cur.toString), "bucket")
+          ParquetFooter.read(spark, fs, Seq(cur)), "bucket")
         graft.operators.BatchMarkers.commit(fs, root, floor)
       }
       graft.operators.BatchMarkers.writeFloor(fs, root, floor)
@@ -1677,7 +1678,7 @@ object EventStreams {
         s"readRollupViewLog: no state rows under $statePath — " +
           "nothing was ever logged; pull after the first non-empty " +
           "fold")
-    val sch = spark.read.parquet(cur.toString).schema
+    val sch = ParquetFooter.schema(spark, fs, Seq(cur))
     import org.apache.spark.sql.types.{DoubleType, LongType}
     val vType = sch("agg_min").dataType
     val keyTypes = keys.map(c => c -> sch(c).dataType)
@@ -1811,7 +1812,7 @@ object EventStreams {
         s"(${keys.columns.mkString(", ")}) — project upstream")
     val cur = new Path(root, "state")
     if (!fs.exists(cur)) return None
-    val state = spark.read.parquet(cur.toString)
+    val state = ParquetFooter.read(spark, fs, Seq(cur))
     keyCols.foreach { c =>
       val got = keys.schema(c).dataType.catalogString
       val want = state.schema(c).dataType.catalogString
@@ -1821,31 +1822,22 @@ object EventStreams {
           "drifted probe would prune the wrong partitions and miss " +
           "silently; cast to the stored type")
     }
-    val probe = keys.distinct().persist()
-    try {
-      val bucketOf = pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets))
-        .cast("int")
-      val touched = probe.select(bucketOf.as("__b")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val pruned = asOf match {
-        case Some(a) =>
-          // as-of: resolve ONLY the touched buckets' history chains
-          // (floor + retention-mode gates live in the read)
-          readRollupStateAsOf(spark, statePath, a,
-            Some(touched.toSet)) match {
-            case Some(st) => st
-            case None => return None
-          }
-        case None => state
-          .filter(col("bucket")
-            .isin(touched.map(b => lit(b): Column): _*))
-          .drop("bucket")
-      }
-      val fin = graft.operators.IncrementalAgg
-        .finalizeState(pruned, keyCols)
-      val cond = keyCols.map(c => fin(c) <=> probe(c)).reduce(_ && _)
-      Some(fin.join(probe, cond, "left_semi"))
-    } finally { probe.unpersist(); () }
+    val touched = FoldStore.probeBuckets(keys, keyCols, nBuckets)
+    val pruned = asOf match {
+      case Some(a) =>
+        // as-of: resolve ONLY the touched buckets' history chains
+        // (floor + retention-mode gates live in the read)
+        readRollupStateAsOf(spark, statePath, a, Some(touched)) match {
+          case Some(st) => st
+          case None => return None
+        }
+      case None => state
+        .filter(col("bucket").isin(touched.toSeq.map(b => lit(b): Column): _*))
+        .drop("bucket")
+    }
+    val fin = graft.operators.IncrementalAgg.finalizeState(pruned, keyCols)
+    val cond = keyCols.map(c => fin(c) <=> keys(c)).reduce(_ && _)
+    Some(fin.join(keys, cond, "left_semi"))
   }
 
   /** Compact a long-lived bucketed rollup state into a FRESH root —
@@ -1931,7 +1923,7 @@ object EventStreams {
     // the (possibly new) bucket count
     graft.sources.PartitionedStore.pinLayout(fs, freshRoot, freshPath,
       s"$nB|${parts(1)}|${parts(2)}")
-    val state = spark.read.parquet(cur.toString).drop("bucket")
+    val state = ParquetFooter.read(spark, fs, Seq(cur)).drop("bucket")
     val bucketOf = pmod(xxhash64(keys.map(col): _*), lit(nB))
       .cast("int").as("bucket")
     val stage = new Path(freshRoot,
@@ -1968,11 +1960,12 @@ object EventStreams {
     if (graft.operators.BatchMarkers.readFloor(fs, root).isDefined) {
       val floor = seedId
       FoldStore.writeVersion(fs, freshRoot, "history", floor,
-        spark.read.parquet(new Path(freshRoot, "state").toString), "bucket")
+        ParquetFooter.read(spark, fs, Seq(new Path(freshRoot, "state"))),
+        "bucket")
       graft.operators.BatchMarkers.commit(fs, freshRoot, floor)
       graft.operators.BatchMarkers.writeFloor(fs, freshRoot, floor)
     }
-    spark.read.parquet(new Path(freshRoot, "state").toString).count()
+    ParquetFooter.read(spark, fs, Seq(new Path(freshRoot, "state"))).count()
   }
 
   /** One batch's fold, exposed for the replay-idempotence spec.
@@ -2024,7 +2017,7 @@ object EventStreams {
       distinctCol, trackQuantiles)
     val next =
       if (fs.exists(cur))
-        IncrementalAgg.mergeStates(spark.read.parquet(cur.toString),
+        IncrementalAgg.mergeStates(ParquetFooter.read(spark, fs, Seq(cur)),
           partial, keys)
       else partial
     val stage = new Path(root,

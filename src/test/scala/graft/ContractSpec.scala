@@ -100,4 +100,33 @@ class ContractSpec extends AnyFunSuite with Matchers {
     java.nio.file.Files.exists(owner) shouldBe true
     offenders.result() shouldBe empty
   }
+
+  test("view paths read parquet only through the footer helper") {
+    // a schema-less parquet read runs Spark's schema-inference job;
+    // graft.sources.ParquetFooter reads the same footer on the driver
+    val shape = """read\s*\.\s*(parquet\s*\(|format\s*\(\s*"parquet"\s*\))""".r
+    Seq("spark.read.parquet(p)", "spark.read\n  .parquet(a, b)",
+      """spark.read.format("parquet").load(p)""").foreach(l =>
+      shape.findFirstIn(l).isDefined shouldBe true)
+    Seq("spark.read.schema(s).parquet(p)", "ParquetFooter.read(spark, fs, ps)",
+      "df.write.parquet(out)").foreach(l => shape.findFirstIn(l).isDefined shouldBe false)
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val viewPaths = Seq("state", "operators/CdcRollup.scala",
+      "operators/JoinView.scala", "streaming/EventStreams.scala",
+      "app/ViewMaintenance.scala", "app/ViewFsck.scala", "app/ViewRepair.scala")
+      .map(root.resolve(_))
+    val offenders = Seq.newBuilder[String]
+    viewPaths.foreach { p =>
+      java.nio.file.Files.exists(p) shouldBe true
+      java.nio.file.Files.walk(p).iterator().forEachRemaining { f =>
+        if (f.toString.endsWith(".scala")) {
+          val text = java.nio.file.Files.readString(f)
+          shape.findAllMatchIn(text).foreach { m =>
+            offenders += s"${root.relativize(f)}:${text.take(m.start).count(_ == '\n') + 1}"
+          }
+        }
+      }
+    }
+    offenders.result() shouldBe empty
+  }
 }
