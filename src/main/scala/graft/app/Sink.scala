@@ -163,10 +163,11 @@ final class ParquetSink(spark: SparkSession, baseDir: String) extends TableSink 
   def read(name: String): DataFrame =
     graft.sources.ParquetFooter.read(spark, fs, Seq(path(name)))
 
-  /** The schema Spark stored in one data file's footer, read on the
-    * driver; a directory without one falls back to the inference. */
+  /** The footer's schema without building a read: a load plans against
+    * it, and the read's file index would list the table again. */
   override def schema(name: String): StructType =
-    graft.sources.ParquetFooter.schema(spark, fs, Seq(path(name)))
+    graft.sources.ParquetFooter.footerSchema(spark, fs, Seq(path(name)))
+      .getOrElse(read(name).schema)
 
   def overwrite(df: DataFrame, name: String): Unit = {
     val stage = path(

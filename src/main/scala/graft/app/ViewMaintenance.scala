@@ -6,6 +6,8 @@ import graft.sources.ParquetFooter
 import graft.state.FoldStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Runner for the `maintainView` action — the CLI face of the
   * incremental view-maintenance library ([[graft.operators.JoinView]],
@@ -934,8 +936,8 @@ object ViewMaintenance {
         // state's own parquet footer (the pin is names-only)
         val statePq = new org.apache.hadoop.fs.Path(root, "state")
         if (!fs.exists(statePq)) noState
-        ("view", graft.streaming.EventStreams.lookupRollupState(spark, root,
-          typedKeys(ParquetFooter.schema(spark, fs, Seq(statePq))), lk.asOf))
+        ("view", graft.streaming.EventStreams.lookupRollupStateWith(spark,
+          root, typedKeys, lk.asOf))
       }
     val json = result.map(_.toJSON.take(lk.maxRows + 1))
       .getOrElse(Array.empty[String])
@@ -1145,12 +1147,21 @@ object ViewMaintenance {
 
   /** Write `df` to `out` as parquet and return its row count, observed
     * on that one write: no persist, no count job. A failed write
-    * throws before the observation is read. */
-  private def writeCounted(df: DataFrame, out: String): Long = {
+    * throws before the observation is read. The observation arrives
+    * through the listener bus, which drops events when its queue is
+    * full: past 10 s the written output is counted instead. */
+  private[graft] def writeCounted(df: DataFrame, out: String): Long = {
     val rows = org.apache.spark.sql.Observation()
     df.observe(rows, count(lit(1)).as("rows"))
       .write.mode("overwrite").parquet(out)
-    rows.get("rows").asInstanceOf[Long]
+    try Await.result(rows.future, 10.seconds).getLong(0)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        val p = new org.apache.hadoop.fs.Path(out)
+        ParquetFooter.read(df.sparkSession,
+          p.getFileSystem(df.sparkSession.sessionState.newHadoopConf()),
+          Seq(p)).count()
+    }
   }
 
   private def resolve(path: String, dataDir: String): String =

@@ -953,45 +953,16 @@ object CdcRollup {
     * Refuses an undeclared name. */
   def lookupAuxView(spark: SparkSession, root: String, name: String,
                     keys: DataFrame,
-                    asOf: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val pin = graft.sources.PartitionedStore.readPin(fs, rootPath)
-      .getOrElse(throw new IllegalStateException(
-        s"lookupAuxView: no layout pin under $root — not a cdcRollup " +
-          "state"))
-    val layout = parseLayout(pin, root)
-    val cols = layout.auxViews.collectFirst {
-      case (n, cs) if n == name => cs
-    }.getOrElse(throw new IllegalArgumentException(
-      s"lookupAuxView: no aux view '$name' declared under $root (has: " +
-        s"${layout.auxViews.map(_._1).mkString(", ")}) — an " +
-        "undeclared layer would read as silently empty"))
-    require(keys.columns.sorted.toSeq == cols.sorted,
-      s"lookupAuxView: the key frame must carry exactly aux view " +
-        s"'$name''s group columns (${cols.mkString(", ")}), got " +
-        s"(${keys.columns.mkString(", ")}) — project upstream")
-    cols.foreach { c =>
-      val got = keys.schema(c).dataType.catalogString
-      require(layout.typed.get(c).contains(got),
-        s"lookupAuxView: group column '$c' is $got but the state " +
-          s"pinned ${layout.typed.getOrElse(c, "?")} — xxhash64 " +
-          "bucketing is type-sensitive, a drifted lookup would probe " +
-          "the wrong buckets and miss silently; cast to the pinned type")
+                    asOf: Option[Long] = None): Option[DataFrame] =
+    lookupLayer(spark, root, "lookupAuxView", keys, asOf,
+      s"aux view '$name''s group columns", "group column", None) { l =>
+      (s"aux_$name", l.auxViews.collectFirst {
+        case (n, cs) if n == name => cs
+      }.getOrElse(throw new IllegalArgumentException(
+        s"lookupAuxView: no aux view '$name' declared under $root (has: " +
+          s"${l.auxViews.map(_._1).mkString(", ")}) — an " +
+          "undeclared layer would read as silently empty")), l.nAggBuckets)
     }
-    val touched = FoldStore.probeBuckets(keys, cols, layout.nAggBuckets)
-    // per-bucket gate: a cold key's history outlives hot-bucket churn
-    // ([[requireServableBuckets]])
-    asOf.foreach(requireServableBuckets(fs, rootPath, _, s"aux_$name",
-      touched))
-    FoldStore.read(spark, fs, rootPath, s"aux_$name", Some(touched),
-      BatchMarkers.read(fs, rootPath), asOf)
-      .map { agg =>
-        val cond = cols.map(c => agg(c) <=> keys(c)).reduce(_ && _)
-        agg.join(keys, cond, "left_semi")
-      }
-  }
 
   // ---- as-of snapshot reads ---------------------------------------
 
@@ -1684,44 +1655,18 @@ object CdcRollup {
     * frame would probe the wrong buckets and silently miss every
     * match; it refuses instead. NULL key components refuse for the
     * same reason the fold refuses them (never matchable). The touched-
-    * bucket probe collects ≤ nBaseBuckets rows regardless of how many
-    * keys are asked. `asOf` serves the images as of that batch
+    * bucket probe collects ≤ 2 * nBaseBuckets rows from a scanned key
+    * frame regardless of how many keys are asked, and one row per key
+    * (no job) from a local one ([[FoldStore.bucketPairs]]). `asOf` serves the images as of that batch
     * (retention mode required — [[readBaseAsOf]] semantics, still
     * bucket-pruned). None before the first commit. */
   def lookupBase(spark: SparkSession, root: String,
                  keys: DataFrame,
-                 asOf: Option[Long] = None): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val pin = graft.sources.PartitionedStore.readPin(fs, rootPath)
-      .getOrElse(throw new IllegalStateException(
-        s"lookupBase: no layout pin under $root — not a cdcRollup state"))
-    val layout = parseLayout(pin, root)
-    val typed = layout.typed
-    val pkCols = layout.pkCols
-    val nBaseBuckets = layout.nBaseBuckets
-    require(keys.columns.sorted.toSeq == pkCols.sorted,
-      s"lookupBase: the key frame must carry exactly the pinned pk " +
-        s"columns (${pkCols.mkString(", ")}), got " +
-        s"(${keys.columns.mkString(", ")}) — project upstream")
-    pkCols.foreach { c =>
-      val got = keys.schema(c).dataType.catalogString
-      require(typed.get(c).contains(got),
-        s"lookupBase: key column '$c' is $got but the state pinned " +
-          s"${typed.getOrElse(c, "?")} — xxhash64 bucketing is " +
-          "type-sensitive, a drifted lookup would probe the wrong " +
-          "buckets and miss silently; cast to the pinned type")
-    }
-    val touched = FoldStore.probeBuckets(keys, pkCols, nBaseBuckets,
-      Some("lookupBase: NULL in a pk column — a NULL key can never match"))
-    // per-bucket gate: a cold key's history outlives hot-bucket churn
-    // ([[requireServableBuckets]])
-    asOf.foreach(requireServableBuckets(fs, rootPath, _, "base", touched))
-    FoldStore.read(spark, fs, rootPath, "base", Some(touched),
-      BatchMarkers.read(fs, rootPath), asOf)
-      .map(_.join(keys, pkCols, "left_semi"))
-  }
+                 asOf: Option[Long] = None): Option[DataFrame] =
+    lookupLayer(spark, root, "lookupBase", keys, asOf,
+      "the pinned pk columns", "key column",
+      Some("lookupBase: NULL in a pk column — a NULL key can never match"))(
+      l => ("base", l.pkCols, l.nBaseBuckets))
 
   /** Bucket-pruned POINT LOOKUP into the VIEW (agg) layer — the
     * group-keyed sibling of [[lookupBase]]: reads ONLY the agg bucket
@@ -1735,39 +1680,52 @@ object CdcRollup {
     * required). None before the first commit. */
   def lookupView(spark: SparkSession, root: String,
                  keys: DataFrame,
-                 asOf: Option[Long] = None): Option[DataFrame] = {
+                 asOf: Option[Long] = None): Option[DataFrame] =
+    lookupLayer(spark, root, "lookupView", keys, asOf,
+      "the pinned group columns", "group column", None)(
+      l => ("agg", l.groupCols, l.nAggBuckets))
+
+  /** The point lookup behind [[lookupBase]], [[lookupView]] and
+    * [[lookupAuxView]] (`fn` in its refusals): `pick` gives the layer,
+    * its key columns and bucket count from the layout; `keys` must
+    * carry exactly those columns (`colsNoun`) with the pinned types.
+    * Reads only the buckets the keys hash into
+    * ([[FoldStore.probeBuckets]], refusing NULL keys with
+    * `nullRefusal`), gated per bucket when `asOf` is given, then
+    * null-safe semi-joins the keys. */
+  private def lookupLayer(spark: SparkSession, root: String, fn: String,
+                          keys: DataFrame, asOf: Option[Long],
+                          colsNoun: String, colNoun: String,
+                          nullRefusal: Option[String])(
+      pick: Layout => (String, Seq[String], Int)): Option[DataFrame] = {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val pin = graft.sources.PartitionedStore.readPin(fs, rootPath)
       .getOrElse(throw new IllegalStateException(
-        s"lookupView: no layout pin under $root — not a cdcRollup state"))
+        s"$fn: no layout pin under $root — not a cdcRollup state"))
     val layout = parseLayout(pin, root)
-    val typed = layout.typed
-    val groupCols = layout.groupCols
-    val nAggBuckets = layout.nAggBuckets
-    require(keys.columns.sorted.toSeq == groupCols.sorted,
-      s"lookupView: the key frame must carry exactly the pinned group " +
-        s"columns (${groupCols.mkString(", ")}), got " +
+    val (layer, cols, nBuckets) = pick(layout)
+    require(keys.columns.sorted.toSeq == cols.sorted,
+      s"$fn: the key frame must carry exactly $colsNoun " +
+        s"(${cols.mkString(", ")}), got " +
         s"(${keys.columns.mkString(", ")}) — project upstream")
-    groupCols.foreach { c =>
+    cols.foreach { c =>
       val got = keys.schema(c).dataType.catalogString
-      require(typed.get(c).contains(got),
-        s"lookupView: group column '$c' is $got but the state pinned " +
-          s"${typed.getOrElse(c, "?")} — xxhash64 bucketing is " +
+      require(layout.typed.get(c).contains(got),
+        s"$fn: $colNoun '$c' is $got but the state pinned " +
+          s"${layout.typed.getOrElse(c, "?")} — xxhash64 bucketing is " +
           "type-sensitive, a drifted lookup would probe the wrong " +
           "buckets and miss silently; cast to the pinned type")
     }
-    val touched = FoldStore.probeBuckets(keys, groupCols, nAggBuckets)
+    val touched = FoldStore.probeBuckets(keys, cols, nBuckets, nullRefusal)
     // per-bucket gate: a cold key's history outlives hot-bucket churn
     // ([[requireServableBuckets]])
-    asOf.foreach(requireServableBuckets(fs, rootPath, _, "agg", touched))
-    FoldStore.read(spark, fs, rootPath, "agg", Some(touched),
+    asOf.foreach(requireServableBuckets(fs, rootPath, _, layer, touched))
+    FoldStore.read(spark, fs, rootPath, layer, Some(touched),
       BatchMarkers.read(fs, rootPath), asOf)
-      .map { agg =>
-        val cond = groupCols.map(c => agg(c) <=> keys(c)).reduce(_ && _)
-        agg.join(keys, cond, "left_semi")
-      }
+      .map(st => st.join(keys,
+        cols.map(c => st(c) <=> keys(c)).reduce(_ && _), "left_semi"))
   }
 
   /** Reap ABANDONED batch garbage — the CDC sibling of

@@ -11,7 +11,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * under the read paths, or a `_common_metadata`/`_metadata` summary
   * when one is present. This helper reads that same footer on the
   * driver and hands Spark the schema Spark stored there, so a read
-  * costs listings, one footer and the jobs that move rows. It falls
+  * costs listings, one footer and the jobs that move rows — while it
+  * lists at most 32 dirs at a level (Spark's
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold`; past it
+  * Spark lists them in a job). It falls
   * back to the inference (and its errors) when a summary file turns up
   * in a listing, when there is no data file, or when the footer does
   * not carry Spark's schema key. Partition columns are not in a footer:
@@ -66,39 +69,31 @@ private[graft] object ParquetFooter {
     }.toOption.flatten.flatMap(json => scala.util.Try(DataType.fromJson(json))
       .toOption.collect { case s: StructType => s })
 
-  /** The data columns of `paths` from one footer, None when Spark must
-    * infer them. `listed` holds listings the caller already made; any
-    * other dir is listed through `fs`. */
-  private def footerSchema(spark: SparkSession, fs: FileSystem,
-                           paths: Seq[Path],
-                           listed: Map[Path, Seq[FileStatus]]): Option[StructType] =
-    firstDataFile(paths, p => listed.getOrElse(p, list(fs, p)))
-      .flatMap(stored(spark, _))
-
-  /** `paths` read as parquet with the footer's schema; partition
+  /** `paths` read as parquet with the schema in one footer; Spark
+    * infers it when it must. `listed` holds listings the caller
+    * already made; any other dir is listed through `fs`. Partition
     * columns are discovered from the paths as usual. */
   def read(spark: SparkSession, fs: FileSystem, paths: Seq[Path],
            listed: Map[Path, Seq[FileStatus]] = Map.empty): DataFrame =
     footerSchema(spark, fs, paths, listed).fold(spark.read)(spark.read.schema(_))
       .parquet(paths.map(_.toString): _*)
 
-  /** The `dirs` holding a data entry (a name not starting with `_` or
-    * `.`: [[PartitionedStore.hasDataEntries]]), each listed once, read
-    * as one frame with the schema from those listings; None when none
-    * holds data. */
+  /** The data columns of `paths` from one footer, without building a
+    * read (whose file index lists the paths again); None when Spark
+    * must infer them. */
+  def footerSchema(spark: SparkSession, fs: FileSystem, paths: Seq[Path],
+                   listed: Map[Path, Seq[FileStatus]] = Map.empty): Option[StructType] =
+    firstDataFile(paths, p => listed.getOrElse(p, list(fs, p))).flatMap(stored(spark, _))
+
+  /** The `dirs` holding a data entry
+    * ([[PartitionedStore.isDataEntry]]), each listed once, read as one
+    * frame with the schema from those listings; None when none holds
+    * data. */
   def readHoldingData(spark: SparkSession, fs: FileSystem,
                       dirs: Seq[Path]): Option[DataFrame] =
-    dirs.map(d => d -> list(fs, d)).filter(_._2.exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }) match {
+    dirs.map(d => d -> list(fs, d))
+      .filter(_._2.exists(PartitionedStore.isDataEntry)) match {
       case Seq() => None
       case held  => Some(read(spark, fs, held.map(_._1), held.toMap))
     }
-
-  /** The schema of `paths` without building a read: the footer's data
-    * columns, or what the inference gives when it must run. */
-  def schema(spark: SparkSession, fs: FileSystem, paths: Seq[Path]): StructType =
-    footerSchema(spark, fs, paths, Map.empty)
-      .getOrElse(spark.read.parquet(paths.map(_.toString): _*).schema)
 }

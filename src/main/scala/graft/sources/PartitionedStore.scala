@@ -108,12 +108,16 @@ object PartitionedStore {
     fs.exists(target) && {
       val it = fs.listStatusIterator(target)
       var found = false
-      while (!found && it.hasNext) {
-        val n = it.next().getPath.getName
-        found = !n.startsWith("_") && !n.startsWith(".")
-      }
+      while (!found && it.hasNext) found = isDataEntry(it.next())
       found
     }
+
+  /** A listed entry that is data: its name starts with neither `_`
+    * nor `.` ([[hasDataEntries]]' rule, for callers holding a listing). */
+  private[graft] def isDataEntry(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val n = st.getPath.getName
+    !n.startsWith("_") && !n.startsWith(".")
+  }
 
   /** ONE stranded-stage audit for every partition-scoped writer here
     * (the day merge and the bucketed SCD2 merge) — the crash/replay

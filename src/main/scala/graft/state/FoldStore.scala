@@ -49,9 +49,11 @@ import org.apache.spark.sql.functions._
   * range ([[changedBuckets]]), so a diff costs O(changed buckets). A
   * read costs listings, one footer (its schema, taken on the driver
   * from the listings it already made: [[graft.sources.ParquetFooter]])
-  * and the jobs that move rows; a point lookup learns its buckets
-  * from one collect of its keys ([[probeBuckets]]), which runs no job
-  * on a local key frame.
+  * and the jobs that move rows (up to Spark's 32-dir parallel
+  * listing threshold); a point lookup learns its buckets from one
+  * collect of its keys ([[probeBuckets]]), which runs no job on a
+  * local key frame and collects at most two rows per bucket from any
+  * other.
   *
   * Crash rules, every one erring conservative (refusing a servable
   * read, never serving a wrong one):
@@ -172,17 +174,31 @@ private[graft] object FoldStore {
       })
 
   /** The buckets `keys` hash into under the folds' bucket function,
-    * `pmod(xxhash64(cols), nBuckets)`: ONE collect of an (any-key-NULL,
-    * bucket) pair per key row. No persist and no distinct (a lookup's
-    * left-semi join ignores duplicate keys), and no job at all on a
-    * local key frame. `nullRefusal` refuses a key with a NULL
-    * component with that message. */
+    * `pmod(xxhash64(cols), nBuckets)`, from ONE collect of
+    * [[bucketPairs]]. `nullRefusal` refuses a key with a NULL
+    * component with that message. The caller's join evaluates `keys`
+    * again, so a key frame must be deterministic. */
   def probeBuckets(keys: DataFrame, cols: Seq[String], nBuckets: Int,
                    nullRefusal: Option[String] = None): Set[Int] = {
-    val pairs = keys.select(cols.map(col(_).isNull).reduce(_ || _),
-      pmod(xxhash64(cols.map(col): _*), lit(nBuckets)).cast("int")).collect()
+    val pairs = bucketPairs(keys, cols, nBuckets).collect()
     nullRefusal.foreach(msg => require(!pairs.exists(_.getBoolean(0)), msg))
     pairs.map(_.getInt(1)).toSet
+  }
+
+  /** The (any-key-NULL, bucket) pairs of `keys` the probe collects. A
+    * local key frame (a CLI lookup's: the pairs optimize to a local
+    * relation) yields one pair per key with no job and no shuffle; any
+    * other yields the distinct pairs, at most 2 * `nBuckets` rows
+    * however many keys it scans. A lookup's left-semi join ignores
+    * duplicate keys, so neither needs more. */
+  private[graft] def bucketPairs(keys: DataFrame, cols: Seq[String],
+                                 nBuckets: Int): DataFrame = {
+    val pairs = keys.select(cols.map(col(_).isNull).reduce(_ || _),
+      pmod(xxhash64(cols.map(col): _*), lit(nBuckets)).cast("int"))
+    pairs.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => pairs
+      case _ => pairs.distinct()
+    }
   }
 
   // ---- change sets --------------------------------------------------

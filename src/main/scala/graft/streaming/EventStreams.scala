@@ -1678,7 +1678,7 @@ object EventStreams {
         s"readRollupViewLog: no state rows under $statePath — " +
           "nothing was ever logged; pull after the first non-empty " +
           "fold")
-    val sch = ParquetFooter.schema(spark, fs, Seq(cur))
+    val sch = ParquetFooter.read(spark, fs, Seq(cur)).schema
     import org.apache.spark.sql.types.{DoubleType, LongType}
     val vType = sch("agg_min").dataType
     val keyTypes = keys.map(c => c -> sch(c).dataType)
@@ -1798,7 +1798,16 @@ object EventStreams {
                           * retention mode required
                           * ([[readRollupStateAsOf]] rules), still
                           * bucket-pruned via the history chains. */
-                        asOf: Option[Long] = None): Option[DataFrame] = {
+                        asOf: Option[Long] = None): Option[DataFrame] =
+    lookupRollupStateWith(spark, statePath, _ => keys, asOf)
+
+  /** [[lookupRollupState]] with the key frame built from the state's
+    * schema, read from the footer the lookup reads anyway (the CLI
+    * casts its string keys to the stored types). */
+  private[graft] def lookupRollupStateWith(
+      spark: org.apache.spark.sql.SparkSession, statePath: String,
+      keysFor: org.apache.spark.sql.types.StructType => DataFrame,
+      asOf: Option[Long]): Option[DataFrame] = {
     import org.apache.hadoop.fs.Path
     val root = new Path(statePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -1806,13 +1815,14 @@ object EventStreams {
       rollupPin(fs, root, statePath, "lookupRollupState")(
         new graft.model.UserException(s"lookupRollupState: no layout " +
           s"pin under $statePath — not a rollup-view state"))
+    val cur = new Path(root, "state")
+    if (!fs.exists(cur)) return None
+    val state = ParquetFooter.read(spark, fs, Seq(cur))
+    val keys = keysFor(state.schema)
     require(keys.columns.sorted.toSeq == keyCols.sorted,
       s"lookupRollupState: the key frame must carry exactly the " +
         s"pinned key columns (${keyCols.mkString(", ")}), got " +
         s"(${keys.columns.mkString(", ")}) — project upstream")
-    val cur = new Path(root, "state")
-    if (!fs.exists(cur)) return None
-    val state = ParquetFooter.read(spark, fs, Seq(cur))
     keyCols.foreach { c =>
       val got = keys.schema(c).dataType.catalogString
       val want = state.schema(c).dataType.catalogString
